@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: fixed-point scales: 1e9 for raw-moment terms (|x| ≲ 30 stays exact in
@@ -96,7 +96,7 @@ def top_principal_component(df: DataFrame, vec_col: str = "embedding",
     quantized iteration on the 64×64 matrix — bounded work, mirrored
     term-for-term by :func:`sql_top_principal_component`.
     """
-    spark = SparkSession.getActiveSession()
+    spark = df.sparkSession
     schema = "dim int, loading_micro long"
     cov, _ = _covariance(df, vec_col, dim)
     if cov is None:  # empty input: 0 rows (the twin's CTEs are empty too)
@@ -174,7 +174,7 @@ def explained_variance(df: DataFrame, vec_col: str = "embedding",
     """
     import numpy as np
 
-    spark = SparkSession.getActiveSession()
+    spark = df.sparkSession
     schema = "lambda1_micro long, trace_micro long, evr_micro long"
     cov, _ = _covariance(df, vec_col, dim)
     if cov is None:  # empty input: one all-NULL row (aggregates over

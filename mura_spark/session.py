@@ -283,15 +283,9 @@ class MuraSession:
         if m is None:
             return None
         target, t_alias, source, s_alias, on, clauses = m.groups()
-        info = self.catalog._tables.get(target) \
-            or self.catalog._tables.get(target.lower())
-        if info is None:
+        t, info = self._mura_table(target)
+        if t is None:
             return None  # not ours: let Spark produce its own error
-        if info.file_type != "mura":
-            raise ValueError(
-                f"{target!r} is a read-only {info.file_type} external "
-                f"table — MERGE needs a versioned table (register "
-                f"with file_type='mura')")
         when_matched, insert, sync_delete = None, False, False
         pos = 0
         for w in self._WHEN_RE.finditer(clauses):
@@ -325,8 +319,6 @@ class MuraSession:
             raise ValueError("MERGE needs at least one WHEN clause")
         keys = self._parse_merge_keys(on, target, t_alias,
                                       source, s_alias)
-        from mura_spark.sources.table_format import MuraTable
-        t = MuraTable.load(self.spark, info.location)
         stats = t.merge(self.spark.table(source), key_cols=keys,
                         when_matched=when_matched or "ignore",
                         insert_not_matched=insert,
@@ -381,17 +373,9 @@ class MuraSession:
         if m is None:
             return None
         name, add_name, expr, drop_name = m.groups()
-        info = self.catalog._tables.get(name) \
-            or self.catalog._tables.get(name.lower())
-        if info is None:
+        t, _info = self._mura_table(name)
+        if t is None:
             return None
-        if info.file_type != "mura":
-            raise ValueError(
-                f"{name!r} is a read-only {info.file_type} external "
-                f"table — constraints need a versioned table "
-                f"(register with file_type='mura')")
-        from mura_spark.sources.table_format import MuraTable
-        t = MuraTable.load(self.spark, info.location)
         if add_name:
             v = t.add_constraint(add_name, expr.strip())
         else:
@@ -488,18 +472,9 @@ class MuraSession:
         mv = None if mo else self._VACUUM_RE.match(query)
         if mo is None and mv is None:
             return None
-        name = (mo or mv).group(1)
-        info = self.catalog._tables.get(name) \
-            or self.catalog._tables.get(name.lower())
-        if info is None:
+        t, info = self._mura_table((mo or mv).group(1))
+        if t is None:
             return None
-        if info.file_type != "mura":
-            raise ValueError(
-                f"{name!r} is a read-only {info.file_type} external "
-                f"table — OPTIMIZE/VACUUM need a versioned table "
-                f"(register with file_type='mura')")
-        from mura_spark.sources.table_format import MuraTable
-        t = MuraTable.load(self.spark, info.location)
         if mo:
             cluster = [c.strip() for c in mo.group(2).split(",")] \
                 if mo.group(2) else None
@@ -521,18 +496,9 @@ class MuraSession:
         mu = None if md else self._UPDATE_RE.match(query)
         if md is None and mu is None:
             return None
-        name = (md or mu).group(1)
-        info = self.catalog._tables.get(name) \
-            or self.catalog._tables.get(name.lower())
-        if info is None:
+        t, info = self._mura_table((md or mu).group(1))
+        if t is None:
             return None  # not ours: let Spark produce its own error
-        if info.file_type != "mura":
-            raise ValueError(
-                f"{name!r} is a read-only {info.file_type} external "
-                f"table — row-level DML needs a versioned table "
-                f"(register with file_type='mura')")
-        from mura_spark.sources.table_format import MuraTable
-        t = MuraTable.load(self.spark, info.location)
         if md:
             v, n, files = t.delete_where(md.group(2) or "true")
         else:

@@ -61,7 +61,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mura_spark.sources.table_format import MuraTable
+from mura_spark.sources.table_format import FEED_KINDS, MuraTable
 
 _META_KEY = "incremental_view"
 
@@ -79,17 +79,15 @@ _AGG_INIT = {"sum": F.sum, "count": lambda c: F.count(F.lit(1)),
 _AGG_COMBINE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max,
                 "approx_distinct": F.hll_union_agg}
 
-#: source manifest actions whose changes() frames are pure inserts
-_APPEND_ACTIONS = {"create", "append", "stream_append"}
+#: feed kinds (table_format.FEED_KINDS) of source commits that keep the
+#: append fast path valid: inserts, and metadata-only commits whose
+#: changes() diff is empty
+_APPEND_KINDS = {"insert", "meta"}
 
-#: metadata-only actions: the file set is untouched, so a changes()
-#: diff across them is empty and the append fast path stays valid
-_META_ACTIONS = {"add_constraint", "drop_constraint", "set_bloom_cols",
-                 "set_cdf"}
-
-#: actions whose row deltas the CDF expresses exactly (compact feeds
-#: nothing — rows unchanged; DML feeds pre/post images + deletes)
-_ROW_DELTA_ACTIONS = {"merge", "delete", "update", "compact"}
+#: feed kinds whose row deltas the CDF expresses exactly (a rewrite
+#: feeds nothing — rows unchanged; a DML sidecar feeds pre/post images
+#: and deletes)
+_ROW_DELTA_KINDS = {"sidecar", "rewrite"}
 
 
 @dataclass(frozen=True)
@@ -284,20 +282,20 @@ class IncrementalAggView:
 
         reason, use_feed = "", False
         try:
-            actions = [source._manifest(v)["action"]
-                       for v in range(here + 1, there + 1)]
-            extra = [a for a in actions
-                     if a not in _APPEND_ACTIONS | _META_ACTIONS]
+            actions = {source._manifest(v)["action"]
+                       for v in range(here + 1, there + 1)}
+            extra = sorted(a for a in actions
+                           if FEED_KINDS.get(a) not in _APPEND_KINDS)
             if extra:
                 subtractable = all(
                     kind in ("sum", "count")
                     for kind, _c in aggs.values())
-                if not set(extra) <= _ROW_DELTA_ACTIONS:
+                if any(FEED_KINDS.get(a) not in _ROW_DELTA_KINDS
+                       for a in extra):
                     reason = (f"whole-table source commit(s) "
-                              f"{sorted(set(extra))} in "
-                              f"({here}, {there}]")
+                              f"{extra} in ({here}, {there}]")
                 elif not (subtractable and "__n" in aggs):
-                    reason = (f"source commit(s) {sorted(set(extra))} "
+                    reason = (f"source commit(s) {extra} "
                               f"need row-delta retraction, but the "
                               f"view holds non-subtractable "
                               f"aggregates (min/max/approx_distinct)")

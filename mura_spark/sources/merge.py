@@ -62,20 +62,6 @@ class MergeStats:
 # ------------------------------------------------- hive value canon
 
 
-def partition_str(v) -> str | None:
-    """A Python partition VALUE as the string Spark encodes into hive
-    paths (post-unescape) — the canonical form both sides of a
-    partition-file comparison must use. Booleans are 'true'/'false'
-    (str(True) would be 'True' and never match a path segment);
-    date/datetime use their ISO forms, which equal str() for these
-    types; everything else is str()."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
-
-
 def hive_partition_values(relpath: str, partition_cols: list[str]) -> tuple:
     """Hive partition values encoded in a data-file path, as strings
     (the pruning key; Spark re-derives typed values from the directory

@@ -32,6 +32,17 @@ Delta/Iceberg, deliberately minimal and Spark-first:
   the commit cost is proportional to the data actually changed, never
   to the table.
 
+- **One owner of the manifest protocol.** Every commit kind — the
+  table's own, the ``mura_table`` stream sink's
+  (sources/table_stream.py) — builds its manifest through
+  :meth:`MuraTable._publish`, which carries the table flags (cdf,
+  constraints, bloom config, txn marks, stream stamps) forward and
+  keeps the per-file stats/rows/blooms in step with the file list.
+  Every change-feed reader — :meth:`MuraTable.changes_feed`, the
+  ``mura_table`` batch and stream readers, and the incremental view's
+  fast-path gate — plans from :func:`plan_changes` and the one
+  action classification :data:`FEED_KINDS`.
+
 Scale posture: a manifest is one JSON document listing file paths —
 fine for the file counts a compacted table holds (the included
 ``compact`` pass keeps it that way); Iceberg's split manifests solve
@@ -48,12 +59,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mura_spark.sources.merge import (HIVE_NULL, MergeStats,
+from mura_spark.sources.merge import (MergeStats,
                                       _typed_partition_dir_value,
                                       check_merge_source,
                                       hive_partition_values,
                                       merge_status_frame,
-                                      partition_filter, partition_str)
+                                      partition_filter)
 
 _LOG_DIR = "_mura_log"
 _DATA_DIR = "_data"
@@ -79,11 +90,68 @@ def _list_part_files(commit_dir: str) -> list[str]:
 
 
 # hive value canonicalization lives in sources/merge.py (the shared
-# MERGE core); these aliases keep this module's public-ish names for
+# MERGE core); this alias keeps this module's public-ish name for
 # table_stream.py and the tests
-_HIVE_NULL = HIVE_NULL
 _partition_values = hive_partition_values
-_partition_str = partition_str
+
+
+#: How each commit action feeds the row-level change feed — the ONE
+#: classification the CDF planner (:func:`plan_changes`) and the
+#: incremental view's fast-path gate read:
+#:
+#: - ``insert``: the rows of the files the commit added
+#: - ``sidecar``: the commit's ``_cdf/`` files, which carry
+#:   ``_change_type`` themselves (DML; needs ``cdf`` on the table)
+#: - ``diff``: whole-table replacement — rows of dropped files feed as
+#:   deletes, rows of added files as inserts
+#: - ``rewrite``: files rewritten, rows unchanged — feeds nothing
+#: - ``meta``: file set untouched — feeds nothing
+FEED_KINDS = {
+    **dict.fromkeys(("create", "append", "stream_append", "clone"),
+                    "insert"),
+    **dict.fromkeys(("merge", "delete", "update"), "sidecar"),
+    **dict.fromkeys(("overwrite", "restore"), "diff"),
+    "compact": "rewrite",
+    **dict.fromkeys(("set_cdf", "set_bloom_cols", "add_constraint",
+                     "drop_constraint"), "meta"),
+}
+
+
+def plan_changes(manifest, since: int,
+                 to: int) -> list[tuple[int, str | None, list[str],
+                                        str | None]]:
+    """Plan the row-level change feed of versions ``(since, to]`` from
+    their manifests alone (``manifest(v)`` returns version ``v``'s;
+    ``since=0`` feeds from an empty table). One entry per fed slice:
+    ``(version, change_type, files, schema_json)`` — ``change_type``
+    is the constant every row of ``files`` feeds as, or None for a DML
+    sidecar whose files carry ``_change_type`` themselves (its schema
+    is then the sidecar's own, which may be None on manifests that
+    predate ``cdf_schema``). Slices without files are omitted. Raises
+    ValueError for a DML version committed while ``cdf`` was off, or
+    when a version in the range was vacuumed."""
+    out = []
+    prev = manifest(since) if since >= 1 else None
+    prev_files = set(prev["files"]) if prev else set()
+    for v in range(max(since, 0) + 1, to + 1):
+        m = manifest(v)
+        kind = FEED_KINDS.get(m["action"])
+        added = [f for f in m["files"] if f not in prev_files]
+        if kind == "sidecar":
+            if "cdf_files" not in m:
+                raise ValueError(
+                    f"version {v} ({m['action']}) has no row-level CDF "
+                    f"sidecar — it was committed while cdf=False; "
+                    f"enable with set_cdf(True) (or create(..., "
+                    f"cdf=True)) before DML you want to feed")
+            out.append((v, None, m["cdf_files"], m.get("cdf_schema")))
+        elif kind == "diff":
+            out.append((v, "delete", sorted(prev_files - set(m["files"])),
+                        (prev or m)["schema"]))
+        if kind in ("insert", "diff"):
+            out.append((v, "insert", added, m["schema"]))
+        prev, prev_files = m, set(m["files"])
+    return [s for s in out if s[2]]
 
 
 class MuraTable:
@@ -109,13 +177,15 @@ class MuraTable:
         return sorted(int(m.group(1)) for f in os.listdir(self.log_dir)
                       if (m := _V_RE.match(f)))
 
+    def _latest(self) -> int:
+        versions = self._versions()
+        if not versions:
+            raise FileNotFoundError(f"no MuraTable log at {self.path}")
+        return versions[-1]
+
     def _manifest(self, version: int | None = None) -> dict:
         if version is None:
-            versions = self._versions()
-            if not versions:
-                raise FileNotFoundError(
-                    f"no MuraTable log at {self.path}")
-            version = versions[-1]
+            version = self._latest()
         # direct open: O(1) per explicit-version read, so per-version
         # walks (history, changes_feed, view state) stay O(V) instead
         # of O(V^2) directory listings
@@ -231,18 +301,9 @@ class MuraTable:
             stats[rel] = col_stats
         return stats, rows
 
-    def _collect_stats(self, files: list[str],
-                       stats_cols: list[str]) -> dict:
-        """Back-compat shim over :meth:`_file_meta` (stats only)."""
-        return self._file_meta(files, stats_cols)[0]
-
-    @staticmethod
-    def _carry(prev: dict, *keys: str) -> dict:
-        """Manifest keys carried verbatim from the previous version."""
-        return {k: prev[k] for k in keys if prev.get(k)}
-
-    #: manifest keys that describe the table SNAPSHOT (as opposed to
-    #: per-commit bookkeeping like action/meta/stream_batches/predicate)
+    #: manifest keys that describe the table SNAPSHOT and its flags —
+    #: what every commit carries forward (as opposed to per-commit
+    #: bookkeeping like action/meta/predicate/cdf_files)
     _SNAPSHOT_KEYS = ("partition_cols", "schema", "stats_cols", "stats",
                       "rows", "files", "bloom_cols", "bloom_bits",
                       "bloom_k", "blooms", "constraints", "txns",
@@ -258,7 +319,7 @@ class MuraTable:
         a failed batch blindly without double-appending. Returns
         ``(skip, manifest_txn_fields)``."""
         if txn is None:
-            return False, self._carry(prev, "txns")
+            return False, {}
         app, ver = txn
         last = prev.get("txns", {}).get(app)
         if last is not None and int(ver) <= last:
@@ -270,27 +331,49 @@ class MuraTable:
     def _snapshot_fields(cls, m: dict) -> dict:
         return {k: m[k] for k in cls._SNAPSHOT_KEYS if k in m}
 
-    def _bloom_fields(self, prev: dict, keep_files: list[str],
-                      new_files: list[str]) -> dict:
-        """Manifest bloom keys for a commit that keeps ``keep_files``
-        by reference and just wrote ``new_files``: carried bitmaps are
-        copied (immutable files, immutable blooms), new files get one
-        executor-side build pass. Empty when the table tracks no bloom
-        columns."""
-        bcols = prev.get("bloom_cols") or []
-        if not bcols:
-            return {}
+    def _publish(self, v: int, base: dict, action: str,
+                 new_files: list[str], keep_files: list[str] = (),
+                 new_blooms: dict | None = None, **fields) -> dict:
+        """THE manifest-commit builder — every commit kind publishes
+        through here. The manifest starts from ``base``'s snapshot
+        fields, so every table flag (cdf, constraints, bloom config,
+        txn marks, stream stamps) rides forward; the per-file
+        stats/rows/blooms maps are restricted to ``keep_files`` (the
+        files carried by reference) and extended with footer metadata
+        for ``new_files`` (just written by :meth:`_write_data`) and,
+        when the table tracks bloom columns, their blooms: carried
+        bitmaps are copied (immutable files, immutable blooms); new
+        files take ``new_blooms`` when the caller already built them
+        (the stream sink's executors), else one executor-side build
+        pass. ``fields`` apply last; a None value drops the key.
+        Published by :meth:`_commit_new`, so a lost race deletes the
+        new files. Returns the published manifest."""
         from mura_spark.sources.bloom import (DEFAULT_BITS, DEFAULT_K,
                                               build_blooms)
-        bits = prev.get("bloom_bits", DEFAULT_BITS)
-        k = prev.get("bloom_k", DEFAULT_K)
         keep = set(keep_files)
-        blooms = {f: b for f, b in prev.get("blooms", {}).items()
-                  if f in keep}
-        blooms.update(build_blooms(self.spark, self.path, new_files,
-                                   bcols, bits, k))
-        return {"bloom_cols": bcols, "bloom_bits": bits,
-                "bloom_k": k, "blooms": blooms}
+        m = self._snapshot_fields(base)
+        stats, rows = self._file_meta(new_files, m.get("stats_cols", []))
+        m["stats"] = {**{f: s for f, s in m.get("stats", {}).items()
+                         if f in keep}, **stats}
+        m["rows"] = {**{f: n for f, n in m.get("rows", {}).items()
+                        if f in keep}, **rows}
+        if m.get("bloom_cols"):
+            bits = m.setdefault("bloom_bits", DEFAULT_BITS)
+            k = m.setdefault("bloom_k", DEFAULT_K)
+            if new_blooms is None:
+                new_blooms = build_blooms(self.spark, self.path, new_files,
+                                          m["bloom_cols"], bits, k)
+            m["blooms"] = {**{f: b for f, b in m.get("blooms", {}).items()
+                              if f in keep}, **new_blooms}
+        for key, value in fields.items():
+            if value is None:
+                m.pop(key, None)
+            else:
+                m[key] = value
+        m.update(version=v, action=action,
+                 files=list(keep_files) + new_files)
+        self._commit_new(v, m)
+        return m
 
     @staticmethod
     def _check_bloom_bits(bloom_bits: int | None) -> int:
@@ -377,8 +460,11 @@ class MuraTable:
         surface that, unlike :meth:`changes` (file-level, replays
         rewritten copies), lets a consumer apply EXACT row deltas.
 
-        Insert-only commits (create/append/stream_append) derive their
-        feed from the manifest file diff — no sidecar cost. DML commits
+        Each version feeds as its action's :data:`FEED_KINDS` entry
+        says, planned by :func:`plan_changes` — the one planner this
+        method and the ``mura_table`` readers share. Insert-only
+        commits (create/append/stream_append) derive their feed from
+        the manifest file diff — no sidecar cost. DML commits
         (merge/delete/update) read the row-level sidecar written when
         the table has ``cdf=True`` (create flag or :meth:`set_cdf`);
         a DML commit made while CDF was off fails the read loudly.
@@ -389,74 +475,40 @@ class MuraTable:
         restore that undoes one bad commit feeds only the net change;
         a full overwrite intrinsically feeds the whole table).
 
-        Plan shape: one subtree per fed version (a union chain). For
-        very long ranges (hundreds of commits) prefer the registered
-        reader — ``spark.read.format("mura_table")
+        Plan shape: one subtree per fed slice of :func:`plan_changes`
+        (a union chain of native parquet scans) — the same plan the
+        registered reader maps to its file partitions. For very long
+        ranges (hundreds of commits) prefer that reader —
+        ``spark.read.format("mura_table")
         .option("readChangeFeed", "true").option("startingVersion",
         n)`` — which plans ONE flat file-level scan regardless of
         range length (sources/table_stream.py)."""
         from pyspark.sql.types import StructType
-        to_v = version if version is not None \
-            else self._manifest()["version"]
+        to_v = version if version is not None else self._latest()
         out = None
-        prev_m: dict | None = None
-        prev_files: set = set()
-        for v in range(max(since_version, 1), to_v + 1):
-            m = self._manifest(v)  # raises if vacuumed away
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            if v == since_version:
-                prev_m, prev_files = m, set(m["files"])
-                continue
-            action = m["action"]
-            frame = None
-            if action in ("create", "append", "stream_append", "clone"):
-                new = [f for f in m["files"] if f not in prev_files]
-                frame = (self._read_files(new, m["schema"])
-                         .withColumn("_change_type", F.lit("insert")))
-            elif action in ("merge", "delete", "update"):
-                if "cdf_files" not in m:
-                    raise ValueError(
-                        f"version {v} ({action}) has no row-level CDF "
-                        f"sidecar — it was committed while cdf=False; "
-                        f"enable with set_cdf(True) (or create(..., "
-                        f"cdf=True)) before DML you want to feed")
-                if m["cdf_files"]:
-                    reader = self.spark.read
-                    if m.get("cdf_schema"):
-                        # explicit sidecar schema from the manifest —
-                        # skips a footer-inference Spark job per fed
-                        # commit (pre-cdf_schema manifests fall back)
-                        reader = reader.schema(StructType.fromJson(
-                            json.loads(m["cdf_schema"])))
-                    raw = reader.parquet(
-                        *[os.path.join(self.path, f)
-                          for f in m["cdf_files"]])
-                    frame = raw.select(
-                        *[F.col(f.name).cast(f.dataType).alias(f.name)
-                          for f in schema.fields], "_change_type")
-            elif action in ("overwrite", "restore"):
-                cur = set(m["files"])
-                dropped = sorted(prev_files - cur)
-                added = [f for f in m["files"] if f not in prev_files]
-                dels = (self._read_files(
-                            dropped,
-                            (prev_m or m)["schema"])
-                        .withColumn("_change_type", F.lit("delete")))
-                ins = (self._read_files(added, m["schema"])
-                       .withColumn("_change_type", F.lit("insert")))
-                frame = dels.unionByName(ins, allowMissingColumns=True)
-            # compact / metadata-only commits: no row changes
-            prev_m, prev_files = m, set(m["files"])
-            if frame is not None:
-                frame = frame.withColumn("_commit_version",
-                                         F.lit(v).cast("long"))
-                out = frame if out is None else \
-                    out.unionByName(frame, allowMissingColumns=True)
+        for v, ctype, files, schema in plan_changes(
+                self._manifest, since_version, to_v):
+            if ctype is None:
+                # DML sidecar: the files carry _change_type; the
+                # manifest's sidecar schema skips a footer-inference
+                # Spark job per fed commit
+                reader = self.spark.read
+                if schema:
+                    reader = reader.schema(
+                        StructType.fromJson(json.loads(schema)))
+                frame = reader.parquet(
+                    *[os.path.join(self.path, f) for f in files])
+            else:
+                frame = self._read_files(files, schema).withColumn(
+                    "_change_type", F.lit(ctype))
+            frame = frame.withColumn("_commit_version",
+                                     F.lit(v).cast("long"))
+            out = frame if out is None else \
+                out.unionByName(frame, allowMissingColumns=True)
         if out is None:
             m = self._manifest(to_v)
             schema = StructType.fromJson(json.loads(m["schema"]))
-            empty = StructType(schema.fields)
-            df = self.spark.createDataFrame([], empty)
+            df = self.spark.createDataFrame([], schema)
             return (df.withColumn("_change_type", F.lit(""))
                       .withColumn("_commit_version",
                                   F.lit(0).cast("long")).limit(0))
@@ -468,14 +520,8 @@ class MuraTable:
         from manifest diffs); the sidecar is only needed for
         merge/delete/update."""
         v, prev = self._next_version()
-        m = {**self._snapshot_fields(prev), "version": v,
-             "action": "set_cdf"}
-        if enabled:
-            m["cdf"] = True
-        else:
-            m.pop("cdf", None)
-        self._commit(v, m)
-        return v
+        return self._publish(v, prev, "set_cdf", [], prev["files"],
+                             cdf=enabled or None)["version"]
 
     # ------------------------------------------------------- lifecycle
 
@@ -505,29 +551,18 @@ class MuraTable:
         if stats_cols is None:
             stats_cols = cls._default_stats_cols(df.schema,
                                                  partition_cols)
-        bloom_fields = {}
+        base = {"partition_cols": partition_cols or [],
+                "schema": df.schema.json(), "stats_cols": stats_cols}
         if bloom_cols:
             cls._check_bloom_cols(df.schema, bloom_cols, partition_cols)
             from mura_spark.sources.bloom import DEFAULT_K
-            bloom_fields = {"bloom_cols": list(bloom_cols),
-                            "bloom_bits": cls._check_bloom_bits(
-                                bloom_bits),
-                            "bloom_k": DEFAULT_K}
+            base.update(bloom_cols=list(bloom_cols),
+                        bloom_bits=cls._check_bloom_bits(bloom_bits),
+                        bloom_k=DEFAULT_K)
         files = t._write_data(df, partition_cols, constraints)
-        stats, rows = t._file_meta(files, stats_cols)
-        if bloom_cols:
-            bloom_fields = t._bloom_fields(bloom_fields, [], files)
-        t._commit_new(1, {"version": 1, "action": "create",
-                      "partition_cols": partition_cols or [],
-                      "schema": df.schema.json(),
-                      "stats_cols": stats_cols,
-                      "stats": stats, "rows": rows,
-                      **bloom_fields,
-                      **({"constraints": constraints}
-                         if constraints else {}),
-                      **({"cdf": True} if cdf else {}),
-                      **({"meta": meta} if meta is not None else {}),
-                      "files": files})
+        t._publish(1, base, "create", files,
+                   constraints=constraints or None,
+                   cdf=cdf or None, meta=meta)
         return t
 
     @classmethod
@@ -763,22 +798,9 @@ class MuraTable:
         schema = self._check_schema(df, prev, merge_schema)
         files = self._write_data(df, prev["partition_cols"] or None,
                                  prev.get("constraints"))
-        scols = prev.get("stats_cols", [])
-        new_stats, new_rows = self._file_meta(files, scols)
-        stats = {**prev.get("stats", {}), **new_stats}
-        rows = {**prev.get("rows", {}), **new_rows}
-        self._commit_new(v, {"version": v, "action": "append",
-                         **txns,
-                         **self._carry(prev, "constraints", "cdf",
-                                       "stream_batches"),
-                         "partition_cols": prev["partition_cols"],
-                         "schema": schema,
-                         "stats_cols": scols, "stats": stats,
-                         "rows": rows,
-                         **self._bloom_fields(prev, prev["files"], files),
-                         **({"meta": meta} if meta is not None else {}),
-                         "files": prev["files"] + files})
-        return v
+        return self._publish(v, prev, "append", files, prev["files"],
+                             schema=schema, meta=meta,
+                             **txns)["version"]
 
     def overwrite(self, df: DataFrame, meta: dict | None = None,
                   txn: tuple[str, int] | None = None) -> int:
@@ -792,20 +814,9 @@ class MuraTable:
             return prev["version"]
         files = self._write_data(df, prev["partition_cols"] or None,
                                  prev.get("constraints"))
-        scols = prev.get("stats_cols", [])
-        stats, rows = self._file_meta(files, scols)
-        self._commit_new(v, {"version": v, "action": "overwrite",
-                         **txns,
-                         **self._carry(prev, "constraints", "cdf",
-                                       "stream_batches"),
-                         "partition_cols": prev["partition_cols"],
-                         "schema": df.schema.json(),
-                         "stats_cols": scols,
-                         "stats": stats, "rows": rows,
-                         **self._bloom_fields(prev, [], files),
-                         **({"meta": meta} if meta is not None else {}),
-                         "files": files})
-        return v
+        return self._publish(v, prev, "overwrite", files,
+                             schema=df.schema.json(), meta=meta,
+                             **txns)["version"]
 
     def merge(self, source: DataFrame, key_cols: list[str],
               when_matched: str = "update",
@@ -974,28 +985,8 @@ class MuraTable:
         if obs is not None:
             counts = {k: int(v) for k, v in obs.get.items()
                       if v is not None}
-        scols = prev.get("stats_cols", [])
-        keep = set(keep_files)
-        stats = {f: s for f, s in prev.get("stats", {}).items()
-                 if f in keep}
-        rows = {f: n for f, n in prev.get("rows", {}).items()
-                if f in keep}
-        new_stats, new_rows = self._file_meta(new_files, scols)
-        stats.update(new_stats)
-        rows.update(new_rows)
-        self._commit_new(v, {"version": v, "action": "merge",
-                         **txns,
-                         **self._carry(prev, "constraints", "cdf",
-                                       "stream_batches"),
-                         **cdf_fields,
-                         "partition_cols": pcols,
-                         "schema": prev.get("schema"),
-                         "stats_cols": scols, "stats": stats,
-                         "rows": rows,
-                         **self._bloom_fields(prev, keep_files,
-                                              new_files),
-                         **({"meta": meta} if meta is not None else {}),
-                         "files": keep_files + new_files})
+        self._publish(v, prev, "merge", new_files, keep_files, meta=meta,
+                      **txns, **cdf_fields)
         return MergeStats(
             updated=counts.get("matched", 0) if when_matched == "update"
             else 0,
@@ -1137,36 +1128,18 @@ class MuraTable:
             cdf_fields = self._write_cdf(cdf)
         new_files = self._write_data(out, pcols or None,
                                      prev.get("constraints"))
-        scols = prev.get("stats_cols", [])
-        stats = {f: s for f, s in prev.get("stats", {}).items()
-                 if f in set(keep_files)}
-        rows = {f: n for f, n in prev.get("rows", {}).items()
-                if f in set(keep_files)}
-        new_stats, new_rows = self._file_meta(new_files, scols)
+        m = self._publish(v, prev, action, new_files, keep_files,
+                          predicate=str(predicate), meta=meta,
+                          **cdf_fields)
         if obs is not None:
             n_matched = int(obs.get["n_matched"] or 0)
         else:
+            n_out = sum(m["rows"][f] for f in new_files)
             in_rows = prev.get("rows", {})
             if all(f in in_rows for f in touched):
-                n_matched = (sum(in_rows[f] for f in touched)
-                             - sum(new_rows.values()))
+                n_matched = sum(in_rows[f] for f in touched) - n_out
             else:  # pre-row-tracking files: count the touched inputs
-                n_matched = sub.count() - sum(new_rows.values())
-        stats.update(new_stats)
-        rows.update(new_rows)
-        self._commit_new(v, {"version": v, "action": action,
-                         **self._carry(prev, "constraints", "txns",
-                                       "cdf", "stream_batches"),
-                         **cdf_fields,
-                         "predicate": str(predicate),
-                         "partition_cols": pcols,
-                         "schema": prev.get("schema"),
-                         "stats_cols": scols, "stats": stats,
-                         "rows": rows,
-                         **self._bloom_fields(prev, keep_files,
-                                              new_files),
-                         **({"meta": meta} if meta is not None else {}),
-                         "files": keep_files + new_files})
+                n_matched = sub.count() - n_out
         return v, n_matched, len(touched)
 
     def delete_where(self, predicate,
@@ -1241,18 +1214,7 @@ class MuraTable:
         else:
             df = df.coalesce(target_files)
         files = self._write_data(df, pcols or None)
-        scols = prev.get("stats_cols", [])
-        stats, rows = self._file_meta(files, scols)
-        self._commit_new(v, {"version": v, "action": "compact",
-                         **self._carry(prev, "constraints", "txns",
-                                       "cdf", "stream_batches"),
-                         "partition_cols": prev["partition_cols"],
-                         "schema": prev.get("schema"),
-                         "stats_cols": scols,
-                         "stats": stats, "rows": rows,
-                         **self._bloom_fields(prev, [], files),
-                         "files": files})
-        return v
+        return self._publish(v, prev, "compact", files)["version"]
 
     def restore(self, version: int) -> int:
         """RESTORE TABLE: make ``version``'s contents current again via
@@ -1262,21 +1224,12 @@ class MuraTable:
         merge/overwrite: ``t.restore(v_before_incident)``."""
         v, prev = self._next_version()
         old = self._manifest(version)
-        self._commit(v, {"version": v, "action": "restore",
-                         **self._carry(old, "constraints"),
-                         **self._carry(prev, "txns", "cdf",
-                                       "stream_batches"),
-                         "restored_from": version,
-                         "partition_cols": old["partition_cols"],
-                         "schema": old.get("schema"),
-                         "stats_cols": old.get("stats_cols", []),
-                         "stats": old.get("stats", {}),
-                         "rows": old.get("rows", {}),
-                         **{key: old[key] for key in
-                            ("bloom_cols", "bloom_bits", "bloom_k",
-                             "blooms") if key in old},
-                         "files": old["files"]})
-        return v
+        # contents (and their constraints) roll back; the cdf switch
+        # and the ingest identities stay the live table's
+        return self._publish(
+            v, old, "restore", [], old["files"], restored_from=version,
+            **{k: prev.get(k) for k in ("txns", "cdf",
+                                        "stream_batches")})["version"]
 
     def set_bloom_cols(self, bloom_cols: list[str],
                        bloom_bits: int | None = None) -> int:
@@ -1287,10 +1240,8 @@ class MuraTable:
         and commits metadata-only. Subsequent commits maintain them
         incrementally. ``[]`` drops tracking."""
         v, prev = self._next_version()
-        m = {**self._snapshot_fields(prev), "version": v,
-             "action": "set_bloom_cols"}
-        for key in ("bloom_cols", "bloom_bits", "bloom_k", "blooms"):
-            m.pop(key, None)
+        cfg = dict.fromkeys(("bloom_cols", "bloom_bits", "bloom_k",
+                             "blooms"))
         if bloom_cols:
             from pyspark.sql.types import StructType
             schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -1298,13 +1249,13 @@ class MuraTable:
                                    prev.get("partition_cols"))
             from mura_spark.sources.bloom import DEFAULT_K, build_blooms
             bits = self._check_bloom_bits(bloom_bits)
-            m.update({"bloom_cols": list(bloom_cols),
-                      "bloom_bits": bits, "bloom_k": DEFAULT_K,
-                      "blooms": build_blooms(self.spark, self.path,
-                                             prev["files"], bloom_cols,
-                                             bits, DEFAULT_K)})
-        self._commit(v, m)
-        return v
+            cfg.update(bloom_cols=list(bloom_cols), bloom_bits=bits,
+                       bloom_k=DEFAULT_K,
+                       blooms=build_blooms(self.spark, self.path,
+                                           prev["files"], bloom_cols,
+                                           bits, DEFAULT_K))
+        return self._publish(v, prev, "set_bloom_cols", [], prev["files"],
+                             **cfg)["version"]
 
     # ------------------------------------------------------ constraints
 
@@ -1334,10 +1285,8 @@ class MuraTable:
                 f"existing row violates CHECK {name} ({expr}): "
                 f"{bad[0].asDict()!r}")
         cons[name] = expr
-        self._commit(v, {**self._snapshot_fields(prev), "version": v,
-                         "action": "add_constraint",
-                         "constraints": cons})
-        return v
+        return self._publish(v, prev, "add_constraint", [], prev["files"],
+                             constraints=cons)["version"]
 
     def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint (metadata-only commit)."""
@@ -1347,14 +1296,8 @@ class MuraTable:
             raise ValueError(f"no constraint {name!r} "
                              f"(have {sorted(cons)})")
         del cons[name]
-        m = {**self._snapshot_fields(prev), "version": v,
-             "action": "drop_constraint"}
-        if cons:
-            m["constraints"] = cons
-        else:
-            m.pop("constraints", None)
-        self._commit(v, m)
-        return v
+        return self._publish(v, prev, "drop_constraint", [], prev["files"],
+                             constraints=cons or None)["version"]
 
     def constraints(self) -> dict[str, str]:
         return dict(self._manifest().get("constraints", {}))
@@ -1390,17 +1333,14 @@ class MuraTable:
             dst = os.path.join(dest_path, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.link(src, dst)
-        snap = self._snapshot_fields(m)
         # ingest identities are NOT table contents: carrying the
         # source's idempotent-writer marks or streaming batch stamps
         # would make the clone silently skip the first batches a
         # pipeline writes into it under the same app/query id
-        snap.pop("txns", None)
-        snap.pop("stream_batches", None)
-        dest._commit(1, {**snap,
-                         "version": 1, "action": "clone",
-                         "cloned_from": {"path": os.path.abspath(
-                             self.path), "version": m["version"]}})
+        dest._publish(1, m, "clone", [], m["files"], txns=None,
+                      stream_batches=None,
+                      cloned_from={"path": os.path.abspath(self.path),
+                                   "version": m["version"]})
         return dest
 
     # -------------------------------------------------------------- gc

@@ -22,6 +22,14 @@ tails a versioned table (sources/table_format.py) exactly-once:
   rewritten partitions — downstream must upsert by key (file-level
   CDC, the contract Delta has without its change-data-feed option).
 
+- **No manifest knowledge of its own.** Manifests are read through
+  :class:`~mura_spark.sources.table_format.MuraTable`; the row-level
+  Change Data Feed (``option("readChangeFeed", "true")``) maps the
+  slices of ``table_format.plan_changes`` — the planner
+  ``MuraTable.changes_feed`` also maps — to file partitions; and the
+  sink publishes each micro-batch through ``MuraTable._publish``, the
+  builder every table commit uses.
+
 A batch reader (``spark.read.format("mura_table")``) is included for
 symmetry: latest snapshot, or ``option("version", n)`` to time travel
 through the same plugin surface. Registration:
@@ -44,31 +52,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
 from pyspark.sql.types import StructType
 
 from mura_spark.sources import table_format as tf
-
-
-def _manifest_path(table_path: str, version: int) -> str:
-    return os.path.join(table_path, tf._LOG_DIR, f"v{version:08d}.json")
-
-
-def _load_manifest(table_path: str, version: int) -> dict:
-    p = _manifest_path(table_path, version)
-    try:
-        with open(p) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        raise ValueError(
-            f"MuraTable version {version} missing at {table_path} — "
-            f"vacuumed while a stream checkpoint still referenced it? "
-            f"retain_versions must cover stream downtime") from None
-
-
-def _latest_version(table_path: str) -> int:
-    log_dir = os.path.join(table_path, tf._LOG_DIR)
-    versions = [int(m.group(1)) for f in os.listdir(log_dir)
-                if (m := tf._V_RE.match(f))]
-    if not versions:
-        raise FileNotFoundError(f"no MuraTable log at {table_path}")
-    return max(versions)
+from mura_spark.sources.merge import HIVE_NULL
 
 
 def _typed_partition_value(raw: str | None, dtype):
@@ -90,93 +74,48 @@ def _typed_partition_value(raw: str | None, dtype):
 
 
 class _FilesPartition(InputPartition):
-    def __init__(self, file_path: str, part_vals: dict,
-                 ctype: str | None = None, version: int | None = None):
+    def __init__(self, file_path: str, consts: dict):
         self.file_path = file_path
-        self.part_vals = part_vals  # col -> raw string (hive-decoded)
-        # CDF planning: constant _change_type for insert-derived files
-        # (None = the file itself carries the column, i.e. a DML
-        # sidecar) and the _commit_version stamp
-        self.ctype = ctype
-        self.version = version
+        # col -> constant for every row of the file: hive partition
+        # values (raw path strings) and, for change-feed reads, the
+        # _change_type / _commit_version stamps
+        self.consts = consts
 
 
-def _plan_partitions(table_path: str, files: list[str],
-                     pcols: list[str]) -> list[InputPartition]:
+def _plan(table: tf.MuraTable, sv: int, ev: int,
+          cdf: bool) -> list[InputPartition]:
+    """One partition per file of versions ``(sv, ev]``: with ``cdf``
+    the slices :func:`tf.plan_changes` plans, else the file-set diff
+    of the two manifests (``sv=0``: the whole snapshot). Driver-side
+    cost is manifest reads only."""
+    m = table._manifest(ev)
+    pcols = m["partition_cols"] or []
+    if cdf:
+        slices = tf.plan_changes(table._manifest, sv, ev)
+    else:
+        base = set(table._manifest(sv)["files"]) if sv else set()
+        slices = [(ev, "insert",
+                   [f for f in m["files"] if f not in base], None)]
     out = []
-    for rel in files:
-        vals = dict(zip(pcols, tf._partition_values(rel, pcols))) \
-            if pcols else {}
-        out.append(_FilesPartition(os.path.join(table_path, rel), vals))
+    for v, ctype, files, _schema in slices:
+        for rel in files:
+            # sidecar files (ctype None) carry every column themselves
+            consts = {} if ctype is None else \
+                dict(zip(pcols, tf._partition_values(rel, pcols)))
+            if cdf:
+                consts["_commit_version"] = v
+                if ctype is not None:
+                    consts["_change_type"] = ctype
+            out.append(_FilesPartition(os.path.join(table.path, rel),
+                                       consts))
     # Spark's plugin API requires >= 1 partition per (micro-)batch;
-    # an empty diff still plans one no-op task
-    return out or [_FilesPartition("", {})]
-
-
-_INSERT_ACTIONS = ("create", "append", "stream_append", "clone")
-
-
-def _plan_cdf_partitions(table_path: str, sv: int,
-                         ev: int) -> list[InputPartition]:
-    """Plan ``(sv, ev]`` as row-level CDF partitions (the planning twin
-    of MuraTable.changes_feed): insert-derived commits plan their new
-    data files with a constant _change_type; DML commits plan their
-    _cdf/ sidecar files (which carry the column); whole-table
-    overwrite/restore refuse; compaction and metadata commits plan
-    nothing. Driver-side cost is manifest reads only."""
-    out: list[InputPartition] = []
-    prev_files = set(_load_manifest(table_path, sv)["files"]) \
-        if sv >= 1 else set()
-    for v in range(sv + 1 if sv >= 1 else 1, ev + 1):
-        m = _load_manifest(table_path, v)
-        action = m["action"]
-        pcols = m["partition_cols"] or []
-        if action in _INSERT_ACTIONS:
-            for rel in m["files"]:
-                if rel in prev_files:
-                    continue
-                vals = dict(zip(pcols,
-                                tf._partition_values(rel, pcols))) \
-                    if pcols else {}
-                out.append(_FilesPartition(
-                    os.path.join(table_path, rel), vals,
-                    ctype="insert", version=v))
-        elif action in ("merge", "delete", "update"):
-            if "cdf_files" not in m:
-                raise ValueError(
-                    f"version {v} ({action}) has no row-level CDF "
-                    f"sidecar — it was committed while cdf=False")
-            for rel in m["cdf_files"]:
-                out.append(_FilesPartition(
-                    os.path.join(table_path, rel), {},
-                    ctype=None, version=v))
-        elif action in ("overwrite", "restore"):
-            # file diff: rows of dropped files feed as deletes, rows
-            # of added files as inserts (common files feed nothing)
-            cur = set(m["files"])
-            for rel in sorted(prev_files - cur):
-                vals = dict(zip(pcols,
-                                tf._partition_values(rel, pcols))) \
-                    if pcols else {}
-                out.append(_FilesPartition(
-                    os.path.join(table_path, rel), vals,
-                    ctype="delete", version=v))
-            for rel in m["files"]:
-                if rel in prev_files:
-                    continue
-                vals = dict(zip(pcols,
-                                tf._partition_values(rel, pcols))) \
-                    if pcols else {}
-                out.append(_FilesPartition(
-                    os.path.join(table_path, rel), vals,
-                    ctype="insert", version=v))
-        prev_files = set(m["files"])
+    # an empty plan still runs one no-op task
     return out or [_FilesPartition("", {})]
 
 
 def _read_partition(partition, schema: StructType):
     """Executor side: one parquet file -> arrow batches matching the
-    full table schema (partition columns injected as constants)."""
+    full table schema (the partition's constant columns injected)."""
     if not partition.file_path:
         return
     import pyarrow as pa
@@ -188,16 +127,10 @@ def _read_partition(partition, schema: StructType):
     tbl = pq.read_table(partition.file_path)
     n = tbl.num_rows
     arrays = []
-    version = getattr(partition, "version", None)
-    ctype = getattr(partition, "ctype", None)
     for f in schema.fields:
         at = to_arrow_type(f.dataType)
-        if f.name == "_commit_version" and version is not None:
-            arrays.append(pa.array([version] * n, type=at))
-        elif f.name == "_change_type" and ctype is not None:
-            arrays.append(pa.array([ctype] * n, type=at))
-        elif f.name in partition.part_vals:
-            v = _typed_partition_value(partition.part_vals[f.name],
+        if f.name in partition.consts:
+            v = _typed_partition_value(partition.consts[f.name],
                                        f.dataType)
             arrays.append(pa.array([v] * n, type=at))
         elif f.name in tbl.column_names:
@@ -215,7 +148,7 @@ def _cdf_requested(options) -> bool:
 class _TableStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options):
         self.schema = schema
-        self.path = options["path"]
+        self.table = tf.MuraTable(None, options["path"])
         self.cdf = _cdf_requested(options)
 
     def initialOffset(self) -> dict:
@@ -224,16 +157,11 @@ class _TableStreamReader(DataSourceStreamReader):
         return {"version": 0}
 
     def latestOffset(self) -> dict:
-        return {"version": _latest_version(self.path)}
+        return {"version": self.table._latest()}
 
     def partitions(self, start: dict, end: dict):
-        sv, ev = start["version"], end["version"]
-        if self.cdf:
-            return _plan_cdf_partitions(self.path, sv, ev)
-        base = set(_load_manifest(self.path, sv)["files"]) if sv else set()
-        m = _load_manifest(self.path, ev)
-        new = [f for f in m["files"] if f not in base]
-        return _plan_partitions(self.path, new, m["partition_cols"])
+        return _plan(self.table, start["version"], end["version"],
+                     self.cdf)
 
     def read(self, partition):
         yield from _read_partition(partition, self.schema)
@@ -245,7 +173,7 @@ class _TableStreamReader(DataSourceStreamReader):
 class _TableBatchReader(DataSourceReader):
     def __init__(self, schema: StructType, options):
         self.schema = schema
-        self.path = options["path"]
+        self.table = tf.MuraTable(None, options["path"])
         v = options.get("version")
         self.version = int(v) if v is not None else None
         self.cdf = _cdf_requested(options)
@@ -255,12 +183,10 @@ class _TableBatchReader(DataSourceReader):
 
     def partitions(self):
         if self.cdf:
-            ev = self.ending or _latest_version(self.path)
-            return _plan_cdf_partitions(self.path, self.starting, ev)
-        v = self.version or _latest_version(self.path)
-        m = _load_manifest(self.path, v)
-        return _plan_partitions(self.path, m["files"],
-                                m["partition_cols"])
+            return _plan(self.table, self.starting,
+                         self.ending or self.table._latest(), True)
+        return _plan(self.table, 0, self.version or self.table._latest(),
+                     False)
 
     def read(self, partition):
         yield from _read_partition(partition, self.schema)
@@ -285,8 +211,7 @@ class MuraTableDataSource(DataSource):
 
     def schema(self):
         from pyspark.sql.types import LongType, StringType, StructField
-        path = self.options["path"]
-        m = _load_manifest(path, _latest_version(path))
+        m = tf.MuraTable(None, self.options["path"])._manifest()
         schema = StructType.fromJson(json.loads(m["schema"]))
         if _cdf_requested(self.options):
             schema = StructType(schema.fields + [
@@ -335,7 +260,7 @@ def _hive_segment(col: str, v) -> str:
     conventions for the characters these restricted types produce)."""
     import urllib.parse
     if v is None:
-        return f"{col}={tf._HIVE_NULL}"
+        return f"{col}={HIVE_NULL}"
     return f"{col}={urllib.parse.quote(str(v), safe='')}"
 
 
@@ -389,7 +314,7 @@ class _TableStreamWriter(DataSourceStreamArrowWriter):
                 "(at-least-once). Set a stable per-pipeline queryid "
                 "for exactly-once replay protection.",
                 stacklevel=2)
-        m = _load_manifest(self.path, _latest_version(self.path))
+        m = tf.MuraTable(None, self.path)._manifest()
         self._pcols = m["partition_cols"] or []
         if self._pcols:
             from pyspark.sql.types import StructType as _ST
@@ -504,41 +429,19 @@ class _TableStreamWriter(DataSourceStreamArrowWriter):
                 return  # redelivered micro-batch: already committed
             files = [r for msg in messages if msg
                      for r in msg.relpaths]
-            scols = m.get("stats_cols", [])
-            new_stats, new_rows = table._file_meta(files, scols)
-            stats = {**m.get("stats", {}), **new_stats}
-            rows = {**m.get("rows", {}), **new_rows}
-            bloom_fields = {}
-            if m.get("bloom_cols"):
-                blooms = dict(m.get("blooms", {}))
-                for msg in messages:
-                    if msg and msg.blooms:
-                        blooms.update(msg.blooms)
-                bloom_fields = {
-                    key: m[key] for key in
-                    ("bloom_cols", "bloom_bits", "bloom_k") if key in m}
-                bloom_fields["blooms"] = blooms
+            # executor-built blooms: no build_blooms job on the driver
+            blooms = {}
+            for msg in messages:
+                if msg and msg.blooms:
+                    blooms.update(msg.blooms)
             stamp_fields = {}
             if self.queryId is not None:
                 stamp_fields = {"stream_batches":
                                 {**stamp, self.queryId: batchId}}
-            elif stamp:
-                stamp_fields = {"stream_batches": stamp}
             try:
-                table._commit(m["version"] + 1, {
-                    "version": m["version"] + 1,
-                    "action": "stream_append",
-                    # table flags ride every commit (cdf added
-                    # mid-stream must survive the next batch;
-                    # constraints are refused above)
-                    **{key: m[key] for key in
-                       ("txns", "cdf") if m.get(key)},
-                    "partition_cols": m["partition_cols"],
-                    "schema": m.get("schema"),
-                    "stats_cols": scols, "stats": stats, "rows": rows,
-                    **bloom_fields,
-                    **stamp_fields,
-                    "files": m["files"] + files})
+                table._publish(m["version"] + 1, m, "stream_append",
+                               files, m["files"], new_blooms=blooms,
+                               **stamp_fields)
                 return
             except tf.CommitConflict:
                 continue  # another writer advanced the version: rebase

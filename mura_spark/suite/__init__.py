@@ -13,6 +13,11 @@ sorts columns by name before hashing).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+
 from mura_spark.suite import (
     analytics_q,
     dedup_q,
@@ -34,91 +39,51 @@ _MODULES = [textops, packing_q, sources_q, dedup_q, similarity_q, events_q,
             graph_q, analytics_q, stats_q, quality_q,
             multimodal_q, relational, tpch_more, tpch_ps]
 
-# Registry order == the order the driver verifies queries in, and the driver
-# checks only the FIRST 50 entries per round. Round-11 rotation: the
-# never-driver-verified debt drained to ZERO in round 10 (its window came
-# back 50/50 hash-green in CORRECTNESS_r10), so this round begins the pure
-# re-verification regime the round-10 staleness policy announced: the
-# window takes the 50 STALEST-green rows — oldest last-green CORRECTNESS
-# round first (r01 subquery pair, then the big r03 text/dedup/events
-# cohort, then r04) — exactly as scripts/rotate_window.py computes. The 5
-# rows-only approximate queries stay pinned to the registry tail (their
-# driver-facing signal is their deterministic companions).
-#
-# ROUND-12+ STALENESS POLICY (unchanged): each round, rotate the full
-# 50-slot window onto the stalest-green rows — oldest last-green
-# CORRECTNESS round first, registry order as the tie-break — via
-# scripts/rotate_window.py. Never-driver-verified rows (new queries)
-# always outrank re-verification and take the window head. At 50/round
-# over ~394 registry rows the full re-verification cycle is ~8 rounds,
-# bounding any row's staleness to that.
-# tests/test_registry.py::test_window_prefers_stalest_rows enforces the
-# ordering mechanically.
-_PRIORITY = [
-    "subquery_exists",  # backfill (r01)
-    "subquery_correlated_scalar",  # backfill (r01)
-    "text_token_stats",  # backfill (r03)
-    "text_quality",  # backfill (r03)
-    "text_langid",  # backfill (r03)
-    "text_fingerprint",  # backfill (r03)
-    "text_quality_filter",  # backfill (r03)
-    "text_scrub_pii",  # backfill (r03)
-    "text_repetition",  # backfill (r03)
-    "sample_split_train",  # backfill (r03)
-    "text_heavy_tokens",  # backfill (r03)
-    "sample_domain_cap",  # backfill (r03)
-    "sample_stratified",  # backfill (r03)
-    "text_tfidf_topterms",  # backfill (r03)
-    "pack_train_chunks",  # backfill (r03)
-    "pack_train_greedy",  # backfill (r03)
-    "csv_roundtrip",  # backfill (r03)
-    "jsonl_roundtrip",  # backfill (r03)
-    "orc_roundtrip",  # backfill (r03)
-    "skew_salted_supplier_revenue",  # backfill (r03)
-    "dedup_exact_groups",  # backfill (r03)
-    "dedup_contamination",  # backfill (r03)
-    "dedup_jaccard_pairs",  # backfill (r03)
-    "dedup_minhash_pairs",  # backfill (r03)
-    "dedup_simhash_pairs",  # backfill (r03)
-    "dedup_embedding_pairs",  # backfill (r03)
-    "dedup_clusters",  # backfill (r03)
-    "dedup_near_keep_one",  # backfill (r03)
-    "dedup_keep_one",  # backfill (r03)
-    "pipeline_pretrain_prep",  # backfill (r03)
-    "ann_topk_bruteforce",  # backfill (r03)
-    "emb_normalize",  # backfill (r03)
-    "emb_quantize_roundtrip",  # backfill (r03)
-    "events_window_hourly",  # backfill (r03)
-    "events_sessionize",  # backfill (r03)
-    "events_json_extract",  # backfill (r03)
-    "events_window_sliding",  # backfill (r03)
-    "events_asof_join",  # backfill (r03)
-    "events_range_join",  # backfill (r03)
-    "events_resample_gapfill",  # backfill (r03)
-    "events_upsert_latest",  # backfill (r03)
-    "events_scd2_history",  # backfill (r03)
-    "events_funnel",  # backfill (r03)
-    "events_retention",  # backfill (r03)
-    "events_user_totals",  # backfill (r03)
-    "events_type_value_stats",  # backfill (r03)
-    "mm_feature_extract",  # backfill (r03)
-    "mm_resize",  # backfill (r04)
-    "mm_frame_sample",  # backfill (r04)
-    "scan_region",  # backfill (r04)
-]
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+_WINDOW = 50
 
-#: Never-driver-verified overflow: EMPTY — no new queries since the
-#: round-10 additions were driver-verified. Future new queries append
-#: here and take the next window's head.
-_NEXT_WINDOW = []
-
-#: The approximate/rows-only queries: pinned to the registry tail (see
-#: above). Their driver-facing correctness signal is the deterministic
-#: companion row each gained in round 5.
+#: The approximate/rows-only queries: pinned to the registry tail, past
+#: every oracled query. Their correctness signal in the verification
+#: window is the deterministic companion row each gained in round 5.
 _ROWS_ONLY_TAIL = [
     "ann_topk_lsh", "ann_topk_ivf", "dedup_embedding_pairs_lsh",
     "sketch_distinct_users", "sketch_value_percentiles",
 ]
+
+
+def _last_green() -> dict[str, int]:
+    """Query name -> newest round whose committed ``CORRECTNESS_r*.json``
+    ledger has it hash-green with no error."""
+    def round_no(path: str) -> int:
+        # numeric, not lexicographic: 'r100' must outrank 'r99'
+        return int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
+
+    out: dict[str, int] = {}
+    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")),
+                       key=round_no):
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                if row.get("hash_match") and not row.get("err"):
+                    out[name] = round_no(path)  # ascending: newest wins
+    return out
+
+
+def _verification_window(reg: list[str], oracled) -> tuple[list, list]:
+    """Each verification round checks only the FIRST 50 registry
+    entries, so registry order is computed from the committed ledgers:
+    oracled queries never verified green come first (new queries), the
+    rest of the window is backfilled with the STALEST green rows —
+    oldest last-green round first, registry order as the tie-break. At
+    50 per round over ~400 rows this bounds any row's staleness to ~8
+    rounds. Returns ``(window, overflow)``: never-verified queries that
+    do not fit take the next window's head."""
+    last_green = _last_green()
+    debt = [n for n in reg if n in oracled and n not in last_green]
+    verified = [n for n in reg if n in oracled and n in last_green]
+    backfill = sorted(verified, key=lambda n: last_green[n])  # stable
+    return ((debt + backfill)[:_WINDOW], debt[_WINDOW:])
+
 
 SPARK_QUERIES = {}
 ORACLE_SQL = {}
@@ -129,13 +94,11 @@ for _m in _MODULES:
         SPARK_QUERIES[_name] = _fn
     ORACLE_SQL.update(_m.ORACLE_SQL)
 
-_missing_priority = [n for n in _PRIORITY + _NEXT_WINDOW + _ROWS_ONLY_TAIL
-                     if n not in SPARK_QUERIES]
-if _missing_priority:
-    raise ValueError(f"priority query not in registry: {_missing_priority}")
-if len(_PRIORITY) != 50:
-    raise ValueError(f"driver window must hold exactly 50 queries, "
-                     f"got {len(_PRIORITY)}")
+_missing_tail = [n for n in _ROWS_ONLY_TAIL if n not in SPARK_QUERIES]
+if _missing_tail:
+    raise ValueError(f"rows-only query not in registry: {_missing_tail}")
+_PRIORITY, _NEXT_WINDOW = _verification_window(list(SPARK_QUERIES),
+                                               ORACLE_SQL)
 _tail = set(_ROWS_ONLY_TAIL)
 _front = set(_PRIORITY) | set(_NEXT_WINDOW)
 SPARK_QUERIES = {

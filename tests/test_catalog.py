@@ -68,15 +68,25 @@ def test_register_sf_dir(spark, sf_dir):
     assert spark.table("region").count() == 5
 
 
-def test_reference_ddl_dialect_on_reference_sample(session):
+def test_reference_ddl_dialect_on_reference_sample(session, tmp_path):
     """The reference's documented DDL (CREATE EXTERNAL TABLE ... STORED AS
-    PARQUET LOCATION, src/parser/mod.rs:26-28) must work against its own
-    sample parquet, including null handling (the file contains nulls)."""
+    PARQUET LOCATION, src/parser/mod.rs:26-28) must work against a
+    sample shaped like its userdata1.parquet, including null handling
+    (the sample contains nulls)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     import pyspark.sql.functions as F
+    path = str(tmp_path / "userdata1.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array(range(1, 1001), pa.int32()),
+        "first_name": [None if i % 50 == 0 else f"name{i}"
+                       for i in range(1000)],
+        "salary": [None if i % 13 == 0 else 1000.0 + i
+                   for i in range(1000)]}), path)
     session.sql("DROP TABLE IF EXISTS userdata")
     session.sql(
         "CREATE EXTERNAL TABLE userdata STORED AS PARQUET "
-        "LOCATION '/root/reference/src/examples/userdata1.parquet'")
+        f"LOCATION '{path}'")
     df = session.sql("SELECT id, first_name, salary FROM userdata")
     assert df.count() == 1000
     n_null = session.sql(

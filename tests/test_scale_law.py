@@ -13,17 +13,16 @@ human reader:
 
 Replication matches scripts/scale_check.py: replica i shifts doc_id by
 ``i * (max_id + 1)``, giving every base document K-1 exact clones — the
-worst case for pair mining. The run also emits ``SCALELAW.json`` at the
-repo root (timings, pair counts, law ratio) as the per-round artifact.
+worst case for pair mining. The run writes its ``SCALELAW.json`` record
+(timings, pair counts, law ratio) under the test's tmp dir, never over
+the committed artifact.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROBE_SF = "/root/testdata/sf0.01"
 SCALES = [10, 30]
 QUERY = "dedup_jaccard_pairs"
@@ -78,7 +77,7 @@ def test_pair_mining_is_output_bound(spark, tmp_path):
                 "scales": {str(k): probe[k] for k in SCALES},
                 "law_ratio_k30_vs_k10": round(law_ratio, 3),
                 "law_holds": law_ratio <= 1.6}
-    with open(os.path.join(REPO, "SCALELAW.json"), "w") as fh:
+    with open(tmp_path / "SCALELAW.json", "w") as fh:
         json.dump(artifact, fh, indent=1)
     assert law_ratio <= 1.6, (
         f"pair mining no longer output-bound: sec/Mpair rose "
