@@ -1,6 +1,9 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the registry's benched queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+
+    python bench.py            # every benched query; writes BENCH_FULL.json
+    python bench.py NAME...    # only the named queries; writes nothing
 
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -8,7 +11,9 @@ Prints ONE JSON line:
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver-side materialization cost). Timings are per-query wall clock after a
-shared session warm-up query.
+shared session warm-up query. Every run also records, under ``"jobs"``, the
+Spark jobs each query launched (full runs keep them in BENCH_FULL.json
+only, to keep the printed line short).
 
 Scaling note for the driver's low-core probe: the session master is
 ``local[$SPARK_GRAFT_CPUS]`` (mura_spark/session.py reads the env var into
@@ -31,362 +36,85 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-#: Headline set: the flagship aggregation, join-heavy TPC-H shapes, window
-#: functions, every dedup family, ANN, and the event-stream batch queries.
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_volume",
-    "q6_revenue_change",
-    "q10_returned_items",
-    "q18_large_orders",
-    "agg_rollup",
-    "agg_stats",
-    "join_left_outer",
-    "window_topk_per_group",
-    "window_running_sum",
-    "projection_lineitem",
-    "filter_lt",
-    "text_token_stats",
-    "text_langid",
-    "dedup_exact_groups",
-    "dedup_jaccard_pairs",
-    "dedup_minhash_pairs",
-    "dedup_simhash_pairs",
-    "dedup_embedding_pairs",
-    "dedup_embedding_pairs_lsh",
-    "dedup_clusters",
-    "ann_topk_bruteforce",
-    "events_window_hourly",
-    "events_window_sliding",
-    "events_sessionize",
-    "events_resample_gapfill",
-    "events_asof_join",
-    "events_range_join",
-    "ann_topk_lsh",
-    "ann_topk_ivf",
-    "q14_promo_share",
-    "mm_feature_extract",
-    "text_fingerprint",
-    "text_quality_filter",
-    "text_repetition",
-    "sample_split_train",
-    "pack_train_chunks",
-    "pack_train_greedy",
-    "events_json_extract",
-    "events_user_totals",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q19_disjunctive_revenue",
-    "q21_waiting_supplier",
-    "text_tfidf_topterms",
-    "emb_quantize_roundtrip",
-    "sample_stratified",
-    "events_funnel",
-    "events_retention",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "dedup_contamination",
-    "sample_domain_cap",
-    "text_heavy_tokens",
-    "events_scd2_history",
-    "events_enrich_users",
-    "dedup_incremental_new",
-    "pack_chunk_overlap",
-    "sample_global_shuffle",
-    "sample_weighted_quality",
-    "sample_k_per_lang",
-    "dedup_incremental_near",
-    "pipeline_finetune_prep",
-    "events_value_histogram",
-    # round-5 additions (the degenerate-exact driver companions are
-    # correctness artifacts, not perf surfaces — deliberately unbenched)
-    "text_remove_boilerplate",
-    "events_session_window_stream",
-    "pack_token_shards",
-    # round-5b additions
-    "sample_mixture_apply",
-    "sample_curriculum_bins",
-    "text_pmi_bigrams",
-    "events_winsorize",
-    "parquet_partitioned_prune",
-    "parquet_schema_evolution",
-    "events_incremental_totals",
-    "sample_split_leak_safe",
-    "profile_documents",
-    "sample_temperature_plan",
-    "events_rolling_1h_sum",
-    "mm_image_stats",
-    "mm_audio_stats",
-    "mm_video_frame_stats",
-    "agg_udaf_gmean",
-    "udtf_ngrams",
-    "events_winsorize_by_type",
-    "text_readability",
-    "sample_group_kfold",
-    "events_anomaly_hours",
-    "emb_label_centroids",
-    "emb_knn_classify",
-    "dedup_editdist_pairs",
-    "dedup_containment_pairs",
-    "events_session_overlap",
-    "graph_copurchase_degree",
-    "graph_pagerank_parts",
-    "emb_kmeans_assign",
-    "events_markov_transitions",
-    "events_dedup_replay",
-    "graph_assoc_rules",
-    "emb_pq_codes",
-    "search_bm25_topk",
-    "search_rrf_fusion",
-    "graph_triangle_counts",
-    "stats_corr_lineitem",
-    "text_simpson_by_lang",
-    "text_tvd_by_source",
-    "stats_ols_value_by_hour",
-    "stats_chi2_lang_source",
-    "emb_centroid_cosine",
-    "events_path_trigrams",
-    "text_quality_qnorm",
-    "join_full_outer",
-    "agg_unpivot",
-    "hof_array_ops",
-    "audit_referential",
-    "events_snapshot_diff",
-    "graph_kcore_prune",
-    "text_vocab_coverage",
-    "text_unigram_logloss",
-    "events_cumulative_users",
-    "events_decayed_value",
-    "emb_knn_confusion",
-    "audit_benford",
-    "setop_intersect_all",
-    "setop_except_all",
-    "agg_string_concat",
-    "sort_nulls_last_topk",
-    "events_value_p50_p95_by_type",
-    "events_funnel_1h",
-    "emb_outlier_distance",
-    "events_time_to_convert",
-    "text_langid_confidence",
-    "text_dedup_rate_by_source",
-    "events_dau_wau",
-    "parts_abc_pareto",
-    "stats_ab_ztest",
-    "events_interarrival_stats",
-    "audit_value_ranges",
-    "pipeline_corpus_health",
-    "supplier_concentration_hhi",
-    "text_ngram_novelty",
-    # round-5r onward: appended per batch through 5ff
-    "stats_ks_value",
-    "stats_mwu_value",
-    "join_right_outer",
-    "window_percent_rank",
-    "events_rfm_segments",
-    "events_hourly_autocorr",
-    "emb_top_pc",
-    "graph_bfs_reach",
-    "orders_monthly_growth",
-    "events_variant_extract",
-    "join_lateral_topn",
-    "join_null_safe",
-    "events_ewma_daily",
-    "events_locf_purchase",
-    "events_attribution_last_touch",
-    "profile_key_skew",
-    "emb_explained_variance",
-    "emb_pca_project",
-    "search_substring_trigram",
-    "orders_cohort_ltv",
-    "emb_matryoshka_agreement",
-    "events_sessionize_capped",
-    "text_quality_logistic",
-    "agg_mode",
-    "events_outlier_iqr",
-    "events_bot_screen",
-    "window_nth_value",
-    "events_ab_srm_check",
-    "sample_split_temporal",
-    "emb_abtt_residual",
-    "agg_bitmap_distinct",
-    "graph_label_propagation",
-    "dedup_sorted_neighborhood",
-    "window_range_numeric",
-    "q12_priority_lines",
-    "pipeline_attrition_report",
-    # round-6 additions
-    "window_ntile",
-    "window_ratio_to_report",
-    "setop_union_byname",
-    "parts_skyline",
-    "text_gopher_rules",
-    "text_char_entropy",
-    "text_zipf_slope",
-    "window_cume_dist",
-    "agg_boolean_profile",
-    "events_interpolate_linear",
-    "stats_bootstrap_ci",
-    "sample_token_budget",
-    "text_langid_confusion",
-    "text_quality_calibration",
-    "events_trending_topk",
-    "emb_pair_cosine_histogram",
-    "orders_ship_latency",
-    "text_dup_spans",
-    "text_token_fertility",
-    "events_pattern_regex",
-    "subquery_not_in",
-    "sort_offset_page",
-    "events_conversion_pairs",
-    "events_mad_by_type",
-    "orders_gini_spend",
-    "events_count_distinct_rollup",
-    "scalar_try_functions",
-    "emb_hard_negatives",
-    "orders_priority_mix_drift",
-    "graph_adamic_adar",
-    "text_js_divergence",
-    "mm_phash_pairs",
-    "mm_audio_fingerprint_pairs",
-    "pipeline_mm_dedup_report",
-    "audit_k_anonymity",
-    "profile_join_cardinality",
-    "stats_cusum_shift",
-    "events_peak_concurrency",
-    "feature_target_encode_loo",
-    "stats_auc_length",
-    "stats_theil_sen_daily",
-    "events_seasonal_naive_mae",
-    "emb_diversity_mean_cosine",
-    "text_bigram_logloss",
-    "source_python_datasource",
-    "source_file_lineage",
-    "stats_mutual_information",
-    "audit_sequence_gaps",
-    "stats_weighted_median_spend",
-    "events_activity_streaks",
-    "emb_mutual_nn",
-    "text_hapax_rate",
-    "events_user_type_entropy",
-    "graph_clustering_coeff",
-    "stats_ols2_lineitem",
-    "orders_quartile_migration",
-    "mm_scene_changes",
-    "text_rake_keywords",
-    "stats_wilson_error_rate",
-    "events_sequence_entropy_rate",
-    "events_ab_cuped",
-    "graph_modularity",
-    "stats_anova_value_by_type",
-    "stats_brown_forsythe",
-    "events_survival_km",
-    "text_term_burstiness",
-    "xml_roundtrip",
-    "text_mojibake_audit",
-    "stats_spearman_qty_discount",
-    "emb_dim_variance",
-    "events_debounce",
-    "feature_trailing_windows",
-    "emb_triplet_accuracy",
-    "events_velocity_screen",
-    "text_script_mismatch",
-    "stats_power_analysis",
-    "events_error_budget_burn",
-    "text_feature_hashing",
-    "orders_duplicate_invoice_screen",
-    "mm_audio_vad_segments",
-    "scripting_monthly_accumulator",
-    "events_holt_forecast",
-    "orders_seasonal_index",
-    "events_markov_baseline_acc",
-    "text_ks_drift_by_source",
-    "stats_simpson_screen",
-    "dedup_blocking_quality",
-    "events_twap_value",
-    "orders_revenue_bridge",
-    "events_xcorr_lag",
-    "stats_cmh_odds",
-    "emb_silhouette",
-    "dedup_cluster_cohesion",
-    "events_psi_drift",
-    "text_quality_gains",
-    "text_conformal_threshold",
-    "dedup_minhash_calibration",
-    "stats_runs_test_daily",
-    "audit_order_totals",
-    "emb_centroid_drift",
-    "stats_eb_shrinkage",
-    "sample_importance_weights",
-    "stats_adf_value_daily",
-    "orders_backlog_aging",
-    "audit_primary_keys",
-    "supplier_return_rate_lcb",
-    "agg_group_by_all",
-    "string_collation_filter",
-    "stats_paired_ttest",
-    "pipeline_dedup_savings",
-    "csv_malformed_recovery",
-    "jsonl_malformed_recovery",
-    "source_compaction_report",
-    "stats_pinball_quantile_eval",
-    "source_federated_join",
-    "stats_dispersion_orders",
-    "mm_brightness_by_source",
-    "graph_degree_assortativity",
-    "join_bucketed_colocate",
-    "stats_mann_kendall_daily",
-    "events_anomaly_deseasonalized",
-    "orders_deseasonalized_growth",
-    "ann_ivf_recall_at10",
-    "ann_pq_adc_recall_at10",
-    "stats_hill_tail_index",
-    "graph_rich_club",
-    "text_burrows_delta",
-    "events_type_affinity",
-    "emb_cluster_balance",
-    "stats_tost_equivalence",
-    "stats_circular_time_of_day",
-    "sample_negative_pairs",
-    "events_funnel_window_sensitivity",
-    "feature_hash_cross",
-    "audit_split_leakage",
-    "stats_cohens_d_value",
-    "stats_qini_curve",
-    "stats_mahalanobis_outliers",
-    "stats_partial_corr",
-    "stats_deming_qty_price",
-    "stats_kendall_tau_daily",
-    "parts_price_dispersion_topk",
-    "audit_event_disorder",
-    "stats_ljung_box_daily",
-    "orders_churn_risk_flags",
-    # round-8 additions
-    "table_time_travel_roundtrip",
-    "bpe_top_merges",
-    "table_changes_replay",
-    "table_stream_sink_roundtrip",
-    # round-10 additions
-    "view_incremental_refresh",
-    "merge_upsert_sql",
-    "table_constraints_gate",
-    "table_clone_divergence",
-    "table_lifecycle_maintenance",
-    "table_bloom_lookup_skipping",
-    "table_schema_evolution",
-    "table_txn_idempotent_writes",
-]
+from mura_spark.suite import SPARK_QUERIES  # noqa: E402
+
+#: Registry rows the bench does not time, one group per reason. Every
+#: other registry row is benched (``BENCH_QUERIES``).
+BENCH_EXCLUDED = frozenset({
+    # reference-parity micro rows and single-shape correctness rows: one
+    # operator, expression family or plan shape each (incl. the smaller
+    # TPC-H and subquery shapes and keep-one compositions of benched
+    # stages); the oracle pins them, and benched rows time their operators
+    "agg_cube", "agg_grouping_sets", "agg_having", "agg_median",
+    "agg_pivot", "arithmetic_expr", "case_when_buckets", "cast_types",
+    "column_positional", "date_functions", "distinct_flags",
+    "empty_relation", "filter_and_or", "filter_eq", "filter_gt",
+    "filter_gteq", "filter_isnotnull", "filter_isnull", "filter_lteq",
+    "filter_not", "filter_noteq", "in_between_like", "join_anti",
+    "join_cross_small", "join_semi", "scalar_functions", "setop_except",
+    "setop_intersect", "setop_union", "sort_limit_topk",
+    "string_functions", "subquery_correlated_scalar", "subquery_exists",
+    "subquery_scalar", "wildcard_lineitem", "window_lead_lag",
+    "q4_priority_exists", "q11_important_stock", "q13_order_distribution",
+    "q15_top_supplier", "q16_parts_supplier_count", "q17_small_quantity",
+    "q20_promotion_parts", "q22_idle_customers", "events_type_value_stats",
+    "events_upsert_latest", "emb_normalize", "mm_frame_sample",
+    "mm_resize", "text_quality", "text_scrub_pii", "sample_mixture_plan",
+    "skew_salted_supplier_revenue", "dedup_keep_one",
+    "dedup_near_keep_one", "pipeline_pretrain_prep",
+    # exact/degenerate companions of approximate rows: they exist so the
+    # oracle can hash-match the approximate pipeline, not as perf surfaces
+    "ann_topk_ivf_fullprobe", "ann_topk_lsh_exhaustive",
+    "dedup_embedding_pairs_lsh_full", "sketch_distinct_users_exact",
+    "sketch_value_percentiles_exact",
+    # rows-only approximates: no oracle, error bounds pinned in pytest
+    "sketch_distinct_users", "sketch_value_percentiles",
+    # format round-trips: write-then-read fixtures of the file formats
+    "create_table_roundtrip", "csv_roundtrip", "jsonl_roundtrip",
+    "orc_roundtrip",
+    # the session warm-up, run once before timing starts
+    "scan_region",
+})
+
+BENCH_QUERIES = sorted(set(SPARK_QUERIES) - BENCH_EXCLUDED)
 
 #: Per-query timing = min of N_ROUNDS runs (steady-state; local-mode JVM
 #: GC/scheduling noise on tiny tasks otherwise dominates the signal).
 N_ROUNDS = 2
 
 
-def main() -> None:
+def _jobs_submitted(spark) -> int:
+    """Spark jobs submitted so far, i.e. the highest job id + 1. Jobs
+    are attributed to a query by the id range its run spans, which also
+    counts jobs that streaming threads submit outside any job group."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def time_queries(spark, sf_dir: str, names: list[str]
+                 ) -> tuple[dict[str, float], dict[str, int]]:
+    """Seconds (min of N_ROUNDS) and Spark jobs (of the kept run) per
+    query, each forced end-to-end through the noop sink."""
+    timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
+    for _ in range(N_ROUNDS):
+        for name in names:
+            fn = SPARK_QUERIES[name]
+            j0, t0 = _jobs_submitted(spark), time.time()
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            el = round(time.time() - t0, 3)
+            if name not in timings or el < timings[name]:
+                timings[name] = el
+                jobs[name] = _jobs_submitted(spark) - j0
+    return timings, jobs
+
+
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from mura_spark.session import get_spark
-    from mura_spark.suite import SPARK_QUERIES
 
+    unknown = [n for n in names if n not in SPARK_QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
     spark = get_spark("mura-bench")
     # FATAL, not ERROR: a handful of fixture rows intentionally exercise
     # REJECTED commits (constraint gate, idempotent-write replay), and at
@@ -399,14 +127,7 @@ def main() -> None:
     # warm the JVM/codegen paths once (not timed)
     SPARK_QUERIES["scan_region"](spark, sf_dir).count()
 
-    timings: dict[str, float] = {}
-    for _ in range(N_ROUNDS):
-        for name in BENCH_QUERIES:
-            fn = SPARK_QUERIES[name]
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            el = round(time.time() - t0, 3)
-            timings[name] = min(el, timings.get(name, el))
+    timings, jobs = time_queries(spark, sf_dir, names or BENCH_QUERIES)
 
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
@@ -417,6 +138,7 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        "jobs": jobs,
         "sf": sf,
         # prove the env contract from the output alone: the resolved
         # master (built from $SPARK_GRAFT_CPUS in session.get_spark) and
@@ -425,6 +147,9 @@ def main() -> None:
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "sf_dir": sf_dir,
     }
+    if names:
+        print(json.dumps(out))
+        return
     r1_ref = _r1_reference()
     out.update(_regression_check(timings, r1_ref))
     # Full per-query history goes to its own file: the driver ledger
@@ -436,6 +161,7 @@ def main() -> None:
     with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     compact = dict(out)
+    del compact["jobs"]
     if r1_ref:
         compact["queries"] = {q: t for q, t in timings.items()
                               if q in r1_ref}
@@ -535,4 +261,4 @@ def _regression_check(timings: dict[str, float], r1_ref: dict) -> dict:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -285,7 +285,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # carried size under-estimate otherwise makes Catalyst BROADCAST the
     # oriented edge list into both the wedge join and the closing join
     # (the pagerank/BFS/adamic-adar mechanism). Interleaved A/B at sf0.1
-    # (scripts/triangle_hint_probe.py, 5 trials): median 13.5 → 7.3 s,
+    # (OPTIMIZATION_r10.md change 14, 5 trials): median 13.5 → 7.3 s,
     # results collect()-identical. Hash-building a partition of the
     # oriented edges and streaming the wedges is also the 100 TB shape —
     # a forced |E| broadcast is not. Hints are semantics-free.

@@ -360,10 +360,10 @@ class IncrementalAggView:
         combined = self._cast_like(
             self._aggregate(current.unionByName(delta), keys, aggs,
                             _AGG_COMBINE, on_output=True), view_now)
-        # source_unique: `combined` is a groupBy(*keys) aggregate, so
-        # key uniqueness holds by construction — the merge's ambiguity
+        # trust_source_unique: `combined` is a groupBy(*keys) aggregate,
+        # so key uniqueness holds by construction — the merge's ambiguity
         # pre-pass (an AQE incremental limit-collect, ~4 Spark jobs)
         # would re-prove a structural invariant every refresh
         self.table.merge(combined, key_cols=keys, meta=new_meta,
-                         source_unique=True)
+                         trust_source_unique=True)
         return RefreshResult("incremental", here, there)

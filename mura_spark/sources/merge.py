@@ -80,26 +80,30 @@ def hive_partition_values(relpath: str, partition_cols: list[str]) -> tuple:
 
 
 def check_merge_source(target: DataFrame, source: DataFrame,
-                       key_cols: list[str],
-                       source_unique: bool = False) -> DataFrame:
+                       key_cols: list[str], *,
+                       trust_source_unique: bool = False) -> DataFrame:
     """Shared MERGE preconditions: the source must carry exactly the
     target's columns (returned aligned to the target's order) and at
     most one row per key — multiple source rows matching one target
     row make the merge ambiguous, so they raise (the Delta rule),
     enforced with one aggregation over the source.
 
-    ``source_unique=True`` skips the key-uniqueness aggregation (a
+    ``trust_source_unique=True`` skips the key-uniqueness aggregation (a
     Spark action — several jobs under AQE's incremental limit-collect)
     for callers whose source is unique per key BY CONSTRUCTION, e.g.
     the output of ``groupBy(*key_cols)`` — the incremental-view
-    refresh's combine frame. The schema check still runs; only the
-    provably redundant data pass is skipped."""
+    refresh's combine frame. The schema check still runs. Nothing
+    checks the trust: a source with several rows for one key then
+    gives wrong, nondeterministic merge output and raises no error —
+    the full-outer merge join writes every one of those rows, so the
+    key is duplicated in the table, and which duplicate a later
+    key-wise read or merge sees depends on partitioning."""
     if set(target.columns) != set(source.columns):
         raise ValueError(
             f"source schema {sorted(source.columns)} != target schema "
             f"{sorted(target.columns)}")
     source = source.select(*target.columns)
-    if not source_unique:
+    if not trust_source_unique:
         dup = (source.groupBy(*key_cols).count()
                      .where(F.col("count") > 1).limit(1).collect())
         if dup:

@@ -823,7 +823,8 @@ class MuraTable:
               insert_not_matched: bool = True,
               sync_delete: bool = False,
               meta: dict | None = None,
-              txn: tuple[str, int] | None = None,
+              txn: tuple[str, int] | None = None, *,
+              trust_source_unique: bool = False,
               source_unique: bool = False) -> MergeStats:
         """Copy-on-write MERGE with snapshot semantics.
 
@@ -855,6 +856,15 @@ class MuraTable:
         pruning is disabled for the commit (a full rewrite, priced
         accordingly; Delta's NOT MATCHED BY SOURCE scans the full
         target for the same reason).
+
+        ``trust_source_unique=True`` skips the ambiguous-source check
+        for a source that is unique per key by construction. Nothing
+        checks the trust: a source with several rows for one key then
+        gives wrong, nondeterministic output (duplicated keys) and
+        raises no error (see
+        :func:`mura_spark.sources.merge.check_merge_source`).
+        ``source_unique`` is its former name, still accepted for
+        ``perfbench/workloads.py``.
         """
         if when_matched not in ("update", "delete", "ignore"):
             raise ValueError(f"when_matched must be "
@@ -866,8 +876,9 @@ class MuraTable:
             return MergeStats(0, 0, 0, 0)
         pcols = prev["partition_cols"]
         target = self.read()
-        source = check_merge_source(target, source, key_cols,
-                                    source_unique=source_unique)
+        source = check_merge_source(
+            target, source, key_cols,
+            trust_source_unique=trust_source_unique or source_unique)
 
         # unpartitioned: full rewrite, nothing carried by reference
         keep_files = []

@@ -141,7 +141,7 @@ def graph_bfs_reach(spark, sf):
     # list), SHUFFLE_HASH(w) 2.18 s, BROADCAST(w) 1.33 s but rejected:
     # a forced frontier broadcast is bounded only by |V| — wrong at
     # 100 TB; shuffle-hash stays partition-bounded at any graph size
-    # (scripts/bfs_hint_probe.py).
+    # (OPTIMIZATION_r10.md change 10).
     return spark.sql(_BFS_SQL.format(
         edges="__mura_bfs_edges", hint="/*+ SHUFFLE_HASH(w) */ "))
 
@@ -251,7 +251,7 @@ def graph_adamic_adar(spark, sf):
     # under-estimate otherwise makes Catalyst BROADCAST the edge list
     # (the pagerank/BFS/LPA mechanism) — a |E|-bounded build that is both
     # the local loser (interleaved A/B at sf0.1, 5 trials: median
-    # 6.06 → 4.18 s, results identical; scripts/adamic_adar_hint_probe.py)
+    # 6.06 → 4.18 s, results identical; OPTIMIZATION_r10.md change 13)
     # and a 100 TB hazard. Hints are semantics-free.
     e2 = (e.select(F.col("src").alias("z"), F.col("dst").alias("v"))
            .hint("shuffle_hash"))

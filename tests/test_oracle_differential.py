@@ -4,7 +4,7 @@ at sf0.001 (full sweep at sf0.01 via scripts/check_oracle.py).
 Every oracle-paired query in the suite must match DuckDB on row count,
 column names, and order-insensitive values.
 
-The Spark side of all ~400 queries is computed ONCE per module by a
+The Spark side of every collected query is computed ONCE per module by a
 small driver thread pool (the guide's §2.6 overlap-independent-jobs
 pattern: Spark's scheduler happily runs several queries at once, and
 almost all of the serial sweep's wall was per-query driver/scheduling
@@ -43,10 +43,17 @@ def duck(sf_dir):
 
 
 @pytest.fixture(scope="module")
-def spark_results(spark, sf_dir):
-    """name -> (columns, rows, error) for every oracled query, collected
-    concurrently (6 driver threads — enough to hide per-query latency,
-    few enough that executor cores are never contended at sf0.001)."""
+def spark_results(request, spark, sf_dir):
+    """name -> (columns, rows, error) for every oracled query this session
+    collected (so ``-k NAME`` runs one query, a full run all of them),
+    computed concurrently (6 driver threads — enough to hide per-query
+    latency, few enough that executor cores are never contended at
+    sf0.001)."""
+    names = sorted({item.callspec.params["name"]
+                    for item in request.session.items
+                    if getattr(item, "function", None)
+                    is test_query_matches_oracle})
+
     def run(name):
         try:
             sdf = SPARK_QUERIES[name](spark, sf_dir)
@@ -56,7 +63,7 @@ def spark_results(spark, sf_dir):
             return name, (None, None, e)
 
     with ThreadPoolExecutor(max_workers=6) as pool:
-        return dict(pool.map(run, sorted(ORACLE_SQL)))
+        return dict(pool.map(run, names))
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))

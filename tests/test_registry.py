@@ -135,3 +135,17 @@ def test_window_prefers_stalest_rows():
         assert not inside_fresh, (
             f"window holds already-fresh rows {inside_fresh[:5]} while "
             f"stale rows sit outside: {outside_stale[:5]}")
+
+
+def test_bench_exclusions_partition_the_registry():
+    """``bench.py`` times every registry query except its named
+    exclusions: each excluded name must exist (a renamed query would
+    otherwise slip into the bench silently), and benched plus excluded
+    cover the registry with no overlap."""
+    import bench
+    reg = set(_registry()[0])
+    assert not bench.BENCH_EXCLUDED - reg, sorted(bench.BENCH_EXCLUDED - reg)
+    benched = set(bench.BENCH_QUERIES)
+    assert len(benched) == len(bench.BENCH_QUERIES)
+    assert not benched & bench.BENCH_EXCLUDED
+    assert benched | bench.BENCH_EXCLUDED == reg

@@ -11,17 +11,18 @@ human reader:
     sec/Mpair at K=30 must be flat-to-falling vs K=30/3 (slack 1.6x for
     local-mode timing noise), while the pair output itself grows ~(30/10)^2.
 
-Replication matches scripts/scale_check.py: replica i shifts doc_id by
+The corpus comes from ``scripts/scale_laws.replicate`` (the K=10/100
+``pair_mining`` law's helper): replica i shifts doc_id by
 ``i * (max_id + 1)``, giving every base document K-1 exact clones — the
 worst case for pair mining. The run writes its ``SCALELAW.json`` record
-(timings, pair counts, law ratio) under the test's tmp dir, never over
-the committed artifact.
+(timings, pair counts, law ratio) under the test's tmp dir.
 """
 
 from __future__ import annotations
 
 import json
-import time
+
+from scripts.scale_laws import TABLE_KEYS, min_of_2, replicate
 
 PROBE_SF = "/root/testdata/sf0.01"
 SCALES = [10, 30]
@@ -29,27 +30,15 @@ QUERY = "dedup_jaccard_pairs"
 
 
 def _build(spark, k, out_dir):
-    from pyspark.sql import functions as F
-
-    from mura_spark.suite.common import table
-    docs = table(spark, PROBE_SF, "documents")
-    base = docs.agg(F.max("doc_id")).first()[0] + 1
-    rep = (docs.crossJoin(spark.range(k).select(F.col("id").alias("__r")))
-               .withColumn("doc_id", F.col("doc_id") + F.col("__r") * base)
-               .drop("__r"))
-    rep.write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
+    (replicate(spark, PROBE_SF, "documents", k)
+        .write.mode("overwrite").parquet(f"{out_dir}/documents.parquet"))
 
 
 def _run(spark, sf_dir):
     from mura_spark.suite import SPARK_QUERIES
     pairs = SPARK_QUERIES[QUERY](spark, sf_dir).count()
-    best = None
-    for _ in range(2):  # min-of-2: absorb one-off JIT/GC stalls
-        t0 = time.time()
-        (SPARK_QUERIES[QUERY](spark, sf_dir)
-         .write.mode("overwrite").format("noop").save())
-        el = time.time() - t0
-        best = el if best is None else min(best, el)
+    best = min_of_2(lambda _: SPARK_QUERIES[QUERY](spark, sf_dir)
+                    .write.mode("overwrite").format("noop").save())
     return best, pairs
 
 
@@ -83,3 +72,30 @@ def test_pair_mining_is_output_bound(spark, tmp_path):
         f"pair mining no longer output-bound: sec/Mpair rose "
         f"{law_ratio:.2f}x from K={SCALES[0]} to K={SCALES[1]} "
         f"({lo} -> {hi})")
+
+
+def test_replicate_offsets_keys_per_domain(spark, sf_dir):
+    """k key-offset replicas: every table grows exactly k times, every
+    owned key stays unique, and a foreign-key join grows exactly k times
+    (no row joins across replicas)."""
+    from pyspark.sql import functions as F
+
+    from mura_spark.suite.common import table
+
+    k = 3
+    reps = {t: replicate(spark, sf_dir, t, k).cache() for t in TABLE_KEYS}
+    for t, rep in reps.items():
+        assert rep.count() == k * table(spark, sf_dir, t).count(), t
+    for t, keys in TABLE_KEYS.items():
+        for col, domain in keys:
+            if domain == t:
+                assert (reps[t].select(col).distinct().count()
+                        == reps[t].count()), (t, col)
+    li, od = reps["lineitem"], reps["orders"]
+    joined = li.join(od, F.col("l_orderkey") == F.col("o_orderkey"))
+    base = table(spark, sf_dir, "lineitem").join(
+        table(spark, sf_dir, "orders"),
+        F.col("l_orderkey") == F.col("o_orderkey"))
+    assert joined.count() == k * base.count() > 0
+    for rep in reps.values():
+        rep.unpersist()
