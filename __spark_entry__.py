@@ -24,16 +24,10 @@ if _REPO not in sys.path:
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Pin the session confs the engine relies on (safe to set at runtime)."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.ansi.enabled": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # NTZ-typed parquet timestamps read as session-TZ TIMESTAMP (UTC):
-        # value-identical, and streaming event time requires LTZ.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    }.items():
+    """Pin the engine's session confs (``session.DEFAULT_CONF``) where
+    they can be set at runtime."""
+    from mura_spark.session import DEFAULT_CONF
+    for k, v in DEFAULT_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:

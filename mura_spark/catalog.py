@@ -88,11 +88,17 @@ class TableInfo:
 
 
 class Catalog:
-    """Registry of external tables, by name → (location, file type, schema)."""
+    """Registry of external tables, by name → (location, file type, schema).
+
+    Names resolve case-insensitively, as Spark resolves the temp views
+    they register."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._tables: dict[str, TableInfo] = {}
+        self._tables: dict[str, TableInfo] = {}  # keyed by lower-cased name
+
+    def lookup(self, name: str) -> TableInfo | None:
+        return self._tables.get(name.lower())
 
     def create_external_table(self, name: str, location: str, schema=None,
                               file_type: str = "parquet",
@@ -122,25 +128,23 @@ class Catalog:
             df = reader.load(location)
         if ft == "parquet" and schema is None:
             df = _fix_ns_timestamps(df, _ns_timestamp_columns(location))
-        df.createOrReplaceTempView(name)
-        info = TableInfo(name=name, location=location, file_type=ft,
-                         schema=df.schema)
-        self._tables[name] = info
-        return info
+        return self._register(TableInfo(name, location, ft, df.schema), df)
 
     def register_dataframe(self, name: str, df: DataFrame) -> TableInfo:
         """In-memory table registration (the reference catalog's intended
         'against in-memory data' half, reference README.md:10)."""
-        df.createOrReplaceTempView(name)
-        info = TableInfo(name=name, location="<in-memory>",
-                         file_type="memory", schema=df.schema)
-        self._tables[name] = info
+        return self._register(
+            TableInfo(name, "<in-memory>", "memory", df.schema), df)
+
+    def _register(self, info: TableInfo, df: DataFrame) -> TableInfo:
+        df.createOrReplaceTempView(info.name)
+        self._tables[info.name.lower()] = info
         return info
 
     def fetch_table_info(self, name: str) -> StructType | None:
         """The reference trait's single method (catalog.rs:20-22), minus the
         unwrap-panic on missing entries (catalog.rs:30)."""
-        info = self._tables.get(name)
+        info = self.lookup(name)
         if info is not None:
             return info.schema
         try:  # fall back to anything already in the Spark session catalog
@@ -149,16 +153,16 @@ class Catalog:
             return None
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._tables and not self.spark.catalog.tableExists(name):
+        if self.lookup(name) is None and not self.spark.catalog.tableExists(name):
             raise KeyError(f"table {name!r} is not registered")
         return self.spark.table(name)
 
     def drop(self, name: str) -> None:
-        self._tables.pop(name, None)
+        self._tables.pop(name.lower(), None)
         self.spark.catalog.dropTempView(name)
 
     def tables(self) -> list[str]:
-        return sorted(self._tables)
+        return sorted(info.name for info in self._tables.values())
 
 
 def register_sf_dir(spark: SparkSession, sf_dir: str,

@@ -25,6 +25,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from mura_spark.catalog import Catalog
+from mura_spark.sources.table_format import MuraTable
 
 #: Defaults applied by :func:`get_spark`. Explicit so behavior is pinned
 #: across Spark versions rather than inherited from changing defaults.
@@ -57,6 +58,15 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Columnar shuffle/exec stay default; AQE handles partition sizing.
 }
+
+
+def _statement(body: str) -> "re.Pattern[str]":
+    """A whole-statement pattern: case-insensitive, optional ``;``."""
+    return re.compile(rf"(?is)^\s*{body}\s*;?\s*$")
+
+
+#: the statement's target table, the group ``MuraSession._route`` resolves
+_T = r"(?P<table>[A-Za-z_]\w*)"
 
 
 def _default_parallelism() -> int:
@@ -114,39 +124,27 @@ class MuraSession:
         ``CREATE TABLE ... USING parquet`` — plain Spark SQL reserves
         ``STORED AS`` for Hive-enabled sessions.
 
-        Row-level DML (``DELETE FROM t [WHERE p]``, ``UPDATE t SET
-        c = e[, ...] [WHERE p]``) routes to the versioned-table engine
-        when ``t`` is registered with ``file_type="mura"`` — Spark's
-        parquet source has no mutation path, MuraTable's copy-on-write
-        DML does (sources/table_format.py). Returns a one-row frame
-        ``(version, rows_affected, files_rewritten)``. Registered but
-        non-versioned tables refuse loudly; unregistered names fall
-        through to Spark for its own error.
+        The statements of :attr:`_STATEMENTS` (row-level DML, MERGE,
+        constraint DDL, history/restore/clone, OPTIMIZE/VACUUM) route to
+        the versioned-table engine when their table is registered with
+        ``file_type="mura"`` — Spark's parquet source has no mutation
+        path, MuraTable's copy-on-write commits do
+        (sources/table_format.py). Each returns a small result frame
+        (e.g. ``(version, rows_affected, files_rewritten)`` for DML).
+        Registered but non-versioned tables refuse loudly; unregistered
+        names fall through to Spark for its own error.
 
-        ``MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE
-        SET * | DELETE [WHEN NOT MATCHED THEN INSERT *]`` routes to the
-        copy-on-write :meth:`MuraTable.merge` (full-row actions — the
-        Delta upsert shape; ``s`` is any Spark-resolvable view/table
-        with the target's schema). Returns ``(version, rows_updated,
-        rows_deleted, rows_inserted)``."""
-        dml = self._route_dml(query)
-        if dml is None:
-            dml = self._route_merge(query)
-        if dml is None:
-            dml = self._route_alter(query)
-        if dml is None:
-            dml = self._route_maintenance(query)
-        if dml is None:
-            dml = self._route_table_mgmt(query)
-        if dml is not None:
-            return dml
-        rewritten = re.sub(r"(?i)\bCREATE\s+EXTERNAL\s+TABLE\b",
-                           "CREATE TABLE", query)
-        rewritten = re.sub(r"(?i)\bSTORED\s+AS\s+PARQUET\b",
-                           "USING parquet", rewritten)
-        rewritten = self._rewrite_time_travel(rewritten)
-        rewritten = self._rewrite_table_changes(rewritten)
-        return self.spark.sql(rewritten)
+        ``t VERSION AS OF n``, ``t FOR TAG 'x'`` and
+        ``table_changes('t', from[, to])`` read snapshots and the change
+        feed of registered mura tables inside any query."""
+        routed = self._route(query)
+        if routed is not None:
+            return routed
+        query = re.sub(r"(?i)\bCREATE\s+EXTERNAL\s+TABLE\b",
+                       "CREATE TABLE", query)
+        query = re.sub(r"(?i)\bSTORED\s+AS\s+PARQUET\b",
+                       "USING parquet", query)
+        return self._sql_with_frames(query)
 
     #: a SQL string literal — single-quoted AND double-quoted (Spark's
     #: default parser treats "..." as a string, not an identifier), each
@@ -163,7 +161,7 @@ class MuraSession:
         """``pattern.sub`` that refuses matches STARTING inside a
         string literal — a literal containing the text
         ``t VERSION AS OF 1`` is data, not syntax, and must not be
-        rewritten (nor register temp views as a side effect). Matches
+        rewritten (nor read a snapshot as a side effect). Matches
         starting outside may still span a literal: ``FOR TAG 'x'`` and
         ``table_changes('t', ...)`` legitimately consume one."""
         spans = [m.span() for m in cls._LITERAL_RE.finditer(query)]
@@ -176,73 +174,59 @@ class MuraSession:
 
         return pattern.sub(guarded, query)
 
-    _TT_RE = re.compile(
-        r"(?is)\b([A-Za-z_]\w*)\s+(?:VERSION\s+AS\s+OF\s+(\d+)"
-        r"|FOR\s+TAG\s+'([\w.-]+)')")
+    _FRAME_RE = re.compile(
+        r"(?is)\b(?P<tt>[A-Za-z_]\w*)\s+(?:VERSION\s+AS\s+OF\s+"
+        r"(?P<version>\d+)|FOR\s+TAG\s+'(?P<tag>[\w.-]+)')"
+        r"|\btable_changes\s*\(\s*'(?P<tc>\w+)'\s*,\s*(?P<lo>\d+)"
+        r"(?:\s*,\s*(?P<hi>\d+))?\s*\)")
 
-    def _rewrite_time_travel(self, query: str) -> str:
-        """``FROM t VERSION AS OF 3`` / ``FROM t FOR TAG 'golden'`` over
-        registered mura tables: each occurrence registers the snapshot
-        as a temp view and substitutes its name, so time travel composes
-        with arbitrary SQL (joins across versions included). Matches on
-        non-mura names are left for Spark to reject."""
-        from mura_spark.sources.table_format import MuraTable
+    def _sql_with_frames(self, query: str) -> DataFrame:
+        """Runs ``query`` with each ``t VERSION AS OF n`` / ``t FOR TAG
+        'x'`` (time travel) and ``table_changes('t', from[, to])``
+        (Delta's CDF table-valued function) over a registered mura table
+        bound to its snapshot or :meth:`MuraTable.changes_feed` frame,
+        so both compose with arbitrary SQL (joins across versions
+        included). The frames go in as ``spark.sql`` format arguments:
+        PySpark registers each under a unique view name and drops it
+        once the query is analyzed, so no view outlives the call.
+        Matches on other names are left for Spark to reject."""
+        frames: dict[str, DataFrame] = {}
 
         def sub(m: "re.Match[str]") -> str:
-            name, version, tag = m.group(1), m.group(2), m.group(3)
-            info = self.catalog._tables.get(name) \
-                or self.catalog._tables.get(name.lower())
-            if info is None or info.file_type != "mura":
+            t = self._versioned(m["tt"] or m["tc"])
+            if t is None:
                 return m.group(0)
-            t = MuraTable.load(self.spark, info.location)
-            if version is not None:
-                view = f"{name}__v{version}"
-                df = t.read(version=int(version))
+            key = f"__mura{len(frames)}"
+            if m["tc"]:
+                frames[key] = t.changes_feed(
+                    int(m["lo"]), int(m["hi"]) if m["hi"] else None)
             else:
-                view = f"{name}__tag_{tag}".replace(".", "_") \
-                                           .replace("-", "_")
-                df = t.read(tag=tag)
-            df.createOrReplaceTempView(view)
-            return view
+                frames[key] = self._snapshot(
+                    t, m["tag"] or int(m["version"]))
+            return "{" + key + "}"
 
-        return self._sub_outside_literals(self._TT_RE, sub, query)
+        # literal braces must survive the format call the frames need
+        escaped = query.replace("{", "{{").replace("}", "}}")
+        rewritten = self._sub_outside_literals(self._FRAME_RE, sub, escaped)
+        if not frames:
+            return self.spark.sql(query)
+        return self.spark.sql(rewritten, **frames)
 
-    _TC_RE = re.compile(
-        r"(?is)\btable_changes\s*\(\s*'([\w]+)'\s*,\s*(\d+)"
-        r"(?:\s*,\s*(\d+))?\s*\)")
+    def _versioned(self, name: str) -> MuraTable | None:
+        """``name``'s table when it is registered with
+        ``file_type="mura"``, else None."""
+        info = self.catalog.lookup(name)
+        if info is None or info.file_type != "mura":
+            return None
+        return MuraTable.load(self.spark, info.location)
 
-    def _rewrite_table_changes(self, query: str) -> str:
-        """Delta's CDF table-valued function: ``table_changes('t',
-        from[, to])`` over a registered mura table becomes a temp view
-        of :meth:`MuraTable.changes_feed` (row-level _change_type /
-        _commit_version), composing with arbitrary SQL. Non-mura names
-        are left for Spark to reject."""
-        from mura_spark.sources.table_format import MuraTable
+    @staticmethod
+    def _snapshot(t: MuraTable, ref: int | str) -> DataFrame:
+        """``t`` as of commit ``ref`` (int) or of the tag ``ref`` (str)."""
+        if isinstance(ref, str):
+            return t.read(tag=ref)
+        return t.read(version=ref)
 
-        def sub(m: "re.Match[str]") -> str:
-            name, lo, hi = m.group(1), int(m.group(2)), m.group(3)
-            info = self.catalog._tables.get(name) \
-                or self.catalog._tables.get(name.lower())
-            if info is None or info.file_type != "mura":
-                return m.group(0)
-            t = MuraTable.load(self.spark, info.location)
-            view = f"{name}__changes_{lo}_{hi or 'latest'}"
-            t.changes_feed(lo, int(hi) if hi else None) \
-             .createOrReplaceTempView(view)
-            return view
-
-        return self._sub_outside_literals(self._TC_RE, sub, query)
-
-    _DELETE_RE = re.compile(
-        r"(?is)^\s*DELETE\s+FROM\s+([A-Za-z_][\w]*)"
-        r"(?:\s+WHERE\s+(.+?))?\s*;?\s*$")
-    _UPDATE_RE = re.compile(
-        r"(?is)^\s*UPDATE\s+([A-Za-z_][\w]*)\s+SET\s+(.+?)"
-        r"(?:\s+WHERE\s+(.+?))?\s*;?\s*$")
-    _MERGE_RE = re.compile(
-        r"(?is)^\s*MERGE\s+INTO\s+([A-Za-z_]\w*)(?:\s+AS\s+(\w+))?"
-        r"\s+USING\s+([A-Za-z_]\w*)(?:\s+AS\s+(\w+))?"
-        r"\s+ON\s+(.+?)\s+(WHEN\s+.+?)\s*;?\s*$")
     _WHEN_RE = re.compile(
         r"(?is)WHEN\s+(?:(MATCHED)\s+THEN\s+(UPDATE\s+SET\s+\*|DELETE)"
         r"|(NOT\s+MATCHED\s+BY\s+SOURCE)\s+THEN\s+DELETE"
@@ -278,14 +262,14 @@ class MuraSession:
             keys.append(c1)
         return keys
 
-    def _route_merge(self, query: str):
-        m = self._MERGE_RE.match(query)
-        if m is None:
-            return None
-        target, t_alias, source, s_alias, on, clauses = m.groups()
-        t, info = self._mura_table(target)
-        if t is None:
-            return None  # not ours: let Spark produce its own error
+    def _merge(self, t: MuraTable, m: "re.Match[str]") -> list[tuple]:
+        """``MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE
+        SET * | DELETE [WHEN NOT MATCHED THEN INSERT *] [WHEN NOT
+        MATCHED BY SOURCE THEN DELETE]`` -> the copy-on-write
+        :meth:`MuraTable.merge` (full-row actions — the Delta upsert
+        shape; ``s`` is any Spark-resolvable view/table with the
+        target's schema)."""
+        clauses = m["clauses"]
         when_matched, insert, sync_delete = None, False, False
         pos = 0
         for w in self._WHEN_RE.finditer(clauses):
@@ -317,19 +301,14 @@ class MuraSession:
                 f"cannot parse MERGE clause {clauses[pos:].strip()!r}")
         if when_matched is None and not insert and not sync_delete:
             raise ValueError("MERGE needs at least one WHEN clause")
-        keys = self._parse_merge_keys(on, target, t_alias,
-                                      source, s_alias)
-        stats = t.merge(self.spark.table(source), key_cols=keys,
+        keys = self._parse_merge_keys(m["on"], m["table"], m["t_alias"],
+                                      m["source"], m["s_alias"])
+        stats = t.merge(self.spark.table(m["source"]), key_cols=keys,
                         when_matched=when_matched or "ignore",
                         insert_not_matched=insert,
                         sync_delete=sync_delete)
-        self.catalog.create_external_table(info.name, info.location,
-                                           file_type="mura")
-        return self.spark.createDataFrame(
-            [(t._versions()[-1], stats.updated, stats.deleted,
-              stats.inserted)],
-            "version long, rows_updated long, rows_deleted long, "
-            "rows_inserted long")
+        return [(t._versions()[-1], stats.updated, stats.deleted,
+                 stats.inserted)]
 
     @staticmethod
     def _split_assignments(clause: str) -> dict[str, str]:
@@ -359,159 +338,105 @@ class MuraSession:
             out[m.group(1)] = m.group(2)
         return out
 
-    _ALTER_RE = re.compile(
-        r"(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+"
-        r"(?:ADD\s+CONSTRAINT\s+([\w.-]+)\s+CHECK\s*\((.+)\)"
-        r"|DROP\s+CONSTRAINT\s+([\w.-]+))\s*;?\s*$")
+    def _history(self, t: MuraTable, m) -> list[tuple]:
+        return [(c["version"], c["action"],
+                 float(c["ts"]) if "ts" in c else None, len(c["files"]),
+                 sum(c.get("rows", {}).get(f, 0) for f in c["files"]))
+                for c in t.history()]
 
-    def _route_alter(self, query: str):
-        """``ALTER TABLE t ADD CONSTRAINT n CHECK (expr)`` /
-        ``DROP CONSTRAINT n`` over registered mura tables (Delta's
-        constraint DDL); None when not an ALTER CONSTRAINT (falls
-        through to Spark)."""
-        m = self._ALTER_RE.match(query)
-        if m is None:
-            return None
-        name, add_name, expr, drop_name = m.groups()
-        t, _info = self._mura_table(name)
-        if t is None:
-            return None
-        if add_name:
-            v = t.add_constraint(add_name, expr.strip())
+    def _clone(self, t: MuraTable, m) -> list[tuple]:
+        clone = t.clone(m["location"],
+                        version=int(m["version"]) if m["version"] else None,
+                        tag=m["tag"])
+        self.catalog.create_external_table(m["dst"], m["location"],
+                                           file_type="mura")
+        return [(m["dst"], m["location"], clone.row_count())]
+
+    def _optimize(self, t: MuraTable, m) -> list[tuple]:
+        cluster = [c.strip() for c in m["zorder"].split(",")] \
+            if m["zorder"] else None
+        v = t.compact(cluster_by=cluster)
+        return [(v, len(t._manifest()["files"]))]
+
+    #: The versioned-table statements, as (pattern, result schema,
+    #: commits a new version, handler). The ``table`` group names the
+    #: registered mura table the handler gets; ``_route`` owns the
+    #: lookup, the fall-through, the read-only refusal, the
+    #: re-registration after a commit and the result frame.
+    _STATEMENTS = [
+        (_statement(rf"DELETE\s+FROM\s+{_T}(?:\s+WHERE\s+(?P<where>.+?))?"),
+         "version long, rows_affected long, files_rewritten long", True,
+         lambda self, t, m: [t.delete_where(m["where"] or "true")]),
+        (_statement(rf"UPDATE\s+{_T}\s+SET\s+(?P<set>.+?)"
+                    r"(?:\s+WHERE\s+(?P<where>.+?))?"),
+         "version long, rows_affected long, files_rewritten long", True,
+         lambda self, t, m: [t.update_where(
+             m["where"] or "true", self._split_assignments(m["set"]))]),
+        (_statement(rf"MERGE\s+INTO\s+{_T}(?:\s+AS\s+(?P<t_alias>\w+))?"
+                    r"\s+USING\s+(?P<source>[A-Za-z_]\w*)"
+                    r"(?:\s+AS\s+(?P<s_alias>\w+))?"
+                    r"\s+ON\s+(?P<on>.+?)\s+(?P<clauses>WHEN\s+.+?)"),
+         "version long, rows_updated long, rows_deleted long, "
+         "rows_inserted long", True, _merge),
+        (_statement(rf"ALTER\s+TABLE\s+{_T}\s+ADD\s+CONSTRAINT\s+"
+                    r"(?P<name>[\w.-]+)\s+CHECK\s*\((?P<expr>.+)\)"),
+         "version long, constraint string", True,
+         lambda self, t, m: [(t.add_constraint(m["name"],
+                                               m["expr"].strip()),
+                              m["name"])]),
+        (_statement(rf"ALTER\s+TABLE\s+{_T}\s+DROP\s+CONSTRAINT\s+"
+                    r"(?P<name>[\w.-]+)"),
+         "version long, constraint string", True,
+         lambda self, t, m: [(t.drop_constraint(m["name"]), m["name"])]),
+        (_statement(rf"DESCRIBE\s+HISTORY\s+{_T}"),
+         "version long, action string, ts double, files long, rows long",
+         False, _history),
+        (_statement(rf"RESTORE\s+TABLE\s+{_T}\s+TO\s+VERSION\s+AS\s+OF\s+"
+                    r"(?P<version>\d+)"),
+         "version long, restored_from long", True,
+         lambda self, t, m: [(t.restore(int(m["version"])),
+                              int(m["version"]))]),
+        (_statement(r"CREATE\s+TABLE\s+(?P<dst>[A-Za-z_]\w*)\s+"
+                    rf"(?:SHALLOW\s+)?CLONE\s+{_T}"
+                    r"(?:\s+VERSION\s+AS\s+OF\s+(?P<version>\d+)"
+                    r"|\s+FOR\s+TAG\s+'(?P<tag>[\w.-]+)')?"
+                    r"\s+LOCATION\s+'(?P<location>[^']+)'"),
+         "table string, location string, rows long", False, _clone),
+        (_statement(rf"OPTIMIZE\s+{_T}"
+                    r"(?:\s+ZORDER\s+BY\s*\((?P<zorder>[^)]+)\))?"),
+         "version long, files long", True, _optimize),
+        (_statement(rf"VACUUM\s+{_T}"
+                    r"(?:\s+RETAIN\s+(?P<retain>\d+)\s+VERSIONS)?"),
+         "files_deleted long", False,
+         lambda self, t, m: [(t.vacuum(retain_versions=int(
+             m["retain"] or 2)),)]),
+    ]
+
+    def _route(self, query: str) -> DataFrame | None:
+        """Runs ``query`` when it is one of :attr:`_STATEMENTS` over a
+        registered mura table; None when it is not (Spark runs it, or
+        reports its own error for an unregistered name)."""
+        for pattern, schema, commits, handler in self._STATEMENTS:
+            m = pattern.match(query)
+            if m is not None:
+                break
         else:
-            v = t.drop_constraint(drop_name)
-        return self.spark.createDataFrame(
-            [(v, add_name or drop_name)],
-            "version long, constraint string")
-
-    _HISTORY_RE = re.compile(
-        r"(?is)^\s*DESCRIBE\s+HISTORY\s+([A-Za-z_]\w*)\s*;?\s*$")
-    _RESTORE_RE = re.compile(
-        r"(?is)^\s*RESTORE\s+TABLE\s+([A-Za-z_]\w*)\s+TO\s+VERSION\s+"
-        r"AS\s+OF\s+(\d+)\s*;?\s*$")
-    _CLONE_RE = re.compile(
-        r"(?is)^\s*CREATE\s+TABLE\s+([A-Za-z_]\w*)\s+"
-        r"(?:SHALLOW\s+)?CLONE\s+([A-Za-z_]\w*)"
-        r"(?:\s+VERSION\s+AS\s+OF\s+(\d+)|\s+FOR\s+TAG\s+'([\w.-]+)')?"
-        r"\s+LOCATION\s+'([^']+)'\s*;?\s*$")
-
-    def _mura_table(self, name: str):
-        """Registered mura table handle, or None (caller falls through
-        to Spark); raises for registered-but-read-only tables."""
-        info = self.catalog._tables.get(name) \
-            or self.catalog._tables.get(name.lower())
+            return None
+        info = self.catalog.lookup(m["table"])
         if info is None:
-            return None, None
+            return None
         if info.file_type != "mura":
             raise ValueError(
-                f"{name!r} is a read-only {info.file_type} external "
+                f"{m['table']!r} is a read-only {info.file_type} external "
                 f"table — this statement needs a versioned table "
                 f"(register with file_type='mura')")
-        from mura_spark.sources.table_format import MuraTable
-        return MuraTable.load(self.spark, info.location), info
-
-    def _route_table_mgmt(self, query: str):
-        """``DESCRIBE HISTORY t``, ``RESTORE TABLE t TO VERSION AS OF
-        n``, ``CREATE TABLE dst [SHALLOW] CLONE src [VERSION AS OF n |
-        FOR TAG 'x'] LOCATION 'path'`` (the Delta management DDL);
-        None when no statement matches."""
-        mh = self._HISTORY_RE.match(query)
-        if mh:
-            t, _info = self._mura_table(mh.group(1))
-            if t is None:
-                return None
-            rows = [(m["version"], m["action"],
-                     float(m["ts"]) if "ts" in m else None,
-                     len(m["files"]),
-                     sum(m.get("rows", {}).get(f, 0)
-                         for f in m["files"]))
-                    for m in t.history()]
-            return self.spark.createDataFrame(
-                rows, "version long, action string, ts double, "
-                      "files long, rows long")
-        mr = self._RESTORE_RE.match(query)
-        if mr:
-            t, info = self._mura_table(mr.group(1))
-            if t is None:
-                return None
-            v = t.restore(int(mr.group(2)))
+        rows = handler(self, MuraTable.load(self.spark, info.location), m)
+        if commits:
+            # the catalog's temp view pins the file list seen at
+            # registration; re-register so readers see the new version
             self.catalog.create_external_table(info.name, info.location,
                                                file_type="mura")
-            return self.spark.createDataFrame(
-                [(v, int(mr.group(2)))],
-                "version long, restored_from long")
-        mc = self._CLONE_RE.match(query)
-        if mc:
-            dst, src, ver, tag, location = mc.groups()
-            t, _info = self._mura_table(src)
-            if t is None:
-                return None
-            clone = t.clone(location,
-                            version=int(ver) if ver else None,
-                            tag=tag)
-            self.catalog.create_external_table(dst, location,
-                                               file_type="mura")
-            return self.spark.createDataFrame(
-                [(dst, location, clone.row_count())],
-                "table string, location string, rows long")
-        return None
-
-    _OPTIMIZE_RE = re.compile(
-        r"(?is)^\s*OPTIMIZE\s+([A-Za-z_]\w*)"
-        r"(?:\s+ZORDER\s+BY\s*\(([^)]+)\))?\s*;?\s*$")
-    _VACUUM_RE = re.compile(
-        r"(?is)^\s*VACUUM\s+([A-Za-z_]\w*)"
-        r"(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?\s*;?\s*$")
-
-    def _route_maintenance(self, query: str):
-        """``OPTIMIZE t [ZORDER BY (a, b)]`` -> compaction (Z-order
-        clustered when asked) and ``VACUUM t [RETAIN n VERSIONS]`` ->
-        GC, over registered mura tables (the Delta maintenance DDL);
-        None when neither matches."""
-        mo = self._OPTIMIZE_RE.match(query)
-        mv = None if mo else self._VACUUM_RE.match(query)
-        if mo is None and mv is None:
-            return None
-        t, info = self._mura_table((mo or mv).group(1))
-        if t is None:
-            return None
-        if mo:
-            cluster = [c.strip() for c in mo.group(2).split(",")] \
-                if mo.group(2) else None
-            v = t.compact(cluster_by=cluster)
-            self.catalog.create_external_table(
-                info.name, info.location, file_type="mura")
-            return self.spark.createDataFrame(
-                [(v, len(t._manifest()["files"]))],
-                "version long, files long")
-        retain = int(mv.group(2)) if mv.group(2) else 2
-        deleted = t.vacuum(retain_versions=retain)
-        return self.spark.createDataFrame(
-            [(deleted,)], "files_deleted long")
-
-    def _route_dml(self, query: str):
-        """DELETE/UPDATE statements over registered mura tables; None
-        when the statement is not DML (caller falls through to Spark)."""
-        md = self._DELETE_RE.match(query)
-        mu = None if md else self._UPDATE_RE.match(query)
-        if md is None and mu is None:
-            return None
-        t, info = self._mura_table((md or mu).group(1))
-        if t is None:
-            return None  # not ours: let Spark produce its own error
-        if md:
-            v, n, files = t.delete_where(md.group(2) or "true")
-        else:
-            v, n, files = t.update_where(
-                mu.group(3) or "true",
-                self._split_assignments(mu.group(2)))
-        # the catalog's temp view pins the file list seen at
-        # registration; re-register so readers see the new version
-        self.catalog.create_external_table(info.name, info.location,
-                                           file_type="mura")
-        return self.spark.createDataFrame(
-            [(v, n, files)],
-            "version long, rows_affected long, files_rewritten long")
+        return self.spark.createDataFrame(rows, schema)
 
     # -- DDL entry point (reference queryplanner.rs:73-95) --
     def create_external_table(self, name: str, location: str,
@@ -534,16 +459,12 @@ class MuraSession:
         is a commit number, or a tag name (str) pinned with
         ``MuraTable.tag`` — the reproducible-snapshot handle vacuum
         honors. Returns the snapshot exactly as committed."""
-        info = self.catalog._tables.get(name)
-        if info is None or info.file_type != "mura":
+        t = self._versioned(name)
+        if t is None:
             raise ValueError(
                 f"{name!r} is not a registered mura versioned table "
                 f"(register with file_type='mura' to time travel)")
-        from mura_spark.sources.table_format import MuraTable
-        t = MuraTable.load(self.spark, info.location)
-        if isinstance(version, str):
-            return t.read(tag=version)
-        return t.read(version)
+        return self._snapshot(t, version)
 
     def stop(self) -> None:
         self.spark.stop()

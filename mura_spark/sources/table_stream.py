@@ -52,25 +52,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
 from pyspark.sql.types import StructType
 
 from mura_spark.sources import table_format as tf
-from mura_spark.sources.merge import HIVE_NULL
-
-
-def _typed_partition_value(raw: str | None, dtype):
-    """Parse a hive path partition value into the schema's type (the
-    executor-side twin of Spark's partition-column inference)."""
-    if raw is None:
-        return None
-    t = dtype.simpleString()
-    if t in ("tinyint", "smallint", "int", "bigint"):
-        return int(raw)
-    if t in ("float", "double"):
-        return float(raw)
-    if t == "boolean":
-        return raw.lower() == "true"
-    if t == "date":
-        import datetime
-        return datetime.date.fromisoformat(raw)
-    return raw  # string and friends
+from mura_spark.sources.merge import HIVE_NULL, _typed_partition_dir_value
 
 
 class _FilesPartition(InputPartition):
@@ -130,8 +112,9 @@ def _read_partition(partition, schema: StructType):
     for f in schema.fields:
         at = to_arrow_type(f.dataType)
         if f.name in partition.consts:
-            v = _typed_partition_value(partition.consts[f.name],
-                                       f.dataType)
+            v = partition.consts[f.name]
+            if isinstance(v, str):  # hive path value; CDF stamps are typed
+                v = _typed_partition_dir_value(v, f.dataType)
             arrays.append(pa.array([v] * n, type=at))
         elif f.name in tbl.column_names:
             arrays.append(tbl.column(f.name).cast(at).combine_chunks())
@@ -232,7 +215,13 @@ class MuraTableDataSource(DataSource):
 
 
 def register(spark) -> None:
+    """Register the ``mura_table`` format for ``spark``'s readers and
+    writers, from the calling thread."""
     spark.dataSource.register(MuraTableDataSource)
+    # the streaming writer resolves Python data sources through the JVM
+    # thread's active session, which a fresh driver thread lacks
+    # (DATA_SOURCE_NOT_FOUND at start())
+    spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
 
 
 # -------------------------------------------------------------- sink

@@ -18,19 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mura_spark.suite.common import dsum, sql_tokens, table
+from mura_spark.suite.common import dsum, registry, sql_tokens, table
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
 
 from mura_spark.suite.stats_q import _AB_BUCKET  # shared A/B hash bucket
 

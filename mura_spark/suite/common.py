@@ -67,6 +67,27 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                               ns_cols)
 
 
+def registry():
+    """A suite module's ``(SPARK_QUERIES, ORACLE_SQL, q)``: ``@q(name,
+    oracle=None)`` registers the decorated query (and its DuckDB oracle
+    SQL) under ``name`` and raises ``ValueError`` on a name registered
+    twice, as the cross-module merge in ``suite/__init__.py`` does."""
+    spark_queries: dict = {}
+    oracle_sql: dict[str, str] = {}
+
+    def q(name, oracle=None):
+        if name in spark_queries:
+            raise ValueError(f"duplicate query name {name!r}")
+
+        def deco(fn):
+            spark_queries[name] = fn
+            if oracle is not None:
+                oracle_sql[name] = oracle
+            return fn
+        return deco
+    return spark_queries, oracle_sql, q
+
+
 def dsum(col: str | Column, scale: int = 2) -> Column:
     """Order-independent exact sum of a ≤``scale``-decimal double, as double."""
     c = F.col(col) if isinstance(col, str) else col

@@ -17,19 +17,10 @@ from pyspark.sql import functions as F
 from mura_spark.functions import text as TX
 from mura_spark.functions.hashing import SIMHASH_BITS
 from mura_spark.operators import dedup
-from mura_spark.suite.common import sql_hash48, sql_shingles, sql_tokens, table
+from mura_spark.suite.common import (registry, sql_hash48, sql_shingles,
+                                     sql_tokens, table)
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
-
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
 
 _SHINGLES = sql_shingles(sql_tokens("text"), 3)

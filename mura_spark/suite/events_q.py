@@ -9,19 +9,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mura_spark.streaming import windows as W
-from mura_spark.suite.common import dsum, sql_dsum, table
+from mura_spark.suite.common import dsum, registry, sql_dsum, table
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
-
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
 
 @q("events_window_hourly",

@@ -16,19 +16,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mura_spark.multimodal import binary_ops as MM
-from mura_spark.suite.common import table
+from mura_spark.suite.common import registry, table
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
-
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
 
 def _null_int():

@@ -11,19 +11,9 @@ from pyspark.sql import functions as F
 
 from mura_spark.functions import text as TX
 from mura_spark.operators import packing
-from mura_spark.suite.common import sql_hash48, sql_tokens, table
+from mura_spark.suite.common import registry, sql_hash48, sql_tokens, table
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
-
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
 
 _BUDGET = 256

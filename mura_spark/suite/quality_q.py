@@ -14,21 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mura_spark.suite.common import sql_tokens, table
+from mura_spark.suite.common import registry, sql_tokens, table
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
-
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
-
-
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
 
 _TOKS = sql_tokens("text")

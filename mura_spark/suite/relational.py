@@ -14,20 +14,10 @@ from pyspark.sql import types as T
 
 from mura_spark.operators.topk import topk, topk_per_group
 from mura_spark.plan import PlanBuilder
-from mura_spark.suite.common import (davg, dsum, sql_davg, sql_dsum,
-                                     sql_tokens, table)
+from mura_spark.suite.common import (davg, dsum, registry, sql_davg,
+                                     sql_dsum, sql_tokens, table)
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
-
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
 
 # ---------------------------------------------------------------------------

@@ -13,19 +13,9 @@ from pyspark.sql import functions as F
 
 from mura_spark.operators.skew import salted_join
 from mura_spark.sources import text_formats as TF
-from mura_spark.suite.common import sql_dsum, table
+from mura_spark.suite.common import registry, sql_dsum, table
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
-
-
-def q(name, oracle=None):
-    def deco(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
+SPARK_QUERIES, ORACLE_SQL, q = registry()
 
 
 @q("csv_roundtrip", "SELECT n_nationkey, n_name, n_regionkey FROM nation")
@@ -617,8 +607,8 @@ def view_incremental_refresh(spark, sf):
    "FROM base WHERE o_orderkey % 3 = 0 AND o_orderkey % 2 = 0), "
    "CAST(NULL AS DOUBLE)")
 def merge_upsert_sql(spark, sf):
-    """SQL ``MERGE INTO`` through the session's DML router
-    (``session.py::_route_merge`` — the upsert verb mura's CreateTable
+    """SQL ``MERGE INTO`` through the session's statement table
+    (``MuraSession.sql`` — the upsert verb mura's CreateTable
     IR implies but never wired, reference
     ``src/planner/logicalplan.rs:260-272``): register a versioned
     table holding the 2/3 o_orderkey slice of orders, MERGE the

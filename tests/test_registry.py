@@ -15,6 +15,8 @@ import json
 import os
 import re
 
+import pytest
+
 DRIVER_WINDOW = 50
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -149,3 +151,13 @@ def test_bench_exclusions_partition_the_registry():
     assert len(benched) == len(bench.BENCH_QUERIES)
     assert not benched & bench.BENCH_EXCLUDED
     assert benched | bench.BENCH_EXCLUDED == reg
+
+
+def test_module_registrar_refuses_a_duplicate_name():
+    from mura_spark.suite.common import registry
+    spark_queries, oracle_sql, q = registry()
+    q("dup_q", "SELECT 1")(lambda spark, sf: None)
+    with pytest.raises(ValueError, match="dup_q"):
+        q("dup_q")(lambda spark, sf: None)
+    assert list(spark_queries) == ["dup_q"]
+    assert oracle_sql == {"dup_q": "SELECT 1"}

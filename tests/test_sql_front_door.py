@@ -1,0 +1,82 @@
+"""``MuraSession.sql``'s front door: every routed statement, time travel
+and ``table_changes`` resolve registered names the way Spark resolves
+the temp view (case-insensitively), and no query leaves a view behind."""
+
+from __future__ import annotations
+
+import pytest
+
+from mura_spark.sources.table_format import MuraTable
+
+
+def _df(spark, rows):
+    return spark.createDataFrame(rows, "k long, val string")
+
+
+def _views(spark):
+    return sorted(t.name for t in spark.catalog.listTables())
+
+
+def test_every_statement_resolves_a_mixed_case_name(spark, tmp_path):
+    from mura_spark.session import MuraSession
+    ms = MuraSession(spark)
+    path = str(tmp_path / "t")
+    t = MuraTable.create(spark, path, _df(spark, [(1, "a"), (2, "b"),
+                                                   (3, "c")]), cdf=True)
+    t.tag("gold")
+    t.append(_df(spark, [(4, "d")]))  # version 2
+    ms.create_external_table("Orders", path, file_type="mura")
+    ms.catalog.register_dataframe(
+        "fd_src", _df(spark, [(3, "C"), (5, "e")]))
+    assert ms.catalog.tables() == ["Orders", "fd_src"]
+
+    reads = [
+        ("SELECT count(*) AS n FROM orders VERSION AS OF 1", {"n": 3}),
+        ("SELECT count(*) AS n FROM orders FOR TAG 'gold'", {"n": 3}),
+        ("SELECT count(*) AS n FROM table_changes('orders', 1)", {"n": 1}),
+        ("SELECT '{x}' AS s FROM orders VERSION AS OF 1 LIMIT 1",
+         {"s": "{x}"}),
+        ("SELECT cur.k FROM orders cur LEFT ANTI JOIN "
+         "ORDERS VERSION AS OF 1 old ON cur.k = old.k", {"k": 4}),
+    ]
+    before = _views(spark)
+    for sql, want in reads:
+        row = ms.sql(sql).first()
+        assert {c: row[c] for c in want} == want, sql
+    assert _views(spark) == before
+    assert ms.table_at("orders", 1).count() == 3
+    assert ms.table_at("ORDERS", "gold").count() == 3
+
+    clone = str(tmp_path / "dev")
+    statements = [
+        ("DELETE FROM orders WHERE k = 1",
+         {"version": 3, "rows_affected": 1}),
+        ("UPDATE orders SET val = 'z' WHERE k = 2",
+         {"version": 4, "rows_affected": 1}),
+        ("MERGE INTO orders USING fd_src ON orders.k = fd_src.k "
+         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+         {"version": 5, "rows_updated": 1, "rows_inserted": 1}),
+        ("SELECT count(*) AS n FROM Orders", {"n": 4}),
+        ("ALTER TABLE orders ADD CONSTRAINT k_pos CHECK (k > 0)",
+         {"version": 6, "constraint": "k_pos"}),
+        ("ALTER TABLE orders DROP CONSTRAINT k_pos",
+         {"version": 7, "constraint": "k_pos"}),
+        ("DESCRIBE HISTORY orders", {"version": 1, "action": "create"}),
+        ("RESTORE TABLE orders TO VERSION AS OF 2",
+         {"version": 8, "restored_from": 2}),
+        ("SELECT count(*) AS n FROM orders WHERE k = 1", {"n": 1}),
+        (f"CREATE TABLE orders_dev CLONE orders VERSION AS OF 5 "
+         f"LOCATION '{clone}'", {"table": "orders_dev", "rows": 4}),
+        ("OPTIMIZE orders", {"version": 9, "files": 1}),
+        ("VACUUM orders RETAIN 1 VERSIONS", {}),
+    ]
+    for sql, want in statements:
+        row = ms.sql(sql).first()
+        assert {c: row[c] for c in want} == want, sql
+    assert ms.table("orders_dev").count() == 4
+    # VACUUM ran on the table: version 2 is gone, the tagged one kept
+    with pytest.raises(ValueError):
+        ms.table_at("orders", 2)
+    assert ms.table_at("orders", "gold").count() == 3
+    assert sorted(ms.table("Orders").collect()) == sorted(
+        ms.table_at("orders", 9).collect())

@@ -207,3 +207,65 @@ def test_stream_sink_maintains_bloom_filters(registered, tmp_path):
         len(m["files"]) == 1
     assert hit.where("val = 'v7'").count() == 1
     assert dst.read(lookup={"val": "nope"}).count() == 0
+
+
+@pytest.mark.parametrize("ptype, values", [
+    ("int", [1, 2]),
+    ("double", [1e-07, 2.5]),
+    ("decimal(10,2)", ["1.25", "-3.50"]),
+    ("timestamp", ["2024-01-02 03:04:05", "2024-06-30 23:59:59.5"]),
+    ("date", ["2024-01-02", "2024-06-30"]),
+    ("string", ["a b", "x:y"]),
+])
+def test_partition_value_types_read_like_the_table(registered, tmp_path,
+                                                   ptype, values):
+    """Every partition column type (and the null partition) decodes
+    from its hive path value exactly as ``MuraTable.read()`` types it,
+    through the batch reader and a change-feed stream."""
+    spark = registered
+    path = str(tmp_path / "t")
+    rows = [(i, v, f"r{i}") for i, v in enumerate(values + [None])]
+    df = (spark.createDataFrame(rows, "k long, p string, val string")
+          .selectExpr("k", f"CAST(p AS {ptype}) AS p", "val"))
+    want = sorted(MuraTable.create(spark, path, df, partition_cols=["p"],
+                                   cdf=True).read().collect())
+    assert len(want) == 3 and want[2].p is None
+    batch = spark.read.format("mura_table").option("path", path).load()
+    assert sorted(batch.select("k", "p", "val").collect()) == want
+    out = str(tmp_path / "feed")
+    (spark.readStream.format("mura_table").option("path", path)
+     .option("readChangeFeed", "true").load()
+     .writeStream.format("parquet").option("path", out)
+     .option("checkpointLocation", str(tmp_path / "ckpt"))
+     .trigger(availableNow=True).start().awaitTermination(120))
+    feed = spark.read.parquet(out)
+    assert sorted(feed.select("k", "p", "val").collect()) == want
+
+
+def test_sink_starts_from_a_fresh_driver_thread(spark, tmp_path):
+    """``register`` then a ``mura_table`` sink pass works on a driver
+    thread that never touched the session before (the oracle sweep's
+    pool threads)."""
+    import threading
+
+    from mura_spark.sources.table_stream import register
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    MuraTable.create(spark, src, _df(spark, [(1, 1, "a")]))
+    MuraTable.create(spark, dst, _df(spark, []))
+    errors = []
+
+    def run():
+        try:
+            register(spark)
+            (spark.readStream.format("mura_table").option("path", src)
+             .load().writeStream.format("mura_table").option("path", dst)
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .trigger(availableNow=True).start().awaitTermination(120))
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    th = threading.Thread(target=run)
+    th.start()
+    th.join(300)
+    assert not th.is_alive() and errors == []
+    assert [r.k for r in MuraTable.load(spark, dst).read().collect()] == [1]
