@@ -14,11 +14,14 @@ against an explicit DDL schema). Catalyst then gets predicate pushdown,
 column pruning, and partition pruning on every scan for free — the
 optimizations the reference reserved slots for but never wired
 (``Scan.projection`` hardcoded ``None`` at ``queryplanner.rs:58``).
+
+A versioned (``file_type="mura"``) name's view binds one table version;
+:meth:`Catalog.lookup` re-binds it at the head once any commit moved it.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -81,10 +84,13 @@ def _fix_ns_timestamps(df: DataFrame, ns_cols: list[str]) -> DataFrame:
 
 @dataclass
 class TableInfo:
+    """A registered name. For a ``mura`` table, ``version`` is the commit
+    its view (and ``schema``) bound; lookup re-binds it at the head."""
     name: str
     location: str
     file_type: str
     schema: StructType
+    version: int | None = None
 
 
 class Catalog:
@@ -98,7 +104,22 @@ class Catalog:
         self._tables: dict[str, TableInfo] = {}  # keyed by lower-cased name
 
     def lookup(self, name: str) -> TableInfo | None:
-        return self._tables.get(name.lower())
+        """``name``'s entry, a mura table re-bound at its head first."""
+        info = self._tables.get(name.lower())
+        if info is not None and info.file_type == "mura":
+            info = self._bind(info)
+        return info
+
+    def _bind(self, info: TableInfo) -> TableInfo:
+        """``info``'s mura table registered at its head version."""
+        from mura_spark.sources.table_format import MuraTable
+        t = MuraTable(self.spark, info.location)
+        head = t._latest()
+        if head == info.version:
+            return info
+        df = t.read(version=head)
+        return self._register(replace(info, schema=df.schema, version=head),
+                              df)
 
     def create_external_table(self, name: str, location: str, schema=None,
                               file_type: str = "parquet",
@@ -117,15 +138,13 @@ class Catalog:
                 f"only PARQUET (src/parser/mod.rs:21-24); this engine adds "
                 f"{sorted(_SUPPORTED_FILE_TYPES - {'parquet'})}")
         if ft == "mura":  # versioned table (sources/table_format.py)
-            from mura_spark.sources.table_format import MuraTable
-            df = MuraTable.load(self.spark, location).read()
-        else:
-            reader = self.spark.read.format(ft)
-            if options:
-                reader = reader.options(**options)
-            if schema is not None:
-                reader = reader.schema(schema)
-            df = reader.load(location)
+            return self._bind(TableInfo(name, location, ft, None))
+        reader = self.spark.read.format(ft)
+        if options:
+            reader = reader.options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.load(location)
         if ft == "parquet" and schema is None:
             df = _fix_ns_timestamps(df, _ns_timestamp_columns(location))
         return self._register(TableInfo(name, location, ft, df.schema), df)

@@ -136,7 +136,10 @@ class MuraSession:
 
         ``t VERSION AS OF n``, ``t FOR TAG 'x'`` and
         ``table_changes('t', from[, to])`` read snapshots and the change
-        feed of registered mura tables inside any query."""
+        feed of registered mura tables inside any query. The registered
+        names it mentions are looked up first: a moved one re-binds."""
+        for name in {w.lower() for w in re.findall(r"[A-Za-z_]\w*", query)}:
+            self.catalog.lookup(name)
         routed = self._route(query)
         if routed is not None:
             return routed
@@ -359,17 +362,17 @@ class MuraSession:
         return [(v, len(t._manifest()["files"]))]
 
     #: The versioned-table statements, as (pattern, result schema,
-    #: commits a new version, handler). The ``table`` group names the
-    #: registered mura table the handler gets; ``_route`` owns the
-    #: lookup, the fall-through, the read-only refusal, the
-    #: re-registration after a commit and the result frame.
+    #: handler). The ``table`` group names the registered mura table the
+    #: handler gets; ``_route`` owns the lookup, the fall-through, the
+    #: read-only refusal and the result frame. A commit needs nothing
+    #: further: the next lookup re-binds the name at the new head.
     _STATEMENTS = [
         (_statement(rf"DELETE\s+FROM\s+{_T}(?:\s+WHERE\s+(?P<where>.+?))?"),
-         "version long, rows_affected long, files_rewritten long", True,
+         "version long, rows_affected long, files_rewritten long",
          lambda self, t, m: [t.delete_where(m["where"] or "true")]),
         (_statement(rf"UPDATE\s+{_T}\s+SET\s+(?P<set>.+?)"
                     r"(?:\s+WHERE\s+(?P<where>.+?))?"),
-         "version long, rows_affected long, files_rewritten long", True,
+         "version long, rows_affected long, files_rewritten long",
          lambda self, t, m: [t.update_where(
              m["where"] or "true", self._split_assignments(m["set"]))]),
         (_statement(rf"MERGE\s+INTO\s+{_T}(?:\s+AS\s+(?P<t_alias>\w+))?"
@@ -377,23 +380,23 @@ class MuraSession:
                     r"(?:\s+AS\s+(?P<s_alias>\w+))?"
                     r"\s+ON\s+(?P<on>.+?)\s+(?P<clauses>WHEN\s+.+?)"),
          "version long, rows_updated long, rows_deleted long, "
-         "rows_inserted long", True, _merge),
+         "rows_inserted long", _merge),
         (_statement(rf"ALTER\s+TABLE\s+{_T}\s+ADD\s+CONSTRAINT\s+"
                     r"(?P<name>[\w.-]+)\s+CHECK\s*\((?P<expr>.+)\)"),
-         "version long, constraint string", True,
+         "version long, constraint string",
          lambda self, t, m: [(t.add_constraint(m["name"],
                                                m["expr"].strip()),
                               m["name"])]),
         (_statement(rf"ALTER\s+TABLE\s+{_T}\s+DROP\s+CONSTRAINT\s+"
                     r"(?P<name>[\w.-]+)"),
-         "version long, constraint string", True,
+         "version long, constraint string",
          lambda self, t, m: [(t.drop_constraint(m["name"]), m["name"])]),
         (_statement(rf"DESCRIBE\s+HISTORY\s+{_T}"),
          "version long, action string, ts double, files long, rows long",
-         False, _history),
+         _history),
         (_statement(rf"RESTORE\s+TABLE\s+{_T}\s+TO\s+VERSION\s+AS\s+OF\s+"
                     r"(?P<version>\d+)"),
-         "version long, restored_from long", True,
+         "version long, restored_from long",
          lambda self, t, m: [(t.restore(int(m["version"])),
                               int(m["version"]))]),
         (_statement(r"CREATE\s+TABLE\s+(?P<dst>[A-Za-z_]\w*)\s+"
@@ -401,13 +404,13 @@ class MuraSession:
                     r"(?:\s+VERSION\s+AS\s+OF\s+(?P<version>\d+)"
                     r"|\s+FOR\s+TAG\s+'(?P<tag>[\w.-]+)')?"
                     r"\s+LOCATION\s+'(?P<location>[^']+)'"),
-         "table string, location string, rows long", False, _clone),
+         "table string, location string, rows long", _clone),
         (_statement(rf"OPTIMIZE\s+{_T}"
                     r"(?:\s+ZORDER\s+BY\s*\((?P<zorder>[^)]+)\))?"),
-         "version long, files long", True, _optimize),
+         "version long, files long", _optimize),
         (_statement(rf"VACUUM\s+{_T}"
                     r"(?:\s+RETAIN\s+(?P<retain>\d+)\s+VERSIONS)?"),
-         "files_deleted long", False,
+         "files_deleted long",
          lambda self, t, m: [(t.vacuum(retain_versions=int(
              m["retain"] or 2)),)]),
     ]
@@ -416,7 +419,7 @@ class MuraSession:
         """Runs ``query`` when it is one of :attr:`_STATEMENTS` over a
         registered mura table; None when it is not (Spark runs it, or
         reports its own error for an unregistered name)."""
-        for pattern, schema, commits, handler in self._STATEMENTS:
+        for pattern, schema, handler in self._STATEMENTS:
             m = pattern.match(query)
             if m is not None:
                 break
@@ -431,11 +434,6 @@ class MuraSession:
                 f"table — this statement needs a versioned table "
                 f"(register with file_type='mura')")
         rows = handler(self, MuraTable.load(self.spark, info.location), m)
-        if commits:
-            # the catalog's temp view pins the file list seen at
-            # registration; re-register so readers see the new version
-            self.catalog.create_external_table(info.name, info.location,
-                                               file_type="mura")
         return self.spark.createDataFrame(rows, schema)
 
     # -- DDL entry point (reference queryplanner.rs:73-95) --

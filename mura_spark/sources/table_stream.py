@@ -463,13 +463,18 @@ def replicate_changes(spark, source_path: str, target, keys: list[str],
     idempotent ``txn`` mark keyed by (query, micro-batch), so a
     redelivered batch (crash anywhere between the commits and the
     checkpoint write) skips whatever already landed and applies only
-    what didn't.
+    what didn't. The query is Spark's persistent id from the checkpoint,
+    so a wiped checkpoint's batch 0 is a new query's, not a replay.
 
     Returns the started ``StreamingQuery`` (``available_now=True``
     drains the backlog and stops — the batch-job replication shape;
     ``False`` runs continuously)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
+
+    def app(kind: str) -> str:
+        with open(os.path.join(checkpoint, "metadata")) as f:
+            return f"cdc-{kind}:{json.load(f)['id']}"
 
     def apply_batch(feed, batch_id: int) -> None:
         # newest commit wins; WITHIN one commit a surviving row outranks
@@ -491,11 +496,11 @@ def replicate_changes(spark, source_path: str, target, keys: list[str],
                 .drop("_change_type", "_commit_version"))
         if ups.limit(1).count():
             target.merge(ups, key_cols=keys, when_matched="update",
-                         txn=(f"cdc-upsert:{checkpoint}", batch_id))
+                         txn=(app("upsert"), batch_id))
         if dels.limit(1).count():
             target.merge(dels, key_cols=keys, when_matched="delete",
                          insert_not_matched=False,
-                         txn=(f"cdc-delete:{checkpoint}", batch_id))
+                         txn=(app("delete"), batch_id))
 
     reader = (spark.readStream.format("mura_table")
               .option("path", source_path)

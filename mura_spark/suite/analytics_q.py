@@ -808,8 +808,7 @@ def events_ewma_daily(spark, sf):
     r = (d.select("day", "x",
                   F.row_number().over(Window.orderBy("day")).alias("rn"))
           .localCheckpoint(eager=True))
-    r.createOrReplaceTempView("__mura_ewma_rollup")
-    return spark.sql(_EWMA_SQL.format(rollup="__mura_ewma_rollup"))
+    return spark.sql(_EWMA_SQL.format(rollup="{rollup}"), rollup=r)
 
 
 

@@ -512,12 +512,11 @@ def agg_udaf_gmean(spark, sf):
     (functions.registry._gmean_udf)."""
     from mura_spark.functions.registry import register_all
     register_all(spark)
-    (table(spark, sf, "events").filter(F.col("value") > 0)
-     .createOrReplaceTempView("mura_ev_pos"))
     return spark.sql(
         "SELECT event_type, CAST(floor(mura_gmean(CAST(value AS DOUBLE)) "
         "* 1000000 + 0.5) AS BIGINT) AS gmean_micro "
-        "FROM mura_ev_pos GROUP BY event_type")
+        "FROM {pos} GROUP BY event_type",
+        pos=table(spark, sf, "events").filter(F.col("value") > 0))
 
 
 @q("events_winsorize_by_type",
@@ -987,13 +986,12 @@ def events_count_distinct_rollup(spark, sf):
     exact daily-uniques-plus-total viable at 100 TB (the mergeable-
     sketch alternative is agg_bitmap_distinct / sketch_distinct_users).
     grouping() disambiguates the total row from a NULL day."""
-    ev = table(spark, sf, "events")
-    ev.createOrReplaceTempView("mura_cdr_events")
     return spark.sql(
         "SELECT date_trunc('day', ts) AS day, COUNT(*) AS n_events, "
         "COUNT(DISTINCT user_id) AS n_users, "
         "CAST(grouping(date_trunc('day', ts)) AS INT) AS gid "
-        "FROM mura_cdr_events GROUP BY ROLLUP(date_trunc('day', ts))")
+        "FROM {ev} GROUP BY ROLLUP(date_trunc('day', ts))",
+        ev=table(spark, sf, "events"))
 
 
 # ------------------------------------------------------- round-6q additions
@@ -1525,11 +1523,10 @@ def events_holt_forecast(spark, sf):
                .select((F.row_number().over(Window.orderBy("day")) - 1)
                        .cast("bigint").alias("i"), "y")
                .localCheckpoint(eager=True))
-    daily.createOrReplaceTempView("__mura_holt_daily")
-    sql = _HOLT_SQL.format(daily="__mura_holt_daily").replace(
+    sql = _HOLT_SQL.format(daily="{daily}").replace(
         "(SELECT unnest([0, 1, 2, 3, 4, 5, 6, 7]) AS k) ks",
         "(SELECT explode(array(0, 1, 2, 3, 4, 5, 6, 7)) AS k) ks")
-    return spark.sql(sql)
+    return spark.sql(sql, daily=daily)
 
 
 @q("events_markov_baseline_acc",

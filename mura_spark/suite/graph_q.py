@@ -123,7 +123,6 @@ def graph_bfs_reach(spark, sf):
     li = table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     edges = (graph.cooccurrence_edges(li, "l_orderkey", "l_partkey")
                   .localCheckpoint(eager=True))
-    edges.createOrReplaceTempView("__mura_bfs_edges")
     # SHUFFLE_HASH(w): hash-build the (small) frontier, stream the
     # edges — measured idle, 5-trial interleaved medians at sf0.1:
     # no hint 4.94 s (the per-iteration replan against the
@@ -133,7 +132,7 @@ def graph_bfs_reach(spark, sf):
     # 100 TB; shuffle-hash stays partition-bounded at any graph size
     # (OPTIMIZATION_r10.md change 10).
     return spark.sql(_BFS_SQL.format(
-        edges="__mura_bfs_edges", hint="/*+ SHUFFLE_HASH(w) */ "))
+        edges="{edges}", hint="/*+ SHUFFLE_HASH(w) */ "), edges=edges)
 
 
 # ------------------------------------------------------- round-5ff addition

@@ -204,7 +204,9 @@ def create_table_roundtrip(spark, sf):
     from mura_spark.session import MuraSession
     ms = MuraSession(spark)
     ms.create_external_table("suite_supplier", f"{sf}/supplier.parquet")
-    return ms.sql("SELECT s_suppkey, s_name, s_acctbal FROM suite_supplier")
+    df = ms.sql("SELECT s_suppkey, s_name, s_acctbal FROM suite_supplier")
+    ms.catalog.drop("suite_supplier")
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -599,14 +601,13 @@ def string_functions(spark, sf):
 def agg_grouping_sets(spark, sf):
     """Explicit GROUPING SETS with a grouping-id disambiguator (NULL group
     keys from the subtotal rows vs genuine NULLs)."""
-    table(spark, sf, "lineitem").createOrReplaceTempView("gs_lineitem")
     return spark.sql(
         "SELECT l_returnflag, l_linestatus, COUNT(*) AS n, "
         "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, "
         "CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS INT) "
-        "AS gid FROM gs_lineitem "
+        "AS gid FROM {li} "
         "GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), "
-        "(l_returnflag), ())")
+        "(l_returnflag), ())", li=table(spark, sf, "lineitem"))
 
 
 @q("join_full_outer",
@@ -837,10 +838,8 @@ def join_lateral_topn(spark, sf):
     LATERAL + LIMIT into a ranked window under the hood, so the
     physical plan is the scalable per-key top-k, not a per-row
     re-execution. Deterministic via the custkey tiebreak."""
-    table(spark, sf, "nation").createOrReplaceTempView("__mura_lat_n")
-    table(spark, sf, "customer").createOrReplaceTempView("__mura_lat_c")
-    return spark.sql(_LATERAL_SQL.format(nation="__mura_lat_n",
-                                         customer="__mura_lat_c"))
+    return spark.sql(_LATERAL_SQL, nation=table(spark, sf, "nation"),
+                     customer=table(spark, sf, "customer"))
 
 
 @q("join_null_safe",
@@ -1147,22 +1146,19 @@ def subquery_not_in(spark, sf):
     the NOT IN as a null-aware anti join (broadcast-only by design —
     the nullable side must be visible in full); the subquery is
     dimension-sized, so that's the right plan at any fact scale."""
-    c = table(spark, sf, "customer")
-    o = table(spark, sf, "orders")
-    (c.where(F.col("c_mktsegment") == "BUILDING")
-      .select(F.when(F.col("c_custkey") % 97 == 0, None)
-               .otherwise(F.col("c_custkey")).alias("k"))
-      .union(spark.range(1).select(
-          F.lit(None).cast("bigint").alias("k")))
-      .createOrReplaceTempView("mura_sq_notin_sub"))
-    o.createOrReplaceTempView("mura_sq_notin_orders")
+    sub = (table(spark, sf, "customer")
+           .where(F.col("c_mktsegment") == "BUILDING")
+           .select(F.when(F.col("c_custkey") % 97 == 0, None)
+                    .otherwise(F.col("c_custkey")).alias("k"))
+           .union(spark.range(1).select(
+               F.lit(None).cast("bigint").alias("k"))))
     return spark.sql(
-        "SELECT (SELECT COUNT(*) FROM mura_sq_notin_orders "
-        "WHERE o_custkey NOT IN (SELECT k FROM mura_sq_notin_sub)) "
+        "SELECT (SELECT COUNT(*) FROM {orders} "
+        "WHERE o_custkey NOT IN (SELECT k FROM {sub})) "
         "AS n_not_in, "
-        "(SELECT COUNT(*) FROM mura_sq_notin_orders o WHERE NOT EXISTS "
-        "(SELECT 1 FROM mura_sq_notin_sub s WHERE s.k = o.o_custkey)) "
-        "AS n_not_exists")
+        "(SELECT COUNT(*) FROM {orders} o WHERE NOT EXISTS "
+        "(SELECT 1 FROM {sub} s WHERE s.k = o.o_custkey)) "
+        "AS n_not_exists", orders=table(spark, sf, "orders"), sub=sub)
 
 
 @q("sort_offset_page",
@@ -1248,8 +1244,6 @@ def scripting_monthly_accumulator(spark, sf):
     against the equivalent declarative aggregate. (Use the declarative
     form in production — this pins that the procedural surface computes
     the same answer.)"""
-    o = table(spark, sf, "orders")
-    o.createOrReplaceTempView("mura_script_orders")
     return spark.sql("""
 BEGIN
   DECLARE total BIGINT DEFAULT 0;
@@ -1259,10 +1253,10 @@ BEGIN
     SET total = total + coalesce(
       (SELECT CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
                          AS BIGINT)) AS BIGINT)
-       FROM mura_script_orders
+       FROM {orders}
        WHERE year(o_orderdate) = 1995 AND month(o_orderdate) = i), 0);
     SET last_m = CASE WHEN EXISTS (
-        SELECT 1 FROM mura_script_orders
+        SELECT 1 FROM {orders}
         WHERE year(o_orderdate) = 1995 AND month(o_orderdate) = i)
       THEN i ELSE last_m END;
     SET i = i + 1;
@@ -1270,7 +1264,7 @@ BEGIN
   SELECT CAST(12 AS INT) AS n_months, total AS total_cents,
          last_m AS last_month;
 END
-""")
+""", orders=table(spark, sf, "orders"))
 
 
 # ------------------------------------------------------- round-6bbb additions
@@ -1285,11 +1279,10 @@ def agg_group_by_all(spark, sf):
     the footgun-free rollup form analysts reach for first. Plans
     identically to the explicit GROUP BY (one map-side-combined
     rollup)."""
-    d = table(spark, sf, "documents")
-    d.createOrReplaceTempView("mura_gba_docs")
     return spark.sql(
         "SELECT lang, source, COUNT(*) AS n_docs, "
-        "SUM(n_chars) AS total_chars FROM mura_gba_docs GROUP BY ALL")
+        "SUM(n_chars) AS total_chars FROM {d} GROUP BY ALL",
+        d=table(spark, sf, "documents"))
 
 
 @q("string_collation_filter",
@@ -1303,12 +1296,11 @@ def string_collation_filter(spark, sf):
     side, so at scale the filter still pushes as a predicate instead
     of an expression over every row). The DuckDB oracle expresses the
     identical semantics with explicit lower() folding."""
-    d = table(spark, sf, "documents")
-    d.createOrReplaceTempView("mura_coll_docs")
     return spark.sql(
-        "SELECT lang, COUNT(*) AS n_docs FROM mura_coll_docs "
+        "SELECT lang, COUNT(*) AS n_docs FROM {d} "
         "WHERE lang COLLATE UTF8_LCASE = 'EN' "
-        "OR lang COLLATE UTF8_LCASE = 'Zh' GROUP BY 1")
+        "OR lang COLLATE UTF8_LCASE = 'Zh' GROUP BY 1",
+        d=table(spark, sf, "documents"))
 
 
 @q("join_bucketed_colocate",

@@ -421,22 +421,20 @@ def table_changes_replay(spark, sf):
                    {"o_totalprice": "o_totalprice + 1.0"})
     ms = MuraSession(spark)
     ms.create_external_table("cdf_orders", path, file_type="mura")
-    ms.sql("SELECT _change_type AS ct, o_totalprice "
-           "FROM table_changes('cdf_orders', 1)") \
-      .createOrReplaceTempView("__mura_cdf_feed")
-    t.read(version=1).createOrReplaceTempView("__mura_cdf_v1")
-    t.read().createOrReplaceTempView("__mura_cdf_head")
+    feed = ms.sql("SELECT _change_type AS ct, o_totalprice "
+                  "FROM table_changes('cdf_orders', 1)")
+    ms.catalog.drop("cdf_orders")
     dec = "SUM(CAST(o_totalprice AS DECIMAL(18,2)))"
     return spark.sql(
         f"WITH v1 AS (SELECT COUNT(*) AS n, {dec} AS s "
-        "FROM __mura_cdf_v1), "
+        "FROM {v1}), "
         f"f AS (SELECT ct, COUNT(*) AS n, {dec} AS s "
-        "FROM __mura_cdf_feed GROUP BY ct), "
+        "FROM {feed} GROUP BY ct), "
         "d AS (SELECT SUM(CASE WHEN ct IN ('insert', "
         "'update_postimage') THEN n ELSE -n END) AS dn, "
         "SUM(CASE WHEN ct IN ('insert', 'update_postimage') "
         "THEN s ELSE -s END) AS ds FROM f), "
-        f"h AS (SELECT COUNT(*) AS n, {dec} AS s FROM __mura_cdf_head) "
+        f"h AS (SELECT COUNT(*) AS n, {dec} AS s FROM {{head}}) "
         "SELECT 'v1' AS label, CAST(n AS BIGINT) AS n_rows, "
         "CAST(s AS DOUBLE) AS total_price FROM v1 "
         "UNION ALL SELECT CONCAT('ct:', ct), CAST(n AS BIGINT), "
@@ -444,7 +442,8 @@ def table_changes_replay(spark, sf):
         "UNION ALL SELECT 'head', CAST(n AS BIGINT), "
         "CAST(s AS DOUBLE) FROM h "
         "UNION ALL SELECT 'replay', CAST(v1.n + d.dn AS BIGINT), "
-        "CAST(v1.s + d.ds AS DOUBLE) FROM v1 CROSS JOIN d")
+        "CAST(v1.s + d.ds AS DOUBLE) FROM v1 CROSS JOIN d",
+        feed=feed, v1=t.read(version=1), head=t.read())
 
 
 # ------------------------------------------------------- round-9b addition
@@ -637,15 +636,18 @@ def merge_upsert_sql(spark, sf):
                      base.filter(F.col("o_orderkey") % 3 != 0))
     ms = MuraSession(spark)
     ms.create_external_table("merge_orders", path, file_type="mura")
-    (base.filter(F.col("o_orderkey") % 2 == 0)
-         .withColumn("p", (F.col("p") + F.lit(10.00))
-                     .cast("decimal(18,2)"))
-         .createOrReplaceTempView("merge_updates"))
+    ms.catalog.register_dataframe(
+        "merge_updates",
+        base.filter(F.col("o_orderkey") % 2 == 0)
+            .withColumn("p", (F.col("p") + F.lit(10.00))
+                        .cast("decimal(18,2)")))
     stats = ms.sql(
         "MERGE INTO merge_orders AS t USING merge_updates AS s "
         "ON t.o_orderkey = s.o_orderkey "
         "WHEN MATCHED THEN UPDATE SET * "
         "WHEN NOT MATCHED THEN INSERT *")
+    ms.catalog.drop("merge_orders")
+    ms.catalog.drop("merge_updates")
     rollup = (MuraTable.load(spark, path).read()
               .groupBy("o_orderstatus")
               .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"),

@@ -479,9 +479,7 @@ def stats_ols2_lineitem(spark, sf):
     sibling of stats_ols_value_by_hour. The SAME SQL text runs on both
     engines, so the closed-form double arithmetic is mirrored by
     construction."""
-    li = table(spark, sf, "lineitem")
-    li.createOrReplaceTempView("mura_ols2_lineitem")
-    return spark.sql(_ols2_sql("mura_ols2_lineitem"))
+    return spark.sql(_ols2_sql("{li}"), li=table(spark, sf, "lineitem"))
 
 
 
@@ -980,9 +978,7 @@ def stats_adf_value_daily(spark, sf):
     the pre-flight every forecasting pipeline owes its users. Same
     one-text SQL on both engines (_ols2_sql posture); exact decimal
     moments, Cramer closed form, one sqrt."""
-    ev = table(spark, sf, "events")
-    ev.createOrReplaceTempView("mura_adf_events")
-    return spark.sql(_adf_sql("mura_adf_events"))
+    return spark.sql(_adf_sql("{ev}"), ev=table(spark, sf, "events"))
 
 
 
@@ -1711,10 +1707,7 @@ def stats_partial_corr(spark, sf):
     Simpson-screen / CMH family (those handle categorical strata;
     this nets out a numeric covariate). All ten moments in one exact
     decimal pass; same SQL text runs on both engines."""
-    li = table(spark, sf, "lineitem")
-    li.createOrReplaceTempView("mura_pcorr_lineitem")
-    return spark.sql(_pcorr_sql().replace("{tbl}",
-                                          "mura_pcorr_lineitem"))
+    return spark.sql(_pcorr_sql(), tbl=table(spark, sf, "lineitem"))
 
 
 
@@ -1766,10 +1759,7 @@ def stats_deming_qty_price(spark, sf):
     cross-calibration, sensor reconciliation). Closed form from five
     exact decimal moments; same SQL text runs verbatim on both
     engines (the _ols2_sql posture)."""
-    li = table(spark, sf, "lineitem")
-    li.createOrReplaceTempView("mura_deming_lineitem")
-    return spark.sql(_deming_sql().replace("{tbl}",
-                                           "mura_deming_lineitem"))
+    return spark.sql(_deming_sql(), tbl=table(spark, sf, "lineitem"))
 
 
 

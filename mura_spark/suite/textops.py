@@ -510,11 +510,10 @@ def udtf_ngrams(spark, sf):
     (functions.registry._ngrams_udtf)."""
     from mura_spark.functions.registry import register_all
     register_all(spark)
-    (table(spark, sf, "documents").filter(F.col("doc_id") < 50)
-     .createOrReplaceTempView("mura_docs_small"))
     return spark.sql(
         "SELECT d.doc_id, t.pos, t.ngram "
-        "FROM mura_docs_small d, LATERAL mura_ngrams(d.text, 2) t")
+        "FROM {docs} d, LATERAL mura_ngrams(d.text, 2) t",
+        docs=table(spark, sf, "documents").filter(F.col("doc_id") < 50))
 
 
 @q("text_readability",

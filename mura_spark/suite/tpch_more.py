@@ -214,11 +214,10 @@ def date_functions(spark, sf):
 def subquery_scalar(spark, sf):
     """Uncorrelated scalar subquery (the reference rejects all subqueries —
     queryplanner.rs:66); Catalyst plans it as a broadcast single-row join."""
-    c = table(spark, sf, "customer")
-    c.createOrReplaceTempView("sq_customer")
     return spark.sql(
-        "SELECT c_custkey, c_acctbal FROM sq_customer "
-        "WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM sq_customer)")
+        "SELECT c_custkey, c_acctbal FROM {c} "
+        "WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM {c})",
+        c=table(spark, sf, "customer"))
 
 
 @q("subquery_exists",
@@ -228,12 +227,12 @@ def subquery_scalar(spark, sf):
 def subquery_exists(spark, sf):
     """Correlated EXISTS (TPC-H Q4 shape) — decorrelated to a left-semi
     join on the correlation key."""
-    table(spark, sf, "orders").createOrReplaceTempView("sq_orders")
-    table(spark, sf, "lineitem").createOrReplaceTempView("sq_lineitem")
     return spark.sql(
-        "SELECT o_orderkey, o_orderpriority FROM sq_orders o "
-        "WHERE EXISTS (SELECT 1 FROM sq_lineitem l "
-        "WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)")
+        "SELECT o_orderkey, o_orderpriority FROM {orders} o "
+        "WHERE EXISTS (SELECT 1 FROM {lineitem} l "
+        "WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)",
+        orders=table(spark, sf, "orders"),
+        lineitem=table(spark, sf, "lineitem"))
 
 
 @q("subquery_correlated_scalar",
@@ -243,11 +242,10 @@ def subquery_exists(spark, sf):
 def subquery_correlated_scalar(spark, sf):
     """Correlated scalar subquery (TPC-H Q2 shape: min per group) —
     decorrelated to an aggregate + equi-join on the correlation key."""
-    table(spark, sf, "part").createOrReplaceTempView("sq_part")
     return spark.sql(
-        "SELECT p_partkey, p_brand, p_retailprice FROM sq_part p1 "
-        "WHERE p_retailprice = (SELECT MIN(p_retailprice) FROM sq_part p2 "
-        "WHERE p2.p_brand = p1.p_brand)")
+        "SELECT p_partkey, p_brand, p_retailprice FROM {part} p1 "
+        "WHERE p_retailprice = (SELECT MIN(p_retailprice) FROM {part} p2 "
+        "WHERE p2.p_brand = p1.p_brand)", part=table(spark, sf, "part"))
 
 
 # ---------------------------------------------------------------------------

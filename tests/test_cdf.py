@@ -247,6 +247,59 @@ def test_replicate_changes_maintains_mirror(spark, tmp_path):
     assert {tuple(r) for r in dst.read().collect()} == {(7, 7, "only")}
 
 
+def test_replicate_changes_survives_overwrite(spark, tmp_path):
+    """Overwrite feeds delete(old file) + insert(new file) at the SAME
+    commit version for a surviving key; the mirror must keep it."""
+    from mura_spark.sources.table_stream import (register,
+                                                 replicate_changes)
+    register(spark)
+    src = MuraTable.create(spark, str(tmp_path / "src"),
+                           _df(spark, [(1, 1, "a"), (2, 2, "b")]))
+    mirror = MuraTable.create(spark, str(tmp_path / "mir"),
+                              _df(spark, []))
+    ck = str(tmp_path / "ck")
+
+    def drain():
+        q = replicate_changes(spark, str(tmp_path / "src"), mirror,
+                              ["k"], ck)
+        assert q.awaitTermination(120)
+
+    drain()
+    # overwrite: key 1 survives (new value), key 2 drops, key 4 appears
+    src.overwrite(_df(spark, [(1, 1, "a2"), (4, 4, "d")]))
+    drain()
+    got = sorted((r.k, r.val) for r in mirror.read().collect())
+    assert got == [(1, "a2"), (4, "d")]
+
+
+def test_replicate_changes_after_a_wiped_checkpoint(spark, tmp_path):
+    """A wiped checkpoint restarts at batch 0 as a new query: its
+    batches apply instead of being skipped as replays of the old
+    query's batch 0."""
+    import shutil
+
+    from mura_spark.sources.table_stream import (register,
+                                                 replicate_changes)
+    register(spark)
+    src_path = str(tmp_path / "src")
+    src = MuraTable.create(spark, src_path, _df(spark, [(1, 1, "a")]),
+                           cdf=True)
+    dst = MuraTable.create(spark, str(tmp_path / "dst"),
+                           _df(spark, []))
+    ckpt = str(tmp_path / "ckpt")
+
+    def sync():
+        assert replicate_changes(spark, src_path, dst, ["k"],
+                                 ckpt).awaitTermination(120)
+
+    sync()
+    shutil.rmtree(ckpt)
+    src.append(_df(spark, [(2, 1, "b")]))
+    sync()
+    assert sorted(tuple(r) for r in dst.read().collect()) \
+        == [(1, 1, "a"), (2, 1, "b")]
+
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

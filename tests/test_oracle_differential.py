@@ -9,8 +9,9 @@ small driver thread pool (the guide's §2.6 overlap-independent-jobs
 pattern: Spark's scheduler happily runs several queries at once, and
 almost all of the serial sweep's wall was per-query driver/scheduling
 latency on otherwise-idle cores). Safe because every suite query is
-self-contained — per-query-unique temp view names and per-query
-scratch dirs, no session-conf mutation (grep-audited). Each
+self-contained — its frames are bound per query as ``spark.sql``
+format arguments (no shared temp view names), per-query scratch
+dirs, no session-conf mutation (grep-audited). Each
 parametrized test then only replays its query's DuckDB twin (the
 shared duckdb connection is not thread-safe, so it stays serial) and
 compares — one test per query as before, failures still attribute to
@@ -42,13 +43,18 @@ def duck(sf_dir):
     return con
 
 
+def _temp_views(spark) -> list[str]:
+    return sorted(t.name for t in spark.catalog.listTables()
+                  if t.isTemporary)
+
+
 @pytest.fixture(scope="module")
 def spark_results(request, spark, sf_dir):
-    """name -> (columns, rows, error) for every oracled query this session
-    collected (so ``-k NAME`` runs one query, a full run all of them),
-    computed concurrently (6 driver threads — enough to hide per-query
-    latency, few enough that executor cores are never contended at
-    sf0.001)."""
+    """(name -> (columns, rows, error), the session's temp views before
+    the sweep) for every oracled query this session collected (so
+    ``-k NAME`` runs one query, a full run all of them), computed
+    concurrently (6 driver threads — enough to hide per-query latency,
+    few enough that executor cores are never contended at sf0.001)."""
     names = sorted({item.callspec.params["name"]
                     for item in request.session.items
                     if getattr(item, "function", None)
@@ -62,13 +68,14 @@ def spark_results(request, spark, sf_dir):
         except Exception as e:  # re-raised by the owning test
             return name, (None, None, e)
 
+    views_before = _temp_views(spark)
     with ThreadPoolExecutor(max_workers=6) as pool:
-        return dict(pool.map(run, names))
+        return dict(pool.map(run, names)), views_before
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))
 def test_query_matches_oracle(name, spark_results, duck):
-    scols, srows, err = spark_results[name]
+    scols, srows, err = spark_results[0][name]
     if err is not None:
         raise err
     res = duck.execute(ORACLE_SQL[name])
@@ -79,6 +86,12 @@ def test_query_matches_oracle(name, spark_results, duck):
     _, s_n = norm_rows(scols, srows)
     _, o_n = norm_rows(ocols, orows)
     assert s_n == o_n
+
+
+def test_oracle_sweep_leaves_no_temp_view(spark, spark_results):
+    """Suite queries bind their frames per query, and any name they
+    register through ``MuraSession`` is dropped before they return."""
+    assert _temp_views(spark) == spark_results[1]
 
 
 def test_every_query_has_entry_or_documented_rows_only():

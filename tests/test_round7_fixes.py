@@ -548,33 +548,6 @@ def test_merge_into_delete_removes_emptied_partition(spark, tmp_path):
     assert not [d for d in os.listdir(path) if d == "m=1"]
 
 
-# --------------------------------------- replicate_changes overwrite tie
-
-
-def test_replicate_changes_survives_overwrite(registered, tmp_path):
-    """Overwrite feeds delete(old file) + insert(new file) at the SAME
-    commit version for a surviving key; the mirror must keep it."""
-    from mura_spark.sources.table_stream import replicate_changes
-    spark = registered
-    src = MuraTable.create(spark, str(tmp_path / "src"),
-                           _df(spark, [(1, 1, "a"), (2, 2, "b")]))
-    mirror = MuraTable.create(spark, str(tmp_path / "mir"),
-                              _df(spark, []))
-    ck = str(tmp_path / "ck")
-
-    def drain():
-        q = replicate_changes(spark, str(tmp_path / "src"), mirror,
-                              ["k"], ck)
-        assert q.awaitTermination(120)
-
-    drain()
-    # overwrite: key 1 survives (new value), key 2 drops, key 4 appears
-    src.overwrite(_df(spark, [(1, 1, "a2"), (4, 4, "d")]))
-    drain()
-    got = sorted((r.k, r.val) for r in mirror.read().collect())
-    assert got == [(1, "a2"), (4, "d")]
-
-
 # --------------------------------------------------- bpe pretokenizer
 
 

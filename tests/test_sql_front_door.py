@@ -80,3 +80,67 @@ def test_every_statement_resolves_a_mixed_case_name(spark, tmp_path):
     assert ms.table_at("orders", "gold").count() == 3
     assert sorted(ms.table("Orders").collect()) == sorted(
         ms.table_at("orders", 9).collect())
+
+
+def test_sql_reads_the_head_after_every_commit_path(spark, tmp_path,
+                                                    monkeypatch):
+    """A registered mura name re-binds at its head on lookup, whoever
+    committed: the API (with a schema change), the stream sink, a view
+    refresh, or another session. A SQL DELETE loads the table once."""
+    from mura_spark.session import MuraSession
+    from mura_spark.sources.incremental_view import IncrementalAggView
+    from mura_spark.sources.table_stream import register
+    register(spark)
+    ms = MuraSession(spark)
+    path, view_path = str(tmp_path / "t"), str(tmp_path / "v")
+    t = MuraTable.create(spark, path, _df(spark, [(1, "a"), (2, "b")]))
+    view_src = MuraTable.create(spark, str(tmp_path / "vs"),
+                                _df(spark, [(1, "a")]))
+    view = IncrementalAggView.create(spark, view_path, view_src,
+                                     keys=["val"],
+                                     aggs={"n": ("count", "k")})
+    ms.create_external_table("hb_t", path, file_type="mura")
+    ms.create_external_table("hb_v", view_path, file_type="mura")
+
+    def sees_head(name, location):
+        head = MuraTable.load(spark, location).read()
+        assert ms.sql(f"SELECT count(*) AS n FROM {name}").first().n \
+            == head.count()
+        assert sorted(ms.catalog.table(name).collect()) \
+            == sorted(head.collect())
+        assert ms.catalog.fetch_table_info(name) == head.schema
+
+    wide = "k long, val string, extra string"
+    t.append(spark.createDataFrame([(3, "c", "x")], wide),
+             merge_schema=True)
+    sees_head("hb_t", path)
+    assert "extra" in ms.catalog.table("hb_t").columns
+
+    src = str(tmp_path / "src")
+    MuraTable.create(spark, src, spark.createDataFrame([(4, "d", "y")],
+                                                       wide))
+    assert (spark.readStream.format("mura_table").option("path", src)
+            .load().writeStream.format("mura_table").option("path", path)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True).start().awaitTermination(120))
+    sees_head("hb_t", path)
+
+    view_src.append(_df(spark, [(2, "b")]))
+    assert view.refresh().mode != "noop"
+    sees_head("hb_v", view_path)
+
+    other = MuraSession(spark.newSession())
+    other.create_external_table("hb_t", path, file_type="mura")
+    other.sql("DELETE FROM hb_t WHERE k = 1")
+    sees_head("hb_t", path)
+
+    calls = []
+    load, read = MuraTable.load.__func__, MuraTable.read
+    monkeypatch.setattr(MuraTable, "load", classmethod(
+        lambda cls, *a: calls.append("load") or load(cls, *a)))
+    monkeypatch.setattr(MuraTable, "read", lambda self, *a, **kw:
+                        calls.append("read") or read(self, *a, **kw))
+    ms.sql("DELETE FROM hb_t WHERE k = 2")
+    assert sorted(calls) == ["load", "read"]
+    monkeypatch.undo()
+    sees_head("hb_t", path)
