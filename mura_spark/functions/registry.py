@@ -16,6 +16,7 @@ tests/test_expressions.py.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 from mura_spark.functions.text import LANG_STOPWORDS
@@ -101,15 +102,12 @@ def _gmean_udf():
     both the Column API and SQL GROUP BY once registered."""
     import numpy as np
 
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # NOTE: explicit functionType, not signature inference — this module
-    # uses `from __future__ import annotations`, which turns the type
-    # hints into strings that pandas_udf cannot infer an eval type from
-    def _gmean(v):
+    def _gmean(v: pd.Series) -> float:
         return float(np.exp(np.log(v.astype("float64")).mean()))
 
-    return pandas_udf(_gmean, "double", PandasUDFType.GROUPED_AGG)
+    return pandas_udf(_gmean, "double")
 
 
 def _ngrams_udtf():

@@ -472,11 +472,9 @@ def replicate_changes(spark, source_path: str, target, keys: list[str],
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    def app(kind: str) -> str:
-        with open(os.path.join(checkpoint, "metadata")) as f:
-            return f"cdc-{kind}:{json.load(f)['id']}"
+    from mura_spark.streaming.sinks import foreach_table_batch
 
-    def apply_batch(feed, batch_id: int) -> None:
+    def apply_batch(feed, query_id: str, batch_id: int) -> None:
         # newest commit wins; WITHIN one commit a surviving row outranks
         # a delete — overwrite/restore feed as a file diff, so a key
         # surviving an overwrite emits delete(old file) + insert(new
@@ -496,17 +494,14 @@ def replicate_changes(spark, source_path: str, target, keys: list[str],
                 .drop("_change_type", "_commit_version"))
         if ups.limit(1).count():
             target.merge(ups, key_cols=keys, when_matched="update",
-                         txn=(app("upsert"), batch_id))
+                         txn=(f"cdc-upsert:{query_id}", batch_id))
         if dels.limit(1).count():
             target.merge(dels, key_cols=keys, when_matched="delete",
                          insert_not_matched=False,
-                         txn=(app("delete"), batch_id))
+                         txn=(f"cdc-delete:{query_id}", batch_id))
 
     reader = (spark.readStream.format("mura_table")
               .option("path", source_path)
               .option("readChangeFeed", "true").load())
-    writer = (reader.writeStream.foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_table_batch(reader, checkpoint, apply_batch,
+                               available_now)

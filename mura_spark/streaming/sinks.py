@@ -1,179 +1,113 @@
-"""Streaming sinks: idempotent CDC apply via ``foreachBatch``.
+"""Streaming writers into a :class:`MuraTable` via ``foreachBatch``.
 
-Structured Streaming's file sinks are append-only; applying a CDC stream
-(upserts keyed on an id) to a queryable table needs ``foreachBatch`` +
-the batch upsert operator. This is the standard Spark pattern for
-"stream into a mutable table" without a lakehouse format dependency
-(Delta/Iceberg aren't in this environment; with them, the same batch
-function targets ``MERGE INTO``).
+Structured Streaming's file sinks are append-only. Keeping a table that
+is keyed (a CDC apply, an additive rollup state, a change-feed mirror)
+needs ``foreachBatch`` and a transactional table write. All three
+writers take the same path, :func:`foreach_table_batch`:
+:func:`apply_cdc_batches`, :func:`maintain_rollup_batches` and
+:func:`mura_spark.sources.table_stream.replicate_changes`.
 
-Scale/correctness notes:
-- foreachBatch re-executes a batch after failure, so the apply MUST be
-  idempotent: keep-latest merge is (applying the same batch twice is a
-  no-op), version-pinned by the CDC ordering column — NOT arrival order.
-- The full-table rewrite per batch is the no-lakehouse cost; partition
-  the table path (``partition_cols``) so a batch that touches few
-  partitions can use dynamic partition overwrite instead of a full
-  rewrite at real scale.
+Exactly-once: ``foreachBatch`` re-runs a batch whose checkpoint commit
+did not land (a crash after the table commit, or a lost
+``commits/<n>`` file). Each writer commits with
+``txn=(f"<kind>:{query_id}", batch_id)``, so the batch's txn mark lands
+in the same table commit as its rows, and the table skips the replay
+(Delta's idempotent ``foreachBatch`` writes). The query id is Spark's
+persistent id from ``<checkpoint>/metadata``: a fresh or wiped
+checkpoint is a new query whose batches are new, not replays.
+
+Every write is a copy-on-write table commit. It writes new files and
+never touches the files it reads, so no materialization barrier is
+needed, and a partitioned target rewrites only the partitions a batch
+touches.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+from pathlib import Path
+
+from pyspark.sql import DataFrame
 
 from mura_spark.operators.upsert import upsert_latest
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through Hadoop's FileSystem so URI table paths
-    (file:/, hdfs://, s3a://) resolve exactly like Spark's own reader —
-    os.path.exists would be False for every URI, which here would mean
-    'first batch' and silently overwrite the accumulated table."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def apply_cdc_batches(stream: DataFrame, table_path: str, keys: list[str],
-                      version_col: str, checkpoint_dir: str,
-                      partition_cols: list[str] | None = None,
-                      available_now: bool = False):
-    """Start a ``foreachBatch`` query that merges each micro-batch into the
-    parquet table at ``table_path`` with keep-latest semantics
-    (:func:`mura_spark.operators.upsert.upsert_latest` — newest
-    ``version_col`` per key wins, batch side wins ties).
+def foreach_table_batch(stream: DataFrame, checkpoint: str, apply,
+                        available_now: bool = False):
+    """Start ``stream`` as a ``foreachBatch`` query checkpointed at
+    ``checkpoint`` that calls ``apply(batch, query_id, batch_id)`` per
+    micro-batch; ``query_id`` is Spark's id for the query, stable
+    across restarts on the same checkpoint. ``available_now=True``
+    drains the backlog and stops.
 
     Returns the StreamingQuery; caller owns ``awaitTermination``/``stop``.
     """
-    spark = stream.sparkSession
+    metadata = Path(checkpoint, "metadata")
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        merged = _merge_into(spark, batch, table_path, keys, version_col)
-        writer = merged.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(table_path)
+    def each(batch: DataFrame, batch_id: int) -> None:
+        apply(batch, json.loads(metadata.read_text())["id"], batch_id)
 
-    writer = (stream.writeStream
-              .foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("update"))
+    writer = (stream.writeStream.foreachBatch(each)
+              .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
 
-def _merge_into(spark: SparkSession, batch: DataFrame, table_path: str,
-                keys: list[str], version_col: str) -> DataFrame:
-    """Current table state merged with one batch (collected eagerly — the
-    overwrite below invalidates the files the merge reads from).
+def apply_cdc_batches(stream: DataFrame, target, keys: list[str],
+                      version_col: str, checkpoint_dir: str,
+                      available_now: bool = False):
+    """Start a ``foreachBatch`` query that merges each micro-batch into
+    ``target`` (a :class:`MuraTable`) with keep-latest semantics
+    (:func:`mura_spark.operators.upsert.upsert_latest` — newest
+    ``version_col`` per key wins, batch side wins ties). The merge
+    source is the keep-latest reduction of the batch with the target
+    rows of the batch's keys, so it is unique per key by construction,
+    also when one batch carries several versions of a key (an
+    ``availableNow`` initial load), and a batch row older than the
+    table's row for its key loses.
 
-    Only a MISSING table means first-batch: any other read failure
-    (corrupt footer from a crashed overwrite, transient IO) must
-    surface — falling back to the bare batch would silently replace
-    the accumulated table with one micro-batch, losing every key the
-    batch doesn't carry. And the first batch still needs the keep-
-    latest reduction: under availableNow the entire initial load can
-    arrive as one batch holding several versions of a key."""
-    if not _fs_exists(spark, table_path):
-        empty = spark.createDataFrame([], batch.schema)
-        return upsert_latest(empty, batch, keys, version_col) \
-            .localCheckpoint(eager=True)
-    current = spark.read.parquet(table_path)
-    merged = upsert_latest(current, batch, keys, version_col)
-    # materialize BEFORE the overwrite truncates the input files
-    return merged.localCheckpoint(eager=True)
+    Returns the StreamingQuery; caller owns ``awaitTermination``/``stop``.
+    """
+    def apply(batch: DataFrame, query_id: str, batch_id: int) -> None:
+        current = target.read().join(batch, keys, "left_semi")
+        target.merge(upsert_latest(current, batch, keys, version_col),
+                     keys, trust_source_unique=True,
+                     txn=(f"cdc:{query_id}", batch_id))
+
+    return foreach_table_batch(stream, checkpoint_dir, apply,
+                               available_now)
 
 
-def maintain_rollup_batches(stream: DataFrame, state_path: str,
-                            keys: list[str], value: str,
-                            checkpoint_dir: str,
+def maintain_rollup_batches(stream: DataFrame, target, keys: list[str],
+                            value: str, checkpoint_dir: str,
                             available_now: bool = False):
     """Start a ``foreachBatch`` query that maintains the mergeable rollup
-    state of :mod:`mura_spark.operators.incremental` over a stream: each
-    micro-batch is reduced to its partial state (one reduced shuffle of
-    the BATCH only) and monoid-merged into the dimension-sized state
-    table — the streaming form of incremental materialized-view refresh;
-    read-time consumers call ``incremental.finalize`` on ``state_path``.
+    state of :mod:`mura_spark.operators.incremental` in ``target`` (a
+    :class:`MuraTable`): each micro-batch is reduced to its partial
+    state (one reduced shuffle of the BATCH only) and monoid-merged
+    into the dimension-sized state — the streaming form of incremental
+    materialized-view refresh; read-time consumers call
+    ``incremental.finalize`` on ``target.read()``.
 
-    Unlike the CDC keep-latest sink, additive partials are NOT naturally
-    idempotent (re-merging a delivered batch double-counts), so the apply
-    records the last committed ``batch_id`` INSIDE the checkpoint
-    directory (batch ids are only meaningful relative to the checkpoint
-    that numbers them) and skips batches at or below it — redelivery of a
-    completed batch is a no-op (pytest-pinned). A batch arriving with no
-    marker in its checkpoint means the stream is starting from offset
-    zero (new or wiped checkpoint → the source replays everything), so
-    the state is REBUILT from that batch rather than merged — a fresh
-    checkpoint can therefore never double-count into old state or
-    silently skip new data. The marker is written after the state
-    overwrite; a crash landing exactly between the two writes re-applies
-    one batch — closing that window needs a transactional table format
-    (Delta/Iceberg `MERGE` + txn), which this environment doesn't ship;
-    the seam is the same ``apply`` function either way.
+    Additive partials are NOT naturally idempotent (re-merging a
+    delivered batch double-counts), so the txn mark of the overwrite
+    is what makes a redelivered batch a no-op. Batch 0 is the source
+    replaying from offset zero (a new or wiped checkpoint), so it
+    REBUILDS the state rather than merging into whatever an earlier
+    checkpoint left: a fresh checkpoint never double-counts old state
+    nor skips new data. A target whose state cannot merge with the
+    batch's (wrong shape) fails the stream and stays as it was.
 
     Returns the StreamingQuery; caller owns ``awaitTermination``/``stop``.
     """
-    import os
-
-    spark = stream.sparkSession
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    marker = os.path.join(checkpoint_dir, "rollup_last_batch")
-
     from mura_spark.operators.incremental import merge_states, partial_state
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        # only a MISSING marker means fresh checkpoint; an unreadable
-        # or partial one (crash mid-write would be possible with a
-        # truncating open - see the atomic os.replace below) must
-        # surface rather than trigger the rebuild branch, which would
-        # wipe accumulated state while the source resumes mid-stream
-        last = None
-        try:
-            with open(marker) as fh:
-                last = int(fh.read().strip())
-        except FileNotFoundError:
-            pass
-        if last is not None and batch_id <= last:
-            return
+    def apply(batch: DataFrame, query_id: str, batch_id: int) -> None:
         new = partial_state(batch, keys, value)
-        if last is None:
-            # no marker in THIS checkpoint: the source is replaying from
-            # offset zero — rebuild the state instead of merging into
-            # whatever a previous checkpoint left behind
-            merged = new
-        else:
-            # missing state dir (marker exists but state was removed
-            # out-of-band) restarts from this batch; any OTHER read
-            # failure — corrupt footer from a crashed overwrite,
-            # transient IO — must surface, never silently replace
-            # accumulated state with one batch's partials
-            if _fs_exists(spark, state_path):
-                current = spark.read.parquet(state_path)
-            else:
-                current = None
-            merged = (merge_states([current, new], keys)
-                      if current is not None else new)
-        # materialize BEFORE the overwrite truncates the input files
-        merged.localCheckpoint(eager=True).write.mode("overwrite") \
-              .parquet(state_path)
-        # atomic marker publish: a truncating open("w") killed between
-        # truncate and flush would leave an EMPTY marker, which a
-        # restart would read as "fresh checkpoint" and rebuild from one
-        # batch; temp-write + os.replace can only ever expose the old
-        # or the new complete marker
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, marker)
+        if batch_id:
+            new = merge_states([target.read(), new], keys)
+        target.overwrite(new, txn=(f"rollup:{query_id}", batch_id))
 
-    writer = (stream.writeStream
-              .foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("update"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_table_batch(stream, checkpoint_dir, apply,
+                               available_now)

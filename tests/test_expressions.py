@@ -157,6 +157,20 @@ def test_mura_shuffle_key_matches_column_form(spark, sf_dir):
             == sorted(map(tuple, want.collect())))
 
 
+def test_mura_session_construction_emits_no_user_warning(spark):
+    """Building a session registers every named function; none of them
+    may go through an API that warns on each registration (the grouped
+    UDAF's eval type comes from its type hints, not PandasUDFType)."""
+    import warnings
+
+    from mura_spark.session import MuraSession
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        MuraSession(spark)
+    assert [str(w.message) for w in caught
+            if issubclass(w.category, UserWarning)] == []
+
+
 def test_registered_udaf_and_udtf(spark, sf_dir):
     """The named UDAF (mura_gmean) and UDTF (mura_ngrams) work from SQL:
     gmean equals the numpy reference per group; the lateral UDTF emits

@@ -276,34 +276,6 @@ def test_sql_rewrite_handles_backslash_escaped_literals(spark, tmp_path):
     assert got.msg == "don't read bs_t VERSION AS OF 1 twice"
 
 
-def test_cdc_sink_accepts_uri_table_path(spark, tmp_path):
-    """os.path.exists is False for every URI — the sink must resolve
-    paths through Hadoop's FileSystem or each batch overwrites the
-    accumulated table as 'first batch'."""
-    from mura_spark.streaming.sinks import apply_cdc_batches
-    src = str(tmp_path / "src")
-    spark.createDataFrame([(1, "a", 1)], "id long, val string, v long") \
-         .coalesce(1).write.parquet(src)
-    tbl_uri = "file:" + str(tmp_path / "tbl")
-
-    def run(ck):
-        stream = (spark.readStream
-                  .schema("id long, val string, v long").parquet(src))
-        q = apply_cdc_batches(stream, tbl_uri, ["id"], "v",
-                              str(tmp_path / ck), available_now=True)
-        q.awaitTermination(120)
-
-    run("ck1")
-    spark.createDataFrame([(2, "b", 1)], "id long, val string, v long") \
-         .coalesce(1).write.mode("append").parquet(src)
-    run("ck1")
-    rows = sorted((r.id, r.val) for r in
-                  spark.read.parquet(tbl_uri).collect())
-    # pre-fix, the second batch would have REPLACED the table with
-    # just (2, 'b'); key 1 must survive
-    assert rows == [(1, "a"), (2, "b")]
-
-
 def test_stream_sink_refuses_mid_stream_constraint(registered, tmp_path):
     from mura_spark.sources.table_stream import _TableStreamWriter
     spark = registered
@@ -653,27 +625,6 @@ def test_target_encode_loo_counts_nonnull_labels(spark):
     # id=2 (NULL label): full mean over labeled rows of its group
     assert got[2] == 10.0
     assert got[3] == 6.0 and got[4] == 4.0
-
-
-# --------------------------------------- CDC sink first-batch dedup
-
-
-def test_cdc_sink_first_batch_keeps_latest(spark, tmp_path):
-    from mura_spark.streaming.sinks import apply_cdc_batches
-    src = str(tmp_path / "src")
-    # one file => availableNow delivers the WHOLE initial load as one
-    # batch containing two versions of key 1
-    spark.createDataFrame(
-        [(1, "a", 1), (1, "a2", 2), (2, "b", 1)],
-        "id long, val string, v long").coalesce(1).write.parquet(src)
-    stream = (spark.readStream.schema("id long, val string, v long")
-              .parquet(src))
-    q = apply_cdc_batches(stream, str(tmp_path / "tbl"), ["id"], "v",
-                          str(tmp_path / "ck"), available_now=True)
-    q.awaitTermination(120)
-    rows = sorted((r.id, r.val, r.v) for r in
-                  spark.read.parquet(str(tmp_path / "tbl")).collect())
-    assert rows == [(1, "a2", 2), (2, "b", 1)]
 
 
 # --------------------------------------------- RAKE phrase delimiters

@@ -5,6 +5,7 @@ module's design contract)."""
 import pytest
 from pyspark.sql import functions as F
 
+from mura_spark.sources.table_format import MuraTable
 from mura_spark.streaming import windows as W
 from mura_spark.suite.common import table
 
@@ -193,15 +194,15 @@ def test_stream_stream_interval_join_equals_batch_range_join(
 def test_foreachbatch_cdc_apply_keeps_latest_and_is_idempotent(spark,
                                                                tmp_path):
     """CDC stream → foreachBatch keep-latest apply: the final table equals
-    the global keep-latest merge, and replaying the same batches into the
+    the global keep-latest merge, replaying the same batches into the
     same table (fresh checkpoint — the failure/redelivery case) changes
-    nothing."""
+    nothing, and a later batch carrying an older version of a key
+    loses to the version already in the table."""
     import time
 
     from mura_spark.streaming import sinks
 
     src = str(tmp_path / "cdc_src")
-    tbl = str(tmp_path / "cdc_table")
     schema = "id INT, payload STRING, version INT"
     b1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1), (3, "c", 1)],
                                schema=schema)
@@ -209,21 +210,75 @@ def test_foreachbatch_cdc_apply_keeps_latest_and_is_idempotent(spark,
     b1.coalesce(1).write.mode("append").parquet(src)
     time.sleep(1.1)  # file mtimes order the micro-batches
     b2.coalesce(1).write.mode("append").parquet(src)
+    target = MuraTable.create(spark, str(tmp_path / "cdc_table"),
+                              b1.limit(0))
 
     def run(ck):
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = sinks.apply_cdc_batches(stream, tbl, ["id"], "version",
+        q = sinks.apply_cdc_batches(stream, target, ["id"], "version",
                                     str(tmp_path / ck), available_now=True)
         q.awaitTermination(120)
 
     run("ck1")
     want = {(1, "a", 1), (2, "b2", 2), (3, "c", 1), (4, "d", 1)}
-    got = {tuple(r) for r in spark.read.parquet(tbl).collect()}
+    got = {tuple(r) for r in target.read().collect()}
     assert got == want
     run("ck2")  # redelivery of every batch
-    again = {tuple(r) for r in spark.read.parquet(tbl).collect()}
+    again = {tuple(r) for r in target.read().collect()}
     assert again == want
+    time.sleep(1.1)
+    spark.createDataFrame([(2, "stale", 1)], schema=schema) \
+         .coalesce(1).write.mode("append").parquet(src)
+    run("ck1")  # resumes at the new file: its older version loses
+    assert {tuple(r) for r in target.read().collect()} == want
+
+
+def test_cdc_sink_second_batch_keeps_earlier_keys(spark, tmp_path):
+    """A later batch merges into the accumulated table: it never
+    replaces it as if it were the first batch."""
+    from mura_spark.streaming.sinks import apply_cdc_batches
+    src = str(tmp_path / "src")
+    first = spark.createDataFrame([(1, "a", 1)],
+                                  "id long, val string, v long")
+    first.coalesce(1).write.parquet(src)
+    target = MuraTable.create(spark, str(tmp_path / "tbl"),
+                              first.limit(0))
+
+    def run(ck):
+        stream = (spark.readStream
+                  .schema("id long, val string, v long").parquet(src))
+        q = apply_cdc_batches(stream, target, ["id"], "v",
+                              str(tmp_path / ck), available_now=True)
+        q.awaitTermination(120)
+
+    run("ck1")
+    spark.createDataFrame([(2, "b", 1)], "id long, val string, v long") \
+         .coalesce(1).write.mode("append").parquet(src)
+    run("ck1")
+    rows = sorted((r.id, r.val) for r in target.read().collect())
+    # a second batch that REPLACED the table would leave just (2, 'b');
+    # key 1 must survive
+    assert rows == [(1, "a"), (2, "b")]
+
+
+def test_cdc_sink_first_batch_keeps_latest(spark, tmp_path):
+    from mura_spark.streaming.sinks import apply_cdc_batches
+    src = str(tmp_path / "src")
+    # one file => availableNow delivers the WHOLE initial load as one
+    # batch containing two versions of key 1
+    load = spark.createDataFrame(
+        [(1, "a", 1), (1, "a2", 2), (2, "b", 1)],
+        "id long, val string, v long")
+    load.coalesce(1).write.parquet(src)
+    target = MuraTable.create(spark, str(tmp_path / "tbl"), load.limit(0))
+    stream = (spark.readStream.schema("id long, val string, v long")
+              .parquet(src))
+    q = apply_cdc_batches(stream, target, ["id"], "v",
+                          str(tmp_path / "ck"), available_now=True)
+    q.awaitTermination(120)
+    rows = sorted((r.id, r.val, r.v) for r in target.read().collect())
+    assert rows == [(1, "a2", 2), (2, "b", 1)]
 
 
 def test_stream_static_enrichment_equals_batch(spark, events, sf_dir,
@@ -272,19 +327,35 @@ def test_streaming_sliding_equals_batch(spark, events, tmp_path):
     assert g == b
 
 
+def _rollup_target(spark, path, first):
+    from mura_spark.operators.incremental import partial_state
+    return MuraTable.create(spark, path,
+                            partial_state(first, ["k"], "v").limit(0))
+
+
+def _finalized(target):
+    from mura_spark.operators.incremental import finalize
+    return sorted(map(tuple, finalize(target.read(), ["k"]).collect()))
+
+
+def _recomputed(frame):
+    from mura_spark.operators.incremental import finalize, partial_state
+    return sorted(map(tuple, finalize(
+        partial_state(frame, ["k"], "v"), ["k"]).collect()))
+
+
 def test_foreachbatch_rollup_maintenance_matches_batch_and_skips_redelivery(
         spark, tmp_path):
     """Streaming incremental-rollup sink: per-micro-batch partial states
     merged into the state table finalize to the batch recompute, and
-    redelivering completed batches (fresh checkpoint, same state) changes
-    nothing — additive partials are guarded by the batch-id marker."""
+    replaying every batch (fresh checkpoint, same state) changes
+    nothing — the fresh query's batch 0 rebuilds instead of adding its
+    partials to the old state."""
     import time
 
-    from mura_spark.operators.incremental import finalize, partial_state
     from mura_spark.streaming import sinks
 
     src = str(tmp_path / "roll_src")
-    state = str(tmp_path / "roll_state")
     schema = "k STRING, v DOUBLE"
     b1 = spark.createDataFrame([("a", 1.0), ("b", 2.0), ("a", 3.0)],
                                schema=schema)
@@ -292,49 +363,44 @@ def test_foreachbatch_rollup_maintenance_matches_batch_and_skips_redelivery(
     b1.coalesce(1).write.mode("append").parquet(src)
     time.sleep(1.1)  # file mtimes order the micro-batches
     b2.coalesce(1).write.mode("append").parquet(src)
+    target = _rollup_target(spark, str(tmp_path / "roll_state"), b1)
 
     def run(ck):
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = sinks.maintain_rollup_batches(stream, state, ["k"], "v",
+        q = sinks.maintain_rollup_batches(stream, target, ["k"], "v",
                                           str(tmp_path / ck),
                                           available_now=True)
         q.awaitTermination(120)
 
     run("ck1")
-    want = sorted(map(tuple, finalize(
-        partial_state(b1.unionByName(b2), ["k"], "v"), ["k"]).collect()))
-    got = sorted(map(tuple, finalize(
-        spark.read.parquet(state), ["k"]).collect()))
-    assert got == want
-    run("ck2")  # redelivery of every batch: marker must block re-merge
-    again = sorted(map(tuple, finalize(
-        spark.read.parquet(state), ["k"]).collect()))
-    assert again == want
+    want = _recomputed(b1.unionByName(b2))
+    assert _finalized(target) == want
+    run("ck2")  # replay of every batch must not double-count
+    assert _finalized(target) == want
 
 
 def test_rollup_sink_checkpoint_restart_processes_only_new_files(
         spark, tmp_path):
     """Durability: restarting the rollup stream with the SAME checkpoint
     after new files arrive processes only the new batches (offsets
-    resume; the batch-id marker advances past the earlier run's ids) and
-    the state still equals the batch recompute over everything."""
+    resume; the batch ids continue past the earlier run's) and the
+    state still equals the batch recompute over everything."""
     import time
 
-    from mura_spark.operators.incremental import finalize, partial_state
     from mura_spark.streaming import sinks
 
     src = str(tmp_path / "rs_src")
-    state = str(tmp_path / "rs_state")
     ck = str(tmp_path / "rs_ck")
     schema = "k STRING, v DOUBLE"
     b1 = spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema=schema)
     b1.coalesce(1).write.mode("append").parquet(src)
+    target = _rollup_target(spark, str(tmp_path / "rs_state"), b1)
 
     def run():
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = sinks.maintain_rollup_batches(stream, state, ["k"], "v", ck,
+        q = sinks.maintain_rollup_batches(stream, target, ["k"], "v", ck,
                                           available_now=True)
         q.awaitTermination(120)
 
@@ -343,11 +409,50 @@ def test_rollup_sink_checkpoint_restart_processes_only_new_files(
     b2 = spark.createDataFrame([("a", 10.0), ("c", 4.0)], schema=schema)
     b2.coalesce(1).write.mode("append").parquet(src)
     run()  # same checkpoint: resumes at the new file only
-    want = sorted(map(tuple, finalize(
-        partial_state(b1.unionByName(b2), ["k"], "v"), ["k"]).collect()))
-    got = sorted(map(tuple, finalize(
-        spark.read.parquet(state), ["k"]).collect()))
-    assert got == want
+    assert _finalized(target) == _recomputed(b1.unionByName(b2))
+
+
+def test_rollup_sink_replays_a_batch_whose_checkpoint_commit_was_lost(
+        spark, tmp_path):
+    """Crash between the table commit and Spark's checkpoint commit:
+    the restart re-runs the last batch, and its txn mark (in the same
+    table commit as the state) makes the replay a no-op — the state
+    still equals the batch recompute and no table version is added."""
+    import os
+    import time
+
+    from mura_spark.streaming import sinks
+
+    src = str(tmp_path / "lc_src")
+    ck = str(tmp_path / "lc_ck")
+    schema = "k STRING, v DOUBLE"
+    b1 = spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema=schema)
+    b2 = spark.createDataFrame([("a", 10.0), ("c", 4.0)], schema=schema)
+    b1.coalesce(1).write.mode("append").parquet(src)
+    time.sleep(1.1)  # file mtimes order the micro-batches
+    b2.coalesce(1).write.mode("append").parquet(src)
+    target = _rollup_target(spark, str(tmp_path / "lc_state"), b1)
+
+    def run():
+        stream = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        q = sinks.maintain_rollup_batches(stream, target, ["k"], "v", ck,
+                                          available_now=True)
+        q.awaitTermination(120)
+
+    run()
+    head = target._latest()
+    commits = os.path.join(ck, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 1  # the replayed batch is a merge, not a rebuild
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    run()  # re-runs batch `last`
+    assert os.path.exists(os.path.join(commits, str(last)))
+    assert _finalized(target) == _recomputed(b1.unionByName(b2))
+    assert target._latest() == head
 
 
 def test_rollup_sink_fresh_checkpoint_rebuilds_not_skips(spark, tmp_path):
@@ -357,19 +462,18 @@ def test_rollup_sink_fresh_checkpoint_rebuilds_not_skips(spark, tmp_path):
     skipped and old state never double-counted."""
     import time
 
-    from mura_spark.operators.incremental import finalize, partial_state
     from mura_spark.streaming import sinks
 
     src = str(tmp_path / "fr_src")
-    state = str(tmp_path / "fr_state")
     schema = "k STRING, v DOUBLE"
     b1 = spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema=schema)
     b1.coalesce(1).write.mode("append").parquet(src)
+    target = _rollup_target(spark, str(tmp_path / "fr_state"), b1)
 
     def run(ck):
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = sinks.maintain_rollup_batches(stream, state, ["k"], "v",
+        q = sinks.maintain_rollup_batches(stream, target, ["k"], "v",
                                           str(tmp_path / ck),
                                           available_now=True)
         q.awaitTermination(120)
@@ -379,42 +483,41 @@ def test_rollup_sink_fresh_checkpoint_rebuilds_not_skips(spark, tmp_path):
     b2 = spark.createDataFrame([("a", 10.0), ("c", 4.0)], schema=schema)
     b2.coalesce(1).write.mode("append").parquet(src)
     run("ck2")  # checkpoint lost: full replay must rebuild, not skip
-    want = sorted(map(tuple, finalize(
-        partial_state(b1.unionByName(b2), ["k"], "v"), ["k"]).collect()))
-    got = sorted(map(tuple, finalize(
-        spark.read.parquet(state), ["k"]).collect()))
-    assert got == want
+    assert _finalized(target) == _recomputed(b1.unionByName(b2))
 
 
 def test_rollup_sink_surfaces_merge_failure(spark, tmp_path):
     """A corrupted/incompatible state table must FAIL the stream, never be
-    silently replaced by one batch's partials (the merge is outside the
-    read-scoped fallback)."""
-    import os
+    silently replaced by one batch's partials."""
+    import time
 
     import pytest as _pytest
 
     from mura_spark.streaming import sinks
 
     src = str(tmp_path / "mf_src")
-    state = str(tmp_path / "mf_state")
     ck = str(tmp_path / "mf_ck")
     schema = "k STRING, v DOUBLE"
-    spark.createDataFrame([("a", 1.0)], schema=schema) \
-         .coalesce(1).write.mode("append").parquet(src)
-    # state exists but has the wrong shape (missing the state columns)
-    spark.createDataFrame([("junk",)], "z STRING").write.parquet(state)
-    os.makedirs(ck, exist_ok=True)
-    with open(os.path.join(ck, "rollup_last_batch"), "w") as fh:
-        fh.write("-5")  # marker present → merge path, not rebuild
+    first = spark.createDataFrame([("a", 1.0)], schema=schema)
+    first.coalesce(1).write.mode("append").parquet(src)
+    target = _rollup_target(spark, str(tmp_path / "mf_state"), first)
 
-    stream = (spark.readStream.schema(schema).parquet(src))
-    q = sinks.maintain_rollup_batches(stream, state, ["k"], "v", ck,
-                                      available_now=True)
+    def run():
+        stream = (spark.readStream.schema(schema).parquet(src))
+        return sinks.maintain_rollup_batches(stream, target, ["k"], "v",
+                                             ck, available_now=True)
+
+    run().awaitTermination(120)
+    # state now has the wrong shape (missing the state columns)
+    target.overwrite(spark.createDataFrame([("junk",)], "z STRING"))
+    time.sleep(1.1)
+    spark.createDataFrame([("b", 2.0)], schema=schema) \
+         .coalesce(1).write.mode("append").parquet(src)
+    q = run()  # batch 1 merges into the junk state
     with _pytest.raises(Exception):
         q.awaitTermination(120)
     # the junk state was not overwritten
-    assert spark.read.parquet(state).columns == ["z"]
+    assert target.read().columns == ["z"]
 
 
 def test_stateful_locf_equals_batch_window(spark, events, tmp_path):
