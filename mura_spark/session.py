@@ -24,7 +24,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mura_spark.catalog import Catalog
+from mura_spark.catalog import Catalog, TableInfo
 from mura_spark.sources.table_format import MuraTable
 
 #: Defaults applied by :func:`get_spark`. Explicit so behavior is pinned
@@ -138,9 +138,9 @@ class MuraSession:
         ``table_changes('t', from[, to])`` read snapshots and the change
         feed of registered mura tables inside any query. The registered
         names it mentions are looked up first: a moved one re-binds."""
-        for name in {w.lower() for w in re.findall(r"[A-Za-z_]\w*", query)}:
-            self.catalog.lookup(name)
-        routed = self._route(query)
+        bound = {name: self.catalog.lookup(name) for name in
+                 {w.lower() for w in re.findall(r"[A-Za-z_]\w*", query)}}
+        routed = self._route(query, bound)
         if routed is not None:
             return routed
         query = re.sub(r"(?i)\bCREATE\s+EXTERNAL\s+TABLE\b",
@@ -363,8 +363,8 @@ class MuraSession:
 
     #: The versioned-table statements, as (pattern, result schema,
     #: handler). The ``table`` group names the registered mura table the
-    #: handler gets; ``_route`` owns the lookup, the fall-through, the
-    #: read-only refusal and the result frame. A commit needs nothing
+    #: handler gets; ``_route`` owns the fall-through, the read-only
+    #: refusal and the result frame. A commit needs nothing
     #: further: the next lookup re-binds the name at the new head.
     _STATEMENTS = [
         (_statement(rf"DELETE\s+FROM\s+{_T}(?:\s+WHERE\s+(?P<where>.+?))?"),
@@ -415,17 +415,20 @@ class MuraSession:
              m["retain"] or 2)),)]),
     ]
 
-    def _route(self, query: str) -> DataFrame | None:
+    def _route(self, query: str,
+               bound: dict[str, TableInfo | None]) -> DataFrame | None:
         """Runs ``query`` when it is one of :attr:`_STATEMENTS` over a
         registered mura table; None when it is not (Spark runs it, or
-        reports its own error for an unregistered name)."""
+        reports its own error for an unregistered name). ``bound`` holds
+        the catalog entries :meth:`sql` looked up for the query's words,
+        so the table is neither looked up nor its log listed again."""
         for pattern, schema, handler in self._STATEMENTS:
             m = pattern.match(query)
             if m is not None:
                 break
         else:
             return None
-        info = self.catalog.lookup(m["table"])
+        info = bound[m["table"].lower()]
         if info is None:
             return None
         if info.file_type != "mura":
@@ -433,7 +436,7 @@ class MuraSession:
                 f"{m['table']!r} is a read-only {info.file_type} external "
                 f"table — this statement needs a versioned table "
                 f"(register with file_type='mura')")
-        rows = handler(self, MuraTable.load(self.spark, info.location), m)
+        rows = handler(self, MuraTable(self.spark, info.location), m)
         return self.spark.createDataFrame(rows, schema)
 
     # -- DDL entry point (reference queryplanner.rs:73-95) --

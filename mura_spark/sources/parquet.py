@@ -237,64 +237,10 @@ def write_zorder(df: DataFrame, path: str, cols: list[str],
 
 
 def write(df: DataFrame, path: str, mode: str = "error",
-          partition_by: list[str] | None = None,
-          target_file_rows: int | None = None) -> None:
+          partition_by: list[str] | None = None) -> None:
     """Parquet sink. ``partition_by`` produces hive-style directory
-    partitioning (the scan-side partition-pruning contract);
-    ``target_file_rows`` caps rows per file so downstream scans parallelize
-    (avoids the few-giant-files failure mode at scale)."""
+    partitioning (the scan-side partition-pruning contract)."""
     writer = df.write.mode(mode)
-    if target_file_rows:
-        writer = writer.option("maxRecordsPerFile", target_file_rows)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def compact(spark: SparkSession, src_path: str, dst_path: str,
-            target_file_bytes: int = 128 * 1024 * 1024,
-            mode: str = "error") -> tuple[int, int]:
-    """Small-file compaction (the OPTIMIZE maintenance job): rewrite the
-    parquet dataset at ``src_path`` into ``ceil(total_bytes /
-    target_file_bytes)`` files at ``dst_path``. Returns
-    ``(n_files_before, n_files_after_planned)``.
-
-    Streaming ingest and fine-grained partition overwrites accrete tiny
-    files; at scale each costs an open + footer parse + catalog entry per
-    query, and scan parallelism degrades to one task per file. Compaction
-    is one round-robin repartition (no key shuffle — there is no key) and
-    one write; row-group-level row order is not preserved (parquet scans
-    never promise one). Writes to a NEW path: self-overwrite would have
-    the job lazily read the very files it truncates — callers swap paths
-    (or atomically rename) after success, which also keeps the job
-    re-runnable. For layouts with meaningful sort/cluster keys, use
-    :func:`write_sorted` / :func:`write_zorder` instead — compaction
-    deliberately does not re-sort.
-    """
-    df = spark.read.parquet(src_path)
-    files = df.inputFiles()
-    total = sum(_file_size(spark, f) for f in files)
-    # never grow the file count: a "pass-through" write would still go
-    # through scan-split partitioning (maxPartitionBytes) and could emit
-    # MORE files than the input while reporting no change
-    n_after = min(len(files), max(1, -(-total // target_file_bytes)))
-    df.repartition(n_after).write.mode(mode).parquet(dst_path)
-    return len(files), n_after
-
-
-def overwrite_partitions(df: DataFrame, path: str,
-                         partition_cols: list[str]) -> None:
-    """Dynamic partition overwrite: rewrite ONLY the partitions present
-    in ``df``, leaving every other partition untouched — the idempotent
-    backfill primitive for partitioned fact tables (re-running one
-    day's pipeline must not wipe the year).
-
-    Static overwrite (Spark's default) deletes the ENTIRE table root
-    first; the per-write ``partitionOverwriteMode=dynamic`` option
-    scopes the delete to partitions with incoming rows. O(files of the
-    touched partitions) — never O(table).
-    """
-    (df.write.mode("overwrite")
-       .option("partitionOverwriteMode", "dynamic")
-       .partitionBy(*partition_cols)
-       .parquet(path))

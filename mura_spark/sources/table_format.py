@@ -2,10 +2,12 @@
 
 The reference's Parquet surface is a read-only external-table scan
 (/root/reference/src/execution/mod.rs registers parquet for SELECT
-only); ``sources/merge.py`` added in-place copy-on-write MERGE on top
-of plain directories. This module supplies the remaining lakehouse
-mechanics a mutable 100 TB deployment needs — the same core ideas as
-Delta/Iceberg, deliberately minimal and Spark-first:
+only). This module is the engine's one mutation path, with the
+lakehouse mechanics a mutable 100 TB deployment needs — the same core
+ideas as Delta/Iceberg, deliberately minimal and Spark-first. A plain
+parquet directory becomes mutable through
+``MuraTable.create(spark, path, spark.read.parquet(src),
+partition_cols=...)``.
 
 - **Immutable data files + a manifest log.** Every commit writes NEW
   parquet files under ``_data/<commit>/`` and then one JSON manifest
@@ -54,17 +56,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import urllib.parse
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from mura_spark.sources.merge import (MergeStats,
-                                      _typed_partition_dir_value,
-                                      check_merge_source,
-                                      hive_partition_values,
-                                      merge_status_frame,
-                                      partition_filter)
 
 _LOG_DIR = "_mura_log"
 _DATA_DIR = "_data"
@@ -89,10 +86,141 @@ def _list_part_files(commit_dir: str) -> list[str]:
     return sorted(out)
 
 
-# hive value canonicalization lives in sources/merge.py (the shared
-# MERGE core); this alias keeps this module's public-ish name for
-# table_stream.py and the tests
-_partition_values = hive_partition_values
+#: hive's directory name for a NULL partition value
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+@dataclass
+class MergeStats:
+    """Row-level outcome of one :meth:`MuraTable.merge` commit."""
+    updated: int
+    deleted: int
+    inserted: int
+    copied: int  # unmatched target rows in touched partitions, rewritten
+
+
+# ------------------------------------------------------ merge core
+
+
+def hive_partition_values(relpath: str, partition_cols: list[str]) -> tuple:
+    """Hive partition values encoded in a data-file path, as strings
+    (the pruning key; Spark re-derives typed values from the directory
+    layout at read time). Hive's null sentinel maps back to None so
+    null partitions compare equal to source nulls; %XX escapes
+    (Spark's escapePathName for ':', '#', '%', ... in values) are
+    decoded so the returned strings match the written values."""
+    vals = dict(seg.split("=", 1) for seg in relpath.split(os.sep)
+                if "=" in seg)
+    return tuple(None if vals.get(c) in (None, HIVE_NULL)
+                 else urllib.parse.unquote(vals[c])
+                 for c in partition_cols)
+
+
+def check_merge_source(target: DataFrame, source: DataFrame,
+                       key_cols: list[str], *,
+                       trust_source_unique: bool = False) -> DataFrame:
+    """Shared MERGE preconditions: the source must carry exactly the
+    target's columns (returned aligned to the target's order) and at
+    most one row per key — multiple source rows matching one target
+    row make the merge ambiguous, so they raise (the Delta rule),
+    enforced with one aggregation over the source.
+
+    ``trust_source_unique=True`` skips the key-uniqueness aggregation (a
+    Spark action — several jobs under AQE's incremental limit-collect)
+    for callers whose source is unique per key BY CONSTRUCTION, e.g.
+    the output of ``groupBy(*key_cols)`` — the incremental-view
+    refresh's combine frame. The schema check still runs. Nothing
+    checks the trust: a source with several rows for one key then
+    gives wrong, nondeterministic merge output and raises no error —
+    the full-outer merge join writes every one of those rows, so the
+    key is duplicated in the table, and which duplicate a later
+    key-wise read or merge sees depends on partitioning."""
+    if set(target.columns) != set(source.columns):
+        raise ValueError(
+            f"source schema {sorted(source.columns)} != target schema "
+            f"{sorted(target.columns)}")
+    source = source.select(*target.columns)
+    if not trust_source_unique:
+        dup = (source.groupBy(*key_cols).count()
+                     .where(F.col("count") > 1).limit(1).collect())
+        if dup:
+            raise ValueError(
+                f"multiple source rows share key "
+                f"{[dup[0][k] for k in key_cols]} — merge is ambiguous "
+                f"(dedupe the source first)")
+    return source
+
+
+def partition_filter(rows, partition_cols: list[str]):
+    """OR-of-ANDs partition predicate from collected source partition
+    rows — typed literals against bare partition columns, the shape
+    partition pruning recognizes (no casts on the column side)."""
+    pred = None
+    for row in rows:
+        clause = None
+        for c in partition_cols:
+            eq = F.col(c).eqNullSafe(F.lit(row[c]))
+            clause = eq if clause is None else clause & eq
+        pred = clause if pred is None else pred | clause
+    return pred
+
+
+def merge_status_frame(target: DataFrame, source: DataFrame,
+                       key_cols: list[str],
+                       take_source_matched: bool = True,
+                       with_preimages: bool = False) -> DataFrame:
+    """The MERGE join: null-safe full-outer
+    join on the keys with explicit presence markers (so rows whose
+    every data column is NULL still classify), returning the target's
+    columns plus ``__status`` in ('matched', 'insert', 'copy').
+    Matched rows take the source side unless ``take_source_matched``
+    is False (the WHEN MATCHED THEN IGNORE shape, where the caller
+    keeps target values). ``with_preimages`` adds ``__pre_<col>``
+    columns carrying the target side of every row — the CDF
+    pre-image source."""
+    cols = list(target.columns)
+    j = (target.withColumn("__t", F.lit(1)).alias("t")
+               .join(source.withColumn("__s", F.lit(1)).alias("s"),
+                     [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
+                      for k in key_cols],
+                     "full_outer"))
+    status = (F.when(F.col("t.__t").isNotNull()
+                     & F.col("s.__s").isNotNull(), F.lit("matched"))
+               .when(F.col("s.__s").isNotNull(), F.lit("insert"))
+               .otherwise(F.lit("copy")))
+    take_source = status == F.lit("insert") if not take_source_matched \
+        else status.isin("matched", "insert")
+    out_cols = [F.when(take_source, F.col(f"s.{c}"))
+                 .otherwise(F.col(f"t.{c}")).alias(c) for c in cols]
+    pre_cols = [F.col(f"t.{c}").alias(f"__pre_{c}")
+                for c in cols] if with_preimages else []
+    return j.select(*out_cols, *pre_cols, status.alias("__status"))
+
+
+def _typed_partition_dir_value(raw: str, dtype):
+    """A decoded hive directory value parsed back to the partition
+    column's Python type, so comparisons against collected row values
+    are TYPED — string rendering differs between Java (directory
+    names: Double.toString gives '1.0E-7') and Python (str gives
+    '1e-07'), but float('1.0E-7') == 1e-07 exactly because Java's
+    shortest-round-trip rendering parses back to the same double."""
+    t = dtype.simpleString()
+    if t in ("tinyint", "smallint", "int", "bigint"):
+        return int(raw)
+    if t in ("float", "double"):
+        return float(raw)
+    if t == "boolean":
+        return raw.lower() == "true"
+    if t == "date":
+        import datetime
+        return datetime.date.fromisoformat(raw)
+    if t.startswith("timestamp"):
+        import datetime
+        return datetime.datetime.fromisoformat(raw)
+    if t.startswith("decimal"):
+        from decimal import Decimal
+        return Decimal(raw)
+    return raw
 
 
 #: How each commit action feeds the row-level change feed — the ONE
@@ -828,13 +956,13 @@ class MuraTable:
               source_unique: bool = False) -> MergeStats:
         """Copy-on-write MERGE with snapshot semantics.
 
-        Same row semantics as :func:`mura_spark.sources.merge.merge_into`
-        (update|delete on match, optional insert, ambiguous-source
-        rejection) — but instead of overwriting files in place, it
-        rewrites ONLY the touched partitions into a new commit and
-        publishes a manifest that keeps every untouched file by
-        reference. Old versions remain time-travel readable until
-        :meth:`vacuum`.
+        Update|delete on match, optional insert, ambiguous-source
+        and schema-drift rejection (:func:`check_merge_source`). No
+        file is overwritten in place: the merge rewrites ONLY the
+        touched partitions into a new commit and publishes a manifest
+        that keeps every untouched file by reference, so a partition
+        whose rows were all deleted simply drops out of the manifest.
+        Old versions remain time-travel readable until :meth:`vacuum`.
 
         Partition-pruned matching carries the standard precondition of
         partitioned upserts (Delta's replaceWhere rule): a key's
@@ -861,8 +989,7 @@ class MuraTable:
         for a source that is unique per key by construction. Nothing
         checks the trust: a source with several rows for one key then
         gives wrong, nondeterministic output (duplicated keys) and
-        raises no error (see
-        :func:`mura_spark.sources.merge.check_merge_source`).
+        raises no error (see :func:`check_merge_source`).
         ``source_unique`` is its former name, still accepted for
         ``perfbench/workloads.py``.
         """
@@ -896,14 +1023,14 @@ class MuraTable:
             target = target.where(partition_filter(rows, pcols))
             # TYPED comparison: directory strings are Java-rendered
             # ('1.0E-7') while collected rows are Python values; both
-            # sides meet at the parsed type (see merge.py). A file
-            # whose dir value doesn't parse stays by reference.
+            # sides meet at the parsed type (_typed_partition_dir_value).
+            # A file whose dir value doesn't parse stays by reference.
             ptypes = {c: target.schema[c].dataType for c in pcols}
             touched = {tuple(row[c] for c in pcols) for row in rows}
 
             def _typed_of(f: str):
                 out = []
-                for c, raw in zip(pcols, _partition_values(f, pcols)):
+                for c, raw in zip(pcols, hive_partition_values(f, pcols)):
                     if raw is None:
                         out.append(None)
                         continue

@@ -52,7 +52,6 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
 from pyspark.sql.types import StructType
 
 from mura_spark.sources import table_format as tf
-from mura_spark.sources.merge import HIVE_NULL, _typed_partition_dir_value
 
 
 class _FilesPartition(InputPartition):
@@ -83,7 +82,7 @@ def _plan(table: tf.MuraTable, sv: int, ev: int,
         for rel in files:
             # sidecar files (ctype None) carry every column themselves
             consts = {} if ctype is None else \
-                dict(zip(pcols, tf._partition_values(rel, pcols)))
+                dict(zip(pcols, tf.hive_partition_values(rel, pcols)))
             if cdf:
                 consts["_commit_version"] = v
                 if ctype is not None:
@@ -114,7 +113,7 @@ def _read_partition(partition, schema: StructType):
         if f.name in partition.consts:
             v = partition.consts[f.name]
             if isinstance(v, str):  # hive path value; CDF stamps are typed
-                v = _typed_partition_dir_value(v, f.dataType)
+                v = tf._typed_partition_dir_value(v, f.dataType)
             arrays.append(pa.array([v] * n, type=at))
         elif f.name in tbl.column_names:
             arrays.append(tbl.column(f.name).cast(at).combine_chunks())
@@ -249,7 +248,7 @@ def _hive_segment(col: str, v) -> str:
     conventions for the characters these restricted types produce)."""
     import urllib.parse
     if v is None:
-        return f"{col}={HIVE_NULL}"
+        return f"{col}={tf.HIVE_NULL}"
     return f"{col}={urllib.parse.quote(str(v), safe='')}"
 
 

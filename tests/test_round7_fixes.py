@@ -3,11 +3,6 @@
 Each test here reproduces a bug the review found in the round-7
 additions and asserts the fix:
 
-- MERGE partition pruning compared ``str(row[c])`` against raw hive
-  path segments, so boolean partition values ('True' vs 'true') and
-  Spark-escaped characters (':' -> '%3A') never matched — the old file
-  of a rewritten partition stayed in the manifest alongside the
-  rewrite, and every read returned the partition's rows twice.
 - ``build_blooms`` ran over pandas batches, where int64-with-nulls
   coerces to float64: a single NULL in a bloom-tracked int column
   crashed every subsequent commit, and values past 2^53 would have
@@ -27,14 +22,11 @@ additions and asserts the fix:
 
 from __future__ import annotations
 
-import json
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mura_spark.sources.table_format import MuraTable, _partition_values
+from mura_spark.sources.table_format import MuraTable
 
 
 def _df(spark, rows, schema="k long, m int, val string"):
@@ -46,54 +38,6 @@ def registered(spark):
     from mura_spark.sources.table_stream import register
     register(spark)
     return spark
-
-
-# ------------------------------------------------ merge partition pruning
-
-
-def test_merge_on_boolean_partition_does_not_duplicate(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = _df(spark, [(1, True, "a"), (2, False, "b")],
-             "k long, flag boolean, val string")
-    t = MuraTable.create(spark, path, df, partition_cols=["flag"])
-    src = _df(spark, [(1, True, "a2")],
-              "k long, flag boolean, val string")
-    st = t.merge(src, key_cols=["k"])
-    assert (st.updated, st.inserted) == (1, 0)
-    rows = sorted((r.k, r.flag, r.val) for r in t.read().collect())
-    # the bug kept flag=true's old file by reference AND wrote the
-    # rewrite -> (1, True, 'a') and (1, True, 'a2') both present
-    assert rows == [(1, True, "a2"), (2, False, "b")]
-    assert t.row_count() == 2
-
-
-def test_merge_on_escaped_string_partition_does_not_duplicate(
-        spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = _df(spark, [(1, "a:b", "x"), (2, "c#d", "y")],
-             "k long, part string, val string")
-    t = MuraTable.create(spark, path, df, partition_cols=["part"])
-    # Spark escapes ':' and '#' in hive paths (part=a%3Ab)
-    assert any("%3A" in f for f in t._manifest()["files"])
-    st = t.merge(_df(spark, [(1, "a:b", "x2")],
-                     "k long, part string, val string"),
-                 key_cols=["k"])
-    assert (st.updated, st.inserted) == (1, 0)
-    rows = sorted((r.k, r.part, r.val) for r in t.read().collect())
-    assert rows == [(1, "a:b", "x2"), (2, "c#d", "y")]
-
-
-def test_partition_values_decodes_hive_escapes():
-    assert _partition_values(
-        os.path.join("_data", "c0", "part=a%3Ab", "f.parquet"),
-        ["part"]) == ("a:b",)
-    assert _partition_values(
-        os.path.join("_data", "c0", "flag=true", "f.parquet"),
-        ["flag"]) == ("true",)
-    assert _partition_values(
-        os.path.join("_data", "c0",
-                     "part=__HIVE_DEFAULT_PARTITION__", "f.parquet"),
-        ["part"]) == (None,)
 
 
 # ------------------------------------------------------- bloom + NULLs
@@ -224,43 +168,6 @@ def test_cdf_stream_reader_covers_clone(registered, tmp_path):
 
 
 # ----------------------------- adversarial pass on this session's fixes
-
-
-def test_merge_into_delete_on_double_partition(spark, tmp_path):
-    """Java renders double dirs as '1.0E-7' while Python str gives
-    '1e-07' — the emptied-partition walk must compare TYPED values."""
-    from mura_spark.sources.merge import merge_into
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, 1e-07, "a"), (2, 15000000.0, "b")],
-                               "k long, p double, val string")
-    df.write.partitionBy("p").parquet(path)
-    dirs = [d for d in os.listdir(path) if d.startswith("p=")]
-    assert any("E" in d for d in dirs), dirs  # Java scientific form
-    st = merge_into(spark, path,
-                    spark.createDataFrame([(1, 1e-07, "a")],
-                                          "k long, p double, val string"),
-                    key_cols=["k"], partition_cols=["p"],
-                    when_matched="delete", insert_not_matched=False)
-    assert st.deleted == 1
-    rows = [(r.k, r.p) for r in spark.read.parquet(path).collect()]
-    assert rows == [(2, 15000000.0)]
-
-
-def test_mura_merge_on_double_partition_no_duplicates(spark, tmp_path):
-    """MuraTable.merge's keep-files set must also compare typed
-    partition values, or the Java-rendered dir is 'untouched' and its
-    old file rides next to the rewrite."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, 1e-07, "a"), (2, 0.5, "b")],
-                               "k long, p double, val string")
-    t = MuraTable.create(spark, path, df, partition_cols=["p"])
-    st = t.merge(spark.createDataFrame([(1, 1e-07, "a2")],
-                                       "k long, p double, val string"),
-                 key_cols=["k"])
-    assert (st.updated, st.inserted) == (1, 0)
-    rows = sorted((r.k, r.val) for r in t.read().collect())
-    assert rows == [(1, "a2"), (2, "b")]
-    assert t.row_count() == 2
 
 
 def test_sql_rewrite_handles_backslash_escaped_literals(spark, tmp_path):
@@ -499,25 +406,6 @@ def test_resize_image_handles_rgba_and_16bit():
     # wrap would sawtooth)
     flat = out16.astype(int).sum(axis=2).reshape(-1)
     assert (np.diff(flat) >= 0).all()
-
-
-# -------------------------------------------- merge_into emptied parts
-
-
-def test_merge_into_delete_removes_emptied_partition(spark, tmp_path):
-    from mura_spark.sources.merge import merge_into
-    path = str(tmp_path / "t")
-    df = _df(spark, [(1, 1, "a"), (2, 1, "b"), (3, 2, "c")])
-    df.write.partitionBy("m").parquet(path)
-    # delete EVERY row of partition m=1
-    st = merge_into(spark, path,
-                    _df(spark, [(1, 1, "a"), (2, 1, "b")]),
-                    key_cols=["k"], partition_cols=["m"],
-                    when_matched="delete", insert_not_matched=False)
-    assert st.deleted == 2
-    rows = [(r.k, r.m, r.val) for r in spark.read.parquet(path).collect()]
-    assert rows == [(3, 2, "c")]
-    assert not [d for d in os.listdir(path) if d == "m=1"]
 
 
 # --------------------------------------------------- bpe pretokenizer

@@ -271,28 +271,6 @@ def test_merge_schema_reads_union_of_batch_schemas(spark, sf_dir, tmp_path):
                          & F.col("p_name").isNull()).count() == n
 
 
-def test_compact_reduces_file_count_preserving_data(spark, sf_dir, tmp_path):
-    """Small-file compaction: 40 tiny files → size-targeted file count,
-    identical data, and an already-compact input passes through without
-    shrinking further."""
-    from mura_spark.sources.parquet import compact
-
-    ev = table(spark, sf_dir, "events").select("event_id", "value")
-    src = str(tmp_path / "tiny")
-    ev.repartition(40).write.parquet(src)
-    dst = str(tmp_path / "compacted")
-    before, after = compact(spark, src, dst, target_file_bytes=1 << 30)
-    assert before == 40 and after < before
-    import glob
-    assert len(glob.glob(f"{dst}/part-*.parquet")) == after
-    assert sorted(map(tuple, spark.read.parquet(dst).collect())) == \
-        sorted(map(tuple, ev.collect()))
-    # compact input: no further shrink, data still intact
-    b2, a2 = compact(spark, dst, str(tmp_path / "again"),
-                     target_file_bytes=1)
-    assert (b2, a2) == (after, after)
-
-
 def test_jsonl_permissive_quarantines_corrupt_rows(spark, tmp_path):
     """Malformed JSONL lines must not fail the scan: good rows parse,
     bad lines land whole in _corrupt_record with data columns NULL."""
@@ -312,22 +290,3 @@ def test_jsonl_permissive_quarantines_corrupt_rows(spark, tmp_path):
     assert len(bad) == 2
     assert all(r.id is None and r.v is None for r in bad)
     assert any("not json" in r._corrupt_record for r in bad)
-
-
-def test_dynamic_partition_overwrite_touches_only_incoming(spark, tmp_path):
-    """overwrite_partitions must replace exactly the partitions present
-    in the incoming frame and leave the others byte-identical — the
-    idempotent-backfill contract (static overwrite would wipe the root)."""
-    from mura_spark.sources.parquet import overwrite_partitions
-    path = str(tmp_path / "part_fact")
-    base = spark.createDataFrame(
-        [("d1", 1, 10.0), ("d1", 2, 20.0), ("d2", 3, 30.0)],
-        "day string, id long, v double")
-    base.write.partitionBy("day").parquet(path)
-    # backfill day 2 only, with corrected values
-    fix = spark.createDataFrame([("d2", 3, 99.0), ("d2", 4, 44.0)],
-                                "day string, id long, v double")
-    overwrite_partitions(fix, path, ["day"])
-    got = {(r.day, r.id): r.v for r in spark.read.parquet(path).collect()}
-    assert got == {("d1", 1): 10.0, ("d1", 2): 20.0,
-                   ("d2", 3): 99.0, ("d2", 4): 44.0}

@@ -86,7 +86,8 @@ def test_sql_reads_the_head_after_every_commit_path(spark, tmp_path,
                                                     monkeypatch):
     """A registered mura name re-binds at its head on lookup, whoever
     committed: the API (with a schema change), the stream sink, a view
-    refresh, or another session. A SQL DELETE loads the table once."""
+    refresh, or another session. A SQL DELETE lists the table's log
+    twice (the lookup and the commit) and reads the table once."""
     from mura_spark.session import MuraSession
     from mura_spark.sources.incremental_view import IncrementalAggView
     from mura_spark.sources.table_stream import register
@@ -135,12 +136,12 @@ def test_sql_reads_the_head_after_every_commit_path(spark, tmp_path,
     sees_head("hb_t", path)
 
     calls = []
-    load, read = MuraTable.load.__func__, MuraTable.read
-    monkeypatch.setattr(MuraTable, "load", classmethod(
-        lambda cls, *a: calls.append("load") or load(cls, *a)))
+    versions, read = MuraTable._versions, MuraTable.read
+    monkeypatch.setattr(MuraTable, "_versions", lambda self:
+                        calls.append("_versions") or versions(self))
     monkeypatch.setattr(MuraTable, "read", lambda self, *a, **kw:
                         calls.append("read") or read(self, *a, **kw))
     ms.sql("DELETE FROM hb_t WHERE k = 2")
-    assert sorted(calls) == ["load", "read"]
+    assert sorted(calls) == ["_versions", "_versions", "read"]
     monkeypatch.undo()
     sees_head("hb_t", path)

@@ -7,16 +7,18 @@ the lakehouse gap VERDICT r6 noted (the reference itself is read-only:
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from mura_spark.sources.table_format import (CommitConflict, MuraTable,
-                                             _partition_values)
+from mura_spark.sources.table_format import (CommitConflict, MergeStats,
+                                             MuraTable,
+                                             hive_partition_values)
 
 
-def _df(spark, rows):
-    return spark.createDataFrame(rows, "k long, m int, val string")
+def _df(spark, rows, schema="k long, m int, val string"):
+    return spark.createDataFrame(rows, schema)
 
 
 def _base(spark):
@@ -77,9 +79,16 @@ def test_merge_is_cow_and_touches_only_source_partitions(
     files_v2 = set(t._manifest(2)["files"])
     carried = files_v1 & files_v2
     assert carried == {f for f in files_v1
-                       if _partition_values(f, ["m"]) != ("2",)}
+                       if hive_partition_values(f, ["m"]) != ("2",)}
     # and no original file was modified or deleted on disk
     assert all(glob.glob(f"{path}/{f}") for f in files_v1)
+    # unpartitioned: nothing to prune, every target row is rewritten
+    u = MuraTable.create(spark, str(tmp_path / "u"),
+                         _df(spark, [(1, 1, "a"), (2, 1, "b")]))
+    assert u.merge(_df(spark, [(2, 1, "B"), (3, 1, "c")]),
+                   key_cols=["k"]) == MergeStats(updated=1, deleted=0,
+                                                 inserted=1, copied=1)
+    assert _vals(u.read()) == {(1, 1, "a"), (2, 1, "B"), (3, 1, "c")}
 
 
 def test_merge_delete_and_empty_source(spark, tmp_path):
@@ -87,12 +96,36 @@ def test_merge_delete_and_empty_source(spark, tmp_path):
                          partition_cols=["m"])
     stats = t.merge(_df(spark, []), key_cols=["k"])
     assert (stats.updated, stats.inserted) == (0, 0)
+    assert t._latest() == 1  # an empty source commits nothing
     stats = t.merge(_df(spark, [(10, 1, "x"), (11, 1, "y")]),
                     key_cols=["k"], when_matched="delete",
                     insert_not_matched=False)
     assert (stats.deleted, stats.inserted) == (2, 0)
     assert _vals(t.read()) == {v for v in _vals(_base(spark))
                                if v[0] not in (10, 11)}
+    # deleting the last row of m=1 drops the partition from the head
+    # manifest; the unmatched key 99 is not inserted
+    stats = t.merge(_df(spark, [(12, 1, "x"), (99, 1, "x")]),
+                    key_cols=["k"], when_matched="delete",
+                    insert_not_matched=False)
+    assert (stats.deleted, stats.inserted) == (1, 0)
+    assert _vals(t.read()) == {v for v in _vals(_base(spark))
+                               if v[1] != 1}
+    assert not [f for f in t._manifest()["files"]
+                if hive_partition_values(f, ["m"]) == ("1",)]
+    # a double partition lives under Java's rendering (p=1.0E-7), not
+    # Python's ('1e-07'): deleting its one key still drops its file
+    schema = "k long, p double, val string"
+    d = MuraTable.create(spark, str(tmp_path / "d"),
+                         _df(spark, [(1, 1e-07, "a"), (2, 15000000.0, "b")],
+                             schema), partition_cols=["p"])
+    assert any("p=1.0E-7" in f for f in d._manifest()["files"])
+    stats = d.merge(_df(spark, [(1, 1e-07, "a")], schema), key_cols=["k"],
+                    when_matched="delete", insert_not_matched=False)
+    assert stats.deleted == 1
+    assert [(r.k, r.p) for r in d.read().collect()] == [(2, 15000000.0)]
+    assert [hive_partition_values(f, ["p"])
+            for f in d._manifest()["files"]] == [("1.5E7",)]
 
 
 def test_merge_ambiguous_source_refused(spark, tmp_path):
@@ -101,6 +134,72 @@ def test_merge_ambiguous_source_refused(spark, tmp_path):
     with pytest.raises(ValueError, match="ambiguous"):
         t.merge(_df(spark, [(10, 1, "a"), (10, 1, "b")]),
                 key_cols=["k"])
+    with pytest.raises(ValueError, match="schema"):
+        t.merge(_df(spark, [(10, 1, "a", 1.0)],
+                    "k long, m int, val string, extra double"),
+                key_cols=["k"])
+
+
+def test_merge_on_boolean_partition_does_not_duplicate(spark, tmp_path):
+    path = str(tmp_path / "t")
+    df = _df(spark, [(1, True, "a"), (2, False, "b")],
+             "k long, flag boolean, val string")
+    t = MuraTable.create(spark, path, df, partition_cols=["flag"])
+    src = _df(spark, [(1, True, "a2")],
+              "k long, flag boolean, val string")
+    st = t.merge(src, key_cols=["k"])
+    assert (st.updated, st.inserted) == (1, 0)
+    rows = sorted((r.k, r.flag, r.val) for r in t.read().collect())
+    # the bug kept flag=true's old file by reference AND wrote the
+    # rewrite -> (1, True, 'a') and (1, True, 'a2') both present
+    assert rows == [(1, True, "a2"), (2, False, "b")]
+    assert t.row_count() == 2
+
+
+def test_merge_on_escaped_string_partition_does_not_duplicate(
+        spark, tmp_path):
+    path = str(tmp_path / "t")
+    df = _df(spark, [(1, "a:b", "x"), (2, "c#d", "y")],
+             "k long, part string, val string")
+    t = MuraTable.create(spark, path, df, partition_cols=["part"])
+    # Spark escapes ':' and '#' in hive paths (part=a%3Ab)
+    assert any("%3A" in f for f in t._manifest()["files"])
+    st = t.merge(_df(spark, [(1, "a:b", "x2")],
+                     "k long, part string, val string"),
+                 key_cols=["k"])
+    assert (st.updated, st.inserted) == (1, 0)
+    rows = sorted((r.k, r.part, r.val) for r in t.read().collect())
+    assert rows == [(1, "a:b", "x2"), (2, "c#d", "y")]
+
+
+def test_partition_values_decodes_hive_escapes():
+    assert hive_partition_values(
+        os.path.join("_data", "c0", "part=a%3Ab", "f.parquet"),
+        ["part"]) == ("a:b",)
+    assert hive_partition_values(
+        os.path.join("_data", "c0", "flag=true", "f.parquet"),
+        ["flag"]) == ("true",)
+    assert hive_partition_values(
+        os.path.join("_data", "c0",
+                     "part=__HIVE_DEFAULT_PARTITION__", "f.parquet"),
+        ["part"]) == (None,)
+
+
+def test_mura_merge_on_double_partition_no_duplicates(spark, tmp_path):
+    """MuraTable.merge's keep-files set must also compare typed
+    partition values, or the Java-rendered dir is 'untouched' and its
+    old file rides next to the rewrite."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, 1e-07, "a"), (2, 0.5, "b")],
+                               "k long, p double, val string")
+    t = MuraTable.create(spark, path, df, partition_cols=["p"])
+    st = t.merge(spark.createDataFrame([(1, 1e-07, "a2")],
+                                       "k long, p double, val string"),
+                 key_cols=["k"])
+    assert (st.updated, st.inserted) == (1, 0)
+    rows = sorted((r.k, r.val) for r in t.read().collect())
+    assert rows == [(1, "a2"), (2, "b")]
+    assert t.row_count() == 2
 
 
 def test_delete_all_rows_then_read_typed_empty(spark, tmp_path):
