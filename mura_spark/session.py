@@ -147,7 +147,7 @@ class MuraSession:
                        "CREATE TABLE", query)
         query = re.sub(r"(?i)\bSTORED\s+AS\s+PARQUET\b",
                        "USING parquet", query)
-        return self._sql_with_frames(query)
+        return self._sql_with_frames(query, bound)
 
     #: a SQL string literal — single-quoted AND double-quoted (Spark's
     #: default parser treats "..." as a string, not an identifier), each
@@ -183,7 +183,8 @@ class MuraSession:
         r"|\btable_changes\s*\(\s*'(?P<tc>\w+)'\s*,\s*(?P<lo>\d+)"
         r"(?:\s*,\s*(?P<hi>\d+))?\s*\)")
 
-    def _sql_with_frames(self, query: str) -> DataFrame:
+    def _sql_with_frames(self, query: str,
+                         bound: dict[str, TableInfo | None]) -> DataFrame:
         """Runs ``query`` with each ``t VERSION AS OF n`` / ``t FOR TAG
         'x'`` (time travel) and ``table_changes('t', from[, to])``
         (Delta's CDF table-valued function) over a registered mura table
@@ -192,11 +193,13 @@ class MuraSession:
         included). The frames go in as ``spark.sql`` format arguments:
         PySpark registers each under a unique view name and drops it
         once the query is analyzed, so no view outlives the call.
-        Matches on other names are left for Spark to reject."""
+        ``bound`` holds the catalog entries :meth:`sql` looked up, so
+        no name is looked up again. Matches on other names are left
+        for Spark to reject."""
         frames: dict[str, DataFrame] = {}
 
         def sub(m: "re.Match[str]") -> str:
-            t = self._versioned(m["tt"] or m["tc"])
+            t = self._versioned(bound.get((m["tt"] or m["tc"]).lower()))
             if t is None:
                 return m.group(0)
             key = f"__mura{len(frames)}"
@@ -215,13 +218,12 @@ class MuraSession:
             return self.spark.sql(query)
         return self.spark.sql(rewritten, **frames)
 
-    def _versioned(self, name: str) -> MuraTable | None:
-        """``name``'s table when it is registered with
-        ``file_type="mura"``, else None."""
-        info = self.catalog.lookup(name)
+    def _versioned(self, info: TableInfo | None) -> MuraTable | None:
+        """The table of catalog entry ``info`` when it is registered
+        with ``file_type="mura"``, else None."""
         if info is None or info.file_type != "mura":
             return None
-        return MuraTable.load(self.spark, info.location)
+        return MuraTable(self.spark, info.location)
 
     @staticmethod
     def _snapshot(t: MuraTable, ref: int | str) -> DataFrame:
@@ -460,7 +462,7 @@ class MuraSession:
         is a commit number, or a tag name (str) pinned with
         ``MuraTable.tag`` — the reproducible-snapshot handle vacuum
         honors. Returns the snapshot exactly as committed."""
-        t = self._versioned(name)
+        t = self._versioned(self.catalog.lookup(name))
         if t is None:
             raise ValueError(
                 f"{name!r} is not a registered mura versioned table "

@@ -7,10 +7,11 @@ approx_distinct, materialized as a Datasketches HLL sketch whose
 partials union losslessly), kept current by :meth:`refresh`:
 
 - **O(delta) when the source history is append-only**: the refresh reads
-  ONLY the files added since the last processed source version
-  (``MuraTable.changes`` — a manifest diff, no table scan), pre-aggregates
-  them, combines with the view's current rows for just the touched keys,
-  and upserts via the view table's partition-pruned COW merge. A day's
+  ONLY the files added since the last processed source version (the
+  insert slices of ``MuraTable.changes_feed`` — manifest diffs, no table
+  scan), pre-aggregates them, combines with the view's current rows for
+  just the touched keys, and upserts via the view table's
+  partition-pruned COW merge. A day's
   ingest into a 100 TB table refreshes the rollup at the cost of the
   day's files, never the table.
 - **O(changed rows) under DML too, when retraction is possible**: a
@@ -80,8 +81,8 @@ _AGG_COMBINE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max,
                 "approx_distinct": F.hll_union_agg}
 
 #: feed kinds (table_format.FEED_KINDS) of source commits that keep the
-#: append fast path valid: inserts, and metadata-only commits whose
-#: changes() diff is empty
+#: append fast path valid: inserts, and metadata-only commits, which
+#: feed nothing
 _APPEND_KINDS = {"insert", "meta"}
 
 #: feed kinds whose row deltas the CDF expresses exactly (a rewrite
@@ -280,7 +281,7 @@ class IncrementalAggView:
             return RefreshResult("noop", here, there)
         new_meta = {_META_KEY: {**state, "source_version": there}}
 
-        reason, use_feed = "", False
+        reason, dml = "", False
         try:
             actions = {source._manifest(v)["action"]
                        for v in range(here + 1, there + 1)}
@@ -300,17 +301,16 @@ class IncrementalAggView:
                               f"view holds non-subtractable "
                               f"aggregates (min/max/approx_distinct)")
                 else:
-                    use_feed = True
-            # changes() also needs the baseline manifest v{here} itself
-            source._manifest(here)
+                    dml = True
         except ValueError:
             reason = (f"source history ({here}, {there}] partially "
                       f"vacuumed — manifest diff unavailable")
 
         # the feed plan can itself refuse (DML committed while the
-        # source had cdf=False) — downgrade loudly, never guess
+        # source had cdf=False, or a vacuumed baseline manifest) —
+        # downgrade loudly, never guess
         feed = None
-        if use_feed and not reason:
+        if not reason:
             try:
                 feed = source.changes_feed(here, there)
             except ValueError as e:
@@ -326,9 +326,8 @@ class IncrementalAggView:
         # estimates are a read-time presentation only
         view_now = self.read(raw=True)
         delta = self._cast_like(
-            self._aggregate_feed(feed, keys, aggs) if use_feed
-            else self._aggregate(source.changes(here, there), keys,
-                                 aggs, _AGG_INIT), view_now)
+            self._aggregate_feed(feed, keys, aggs) if dml
+            else self._aggregate(feed, keys, aggs, _AGG_INIT), view_now)
         # materialize the delta ONCE: it is consumed three more times
         # below (touched-keys distinct, the combine union, and the
         # merge's ambiguity check) — without the checkpoint each

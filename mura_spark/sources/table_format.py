@@ -38,12 +38,14 @@ partition_cols=...)``.
   table's own, the ``mura_table`` stream sink's
   (sources/table_stream.py) — builds its manifest through
   :meth:`MuraTable._publish`, which carries the table flags (cdf,
-  constraints, bloom config, txn marks, stream stamps) forward and
-  keeps the per-file stats/rows/blooms in step with the file list.
-  Every change-feed reader — :meth:`MuraTable.changes_feed`, the
-  ``mura_table`` batch and stream readers, and the incremental view's
-  fast-path gate — plans from :func:`plan_changes` and the one
-  action classification :data:`FEED_KINDS`.
+  constraints, bloom config, txn marks) forward and keeps the
+  per-file stats/rows/blooms in step with the file list. Every
+  replay guard is a ``txns`` mark (:meth:`MuraTable._txn_guard`),
+  the stream sink's included.
+- **One batch change feed.** :meth:`MuraTable.changes_feed` is the
+  batch feed; it, the ``mura_table`` stream reader and the
+  incremental view's fast-path gate plan from :func:`plan_changes`
+  and the one action classification :data:`FEED_KINDS`.
 
 Scale posture: a manifest is one JSON document listing file paths —
 fine for the file counts a compacted table holds (the included
@@ -435,7 +437,7 @@ class MuraTable:
     _SNAPSHOT_KEYS = ("partition_cols", "schema", "stats_cols", "stats",
                       "rows", "files", "bloom_cols", "bloom_bits",
                       "bloom_k", "blooms", "constraints", "txns",
-                      "cdf", "stream_batches")
+                      "cdf")
 
     def _txn_guard(self, prev: dict,
                    txn: tuple[str, int] | None) -> tuple[bool, dict]:
@@ -465,7 +467,7 @@ class MuraTable:
         """THE manifest-commit builder — every commit kind publishes
         through here. The manifest starts from ``base``'s snapshot
         fields, so every table flag (cdf, constraints, bloom config,
-        txn marks, stream stamps) rides forward; the per-file
+        txn marks) rides forward; the per-file
         stats/rows/blooms maps are restricted to ``keep_files`` (the
         files carried by reference) and extended with footer metadata
         for ``new_files`` (just written by :meth:`_write_data`) and,
@@ -584,13 +586,13 @@ class MuraTable:
         """Row-level Change Data Feed (the Delta CDF contract): every
         row change in ``(since_version, version]`` with
         ``_change_type`` (insert | update_preimage | update_postimage
-        | delete) and ``_commit_version`` columns — the incremental
-        surface that, unlike :meth:`changes` (file-level, replays
-        rewritten copies), lets a consumer apply EXACT row deltas.
+        | delete) and ``_commit_version`` columns — the table's one
+        batch change feed, which lets a consumer apply EXACT row
+        deltas.
 
         Each version feeds as its action's :data:`FEED_KINDS` entry
         says, planned by :func:`plan_changes` — the one planner this
-        method and the ``mura_table`` readers share. Insert-only
+        method and the ``mura_table`` stream reader share. Insert-only
         commits (create/append/stream_append) derive their feed from
         the manifest file diff — no sidecar cost. DML commits
         (merge/delete/update) read the row-level sidecar written when
@@ -604,13 +606,11 @@ class MuraTable:
         a full overwrite intrinsically feeds the whole table).
 
         Plan shape: one subtree per fed slice of :func:`plan_changes`
-        (a union chain of native parquet scans) — the same plan the
-        registered reader maps to its file partitions. For very long
-        ranges (hundreds of commits) prefer that reader —
-        ``spark.read.format("mura_table")
-        .option("readChangeFeed", "true").option("startingVersion",
-        n)`` — which plans ONE flat file-level scan regardless of
-        range length (sources/table_stream.py)."""
+        (a union chain of native parquet scans), so analysis cost
+        grows with the number of fed commits in the range; a
+        consumer that tails the table continuously keeps its ranges
+        short with the ``mura_table`` stream reader's
+        ``readChangeFeed`` option (sources/table_stream.py)."""
         from pyspark.sql.types import StructType
         to_v = version if version is not None else self._latest()
         out = None
@@ -843,24 +843,6 @@ class MuraTable:
     def history(self) -> list[dict]:
         """Every retained commit, oldest first."""
         return [self._manifest(v) for v in self._versions()]
-
-    def changes(self, since_version: int,
-                version: int | None = None) -> DataFrame:
-        """Rows in files ADDED after ``since_version`` (exclusive), up
-        to ``version`` (default latest) — the incremental-consumption
-        surface: a pipeline that processed version N tails the table
-        with ``changes(N)`` and touches only the new files, never the
-        table. For ``append`` commits this is exactly the inserted
-        rows. ``merge``/``overwrite``/``compact`` commits REWRITE
-        files, so their changed frames contain every row of the
-        rewritten partitions (copies included) — the reader must upsert
-        by key, the same contract Delta's file-level CDC has without
-        the change-data-feed option. Cost is O(new files): the baseline
-        file set is a manifest diff, no data read."""
-        m_to = self._manifest(version)
-        base = set(self._manifest(since_version)["files"])
-        new = [f for f in m_to["files"] if f not in base]
-        return self._read_files(new, m_to["schema"])
 
     # ----------------------------------------------------------- write
 
@@ -1366,8 +1348,7 @@ class MuraTable:
         # and the ingest identities stay the live table's
         return self._publish(
             v, old, "restore", [], old["files"], restored_from=version,
-            **{k: prev.get(k) for k in ("txns", "cdf",
-                                        "stream_batches")})["version"]
+            **{k: prev.get(k) for k in ("txns", "cdf")})["version"]
 
     def set_bloom_cols(self, bloom_cols: list[str],
                        bloom_bits: int | None = None) -> int:
@@ -1472,11 +1453,10 @@ class MuraTable:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.link(src, dst)
         # ingest identities are NOT table contents: carrying the
-        # source's idempotent-writer marks or streaming batch stamps
-        # would make the clone silently skip the first batches a
-        # pipeline writes into it under the same app/query id
+        # source's idempotent-writer marks would make the clone
+        # silently skip the first batches a pipeline writes into it
+        # under the same app/query id
         dest._publish(1, m, "clone", [], m["files"], txns=None,
-                      stream_batches=None,
                       cloned_from={"path": os.path.abspath(self.path),
                                    "version": m["version"]})
         return dest

@@ -1,12 +1,11 @@
-"""Structured Streaming source over MuraTable versions.
+"""Structured Streaming source and sink over MuraTable versions.
 
 ``spark.readStream.format("mura_table").option("path", p).load()``
 tails a versioned table (sources/table_format.py) exactly-once:
 
 - **Offsets are manifest versions.** ``latestOffset`` is one log-dir
   listing; a micro-batch (start, end] plans the file-set DIFF of the
-  two manifests — O(new files) planning, no data read on the driver,
-  the same contract as ``MuraTable.changes``.
+  two manifests — O(new files) planning, no data read on the driver.
 - **Partitions are added files.** Each executor task reads its parquet
   file with pyarrow, injects the hive partition values parsed from the
   file path (typed per the table schema), and yields Arrow record
@@ -28,12 +27,12 @@ tails a versioned table (sources/table_format.py) exactly-once:
   slices of ``table_format.plan_changes`` — the planner
   ``MuraTable.changes_feed`` also maps — to file partitions; and the
   sink publishes each micro-batch through ``MuraTable._publish``, the
-  builder every table commit uses.
+  builder every table commit uses, with the same ``txns`` replay mark
+  every other writer records.
 
-A batch reader (``spark.read.format("mura_table")``) is included for
-symmetry: latest snapshot, or ``option("version", n)`` to time travel
-through the same plugin surface. Registration:
-``mura_spark.sources.table_stream.register(spark)``.
+Batch reads go through ``MuraTable.read`` and batch change feeds
+through ``MuraTable.changes_feed``; the plugin is streaming-only.
+Registration: ``mura_spark.sources.table_stream.register(spark)``.
 
 No reference analog (the reference is batch/read-only —
 /root/reference/src/parser/mod.rs:21-24); this is the Spark-4 Python
@@ -46,8 +45,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamReader,
+from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import StructType
 
@@ -152,35 +150,12 @@ class _TableStreamReader(DataSourceStreamReader):
         pass  # Spark's offset log is the source of truth
 
 
-class _TableBatchReader(DataSourceReader):
-    def __init__(self, schema: StructType, options):
-        self.schema = schema
-        self.table = tf.MuraTable(None, options["path"])
-        v = options.get("version")
-        self.version = int(v) if v is not None else None
-        self.cdf = _cdf_requested(options)
-        self.starting = int(options.get("startingversion", 0))
-        ev = options.get("endingversion")
-        self.ending = int(ev) if ev is not None else None
-
-    def partitions(self):
-        if self.cdf:
-            return _plan(self.table, self.starting,
-                         self.ending or self.table._latest(), True)
-        return _plan(self.table, 0, self.version or self.table._latest(),
-                     False)
-
-    def read(self, partition):
-        yield from _read_partition(partition, self.schema)
-
-
 class MuraTableDataSource(DataSource):
-    """``format("mura_table")``: batch snapshot / time travel reads and
-    a version-offset streaming tail of a MuraTable.
+    """``format("mura_table")``: a version-offset streaming tail of a
+    MuraTable, and its streaming append sink.
 
     ``option("readChangeFeed", "true")`` (Delta's spelling) switches
-    BOTH the batch reader (``startingVersion``/``endingVersion``
-    options) and the stream reader to the row-level Change Data Feed:
+    the stream reader to the row-level Change Data Feed:
     rows gain ``_change_type`` / ``_commit_version``, insert commits
     plan their data files directly, DML commits plan their ``_cdf/``
     sidecars — a downstream job can maintain an exact incremental
@@ -200,9 +175,6 @@ class MuraTableDataSource(DataSource):
                 StructField("_change_type", StringType(), False),
                 StructField("_commit_version", LongType(), False)])
         return schema
-
-    def reader(self, schema):
-        return _TableBatchReader(schema, self.options)
 
     def streamReader(self, schema):
         return _TableStreamReader(schema, self.options)
@@ -257,14 +229,15 @@ class _TableStreamWriter(DataSourceStreamArrowWriter):
     append commit. Executors write their Arrow batches straight to
     parquet files under a per-micro-batch commit dir (no shuffle, no
     driver data); the driver publishes the manifest in ``commit``.
-    With ``.option("queryid", "<unique pipeline name>")`` the manifest
-    is stamped with the micro-batch id — a redelivered batch
-    (sink-side replay after a crash between sink commit and checkpoint
-    write) is recognized by the stamp and skipped, making the sink
-    exactly-once for that query. The id must be unique per logical
-    pipeline and stable across restarts (Spark does not expose its
-    query id to Python sinks); without one the sink is at-least-once
-    under crash-redelivery, never lossy.
+    Exactly-once: the commit carries the txn mark
+    ``("stream:<query id>", batchId)`` (:meth:`MuraTable._txn_guard`,
+    Delta's idempotent writes), where the query id is Spark's
+    persistent id from ``<checkpointLocation>/metadata`` — stable
+    across restarts, new for a fresh checkpoint. A redelivered batch
+    (a crash or lost ``commits/<n>`` file between the sink commit and
+    the checkpoint) finds its mark and is skipped, its files deleted.
+    The sink therefore needs ``.option("checkpointLocation", ...)`` on
+    the writer itself: a session-conf checkpoint never reaches it.
     PARTITIONED targets get executor-side hive layout: each task splits
     its batches by partition value and writes one file per touched
     partition under ``p=v/`` segments (partition columns live in the
@@ -279,29 +252,12 @@ class _TableStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, schema: StructType, options):
         self.schema = schema
         self.path = options["path"]
-        # Replay protection MUST be keyed by a stable per-query
-        # identity, and Spark does not expose the streaming query id
-        # to Python data sources — so exactly-once is opt-in via
-        # .option("queryid", "<unique pipeline name>"). Without it the
-        # sink commits every delivered batch (at-least-once: a crash
-        # between sink commit and checkpoint write can duplicate ONE
-        # batch on restart). A shared default key would be worse than
-        # duplicates: two queries (or a fresh-checkpoint restart)
-        # colliding on the same key silently DROP each other's batches.
-        self.queryId = options.get("queryid")
-        if self.queryId is None:
-            # Pipelines written before queryid existed ran with a
-            # SHARED default replay key (exactly-once-ish, but
-            # cross-query lossy); on upgrade they silently become
-            # at-least-once. Make the downgrade discoverable instead
-            # of silent — once per writer instance, at plan time.
-            import warnings
-            warnings.warn(
-                "mura_table sink without .option('queryid', ...): "
-                "crash-redelivered micro-batches are committed again "
-                "(at-least-once). Set a stable per-pipeline queryid "
-                "for exactly-once replay protection.",
-                stacklevel=2)
+        self.checkpoint = options.get("checkpointlocation")
+        if self.checkpoint is None:
+            raise ValueError(
+                "mura_table sink needs .option('checkpointLocation', "
+                "...) on the writer: its replay guard is keyed on the "
+                "query id stored there")
         m = tf.MuraTable(None, self.path)._manifest()
         self._pcols = m["partition_cols"] or []
         if self._pcols:
@@ -395,7 +351,8 @@ class _TableStreamWriter(DataSourceStreamArrowWriter):
         return _FilesWritten(rels, blooms or None)
 
     def commit(self, messages, batchId) -> None:
-        table = tf.MuraTable.load(None, self.path)
+        from mura_spark.streaming.sinks import query_id
+        table = tf.MuraTable(None, self.path)
         while True:
             m = table._manifest()
             if m.get("constraints"):
@@ -411,10 +368,11 @@ class _TableStreamWriter(DataSourceStreamArrowWriter):
                     f"running — the streaming sink cannot validate "
                     f"them; stop the stream, validate/filter upstream, "
                     f"or drop the constraints")
-            stamp = m.get("stream_batches", {})
-            if self.queryId is not None and \
-                    stamp.get(self.queryId) == batchId:
-                return  # redelivered micro-batch: already committed
+            skip, txns = table._txn_guard(
+                m, (f"stream:{query_id(self.checkpoint)}", batchId))
+            if skip:  # redelivered micro-batch: already committed
+                self.abort(messages, batchId)
+                return
             files = [r for msg in messages if msg
                      for r in msg.relpaths]
             # executor-built blooms: no build_blooms job on the driver
@@ -422,14 +380,10 @@ class _TableStreamWriter(DataSourceStreamArrowWriter):
             for msg in messages:
                 if msg and msg.blooms:
                     blooms.update(msg.blooms)
-            stamp_fields = {}
-            if self.queryId is not None:
-                stamp_fields = {"stream_batches":
-                                {**stamp, self.queryId: batchId}}
             try:
                 table._publish(m["version"] + 1, m, "stream_append",
                                files, m["files"], new_blooms=blooms,
-                               **stamp_fields)
+                               **txns)
                 return
             except tf.CommitConflict:
                 continue  # another writer advanced the version: rebase

@@ -13,8 +13,10 @@ did not land (a crash after the table commit, or a lost
 ``txn=(f"<kind>:{query_id}", batch_id)``, so the batch's txn mark lands
 in the same table commit as its rows, and the table skips the replay
 (Delta's idempotent ``foreachBatch`` writes). The query id is Spark's
-persistent id from ``<checkpoint>/metadata``: a fresh or wiped
-checkpoint is a new query whose batches are new, not replays.
+persistent id from ``<checkpoint>/metadata`` (:func:`query_id`, which
+the ``mura_table`` stream sink reads for its ``stream:`` mark too): a
+fresh or wiped checkpoint is a new query whose batches are new, not
+replays.
 
 Every write is a copy-on-write table commit. It writes new files and
 never touches the files it reads, so no materialization barrier is
@@ -32,6 +34,13 @@ from pyspark.sql import DataFrame
 from mura_spark.operators.upsert import upsert_latest
 
 
+def query_id(checkpoint: str) -> str:
+    """Spark's persistent id of the streaming query checkpointed at
+    ``checkpoint``: the same across restarts on that checkpoint, new
+    for a fresh or wiped one."""
+    return json.loads(Path(checkpoint, "metadata").read_text())["id"]
+
+
 def foreach_table_batch(stream: DataFrame, checkpoint: str, apply,
                         available_now: bool = False):
     """Start ``stream`` as a ``foreachBatch`` query checkpointed at
@@ -42,10 +51,8 @@ def foreach_table_batch(stream: DataFrame, checkpoint: str, apply,
 
     Returns the StreamingQuery; caller owns ``awaitTermination``/``stop``.
     """
-    metadata = Path(checkpoint, "metadata")
-
     def each(batch: DataFrame, batch_id: int) -> None:
-        apply(batch, json.loads(metadata.read_text())["id"], batch_id)
+        apply(batch, query_id(checkpoint), batch_id)
 
     writer = (stream.writeStream.foreachBatch(each)
               .option("checkpointLocation", checkpoint))

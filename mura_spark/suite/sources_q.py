@@ -463,7 +463,8 @@ def table_stream_sink_roundtrip(spark, sf):
     times with ``availableNow`` — first landing the even-key half of
     orders, then the odd-key delta after an append to the source, then
     a no-new-data pass that must commit NOTHING (exactly-once: the
-    checkpoint offset log + per-query batch stamps make redelivery
+    checkpoint offset log + the sink's ``stream:<query id>`` txn mark,
+    keyed on Spark's persistent query id, make redelivery
     idempotent). 'pass1' reads the post-first-pass snapshot by version
     (time travel over stream-landed commits); 'head' reads the final
     table — duplicate or lost rows in any pass would shift either
@@ -494,10 +495,6 @@ def table_stream_sink_roundtrip(spark, sf):
               .option("path", src_path).load()
               .writeStream.format("mura_table")
               .option("path", dst_path)
-              # stable per-pipeline id → micro-batch replay stamps →
-              # exactly-once (the docstring's claim; also the sink's
-              # documented contract — without it, at-least-once)
-              .option("queryid", "mura_suite_stream_sink_roundtrip")
               .option("checkpointLocation", ckpt)
               .trigger(availableNow=True).start())
         if not qr.awaitTermination(300):

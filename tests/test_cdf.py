@@ -1,8 +1,8 @@
 """Row-level Change Data Feed (MuraTable.changes_feed): the Delta CDF
 contract — _change_type insert/update_preimage/update_postimage/delete
 + _commit_version per row, derived free for insert-only commits and
-from DML sidecars when cdf=True. Unlike changes() (file-level, replays
-rewritten copies), the feed is EXACT row deltas."""
+from DML sidecars when cdf=True. The feed is EXACT row deltas: a
+rewritten file's unchanged rows never replay."""
 
 from __future__ import annotations
 
@@ -148,28 +148,19 @@ def test_sql_table_changes_tvf(spark, tmp_path):
 
 
 def test_batch_read_change_feed_option(spark, tmp_path):
-    from mura_spark.sources.table_stream import register
-    register(spark)
-    path = str(tmp_path / "t")
-    t = MuraTable.create(spark, path, _df(spark, BASE), cdf=True)
+    t = MuraTable.create(spark, str(tmp_path / "t"), _df(spark, BASE),
+                         cdf=True)
     t.update_where("k = 2", {"val": F.lit("B")})
     t.append(_df(spark, [(4, 2, "d")]))
     got = sorted(
         (r._commit_version, r._change_type, r.k, r.val)
-        for r in (spark.read.format("mura_table")
-                  .option("path", path)
-                  .option("readChangeFeed", "true")
-                  .option("startingVersion", 1).load().collect()))
+        for r in t.changes_feed(1).collect())
     assert got == [
         (2, "update_postimage", 2, "B"),
         (2, "update_preimage", 2, "b"),
         (3, "insert", 4, "d")]
     # bounded range
-    n = (spark.read.format("mura_table").option("path", path)
-         .option("readChangeFeed", "true")
-         .option("startingVersion", 2).option("endingVersion", 2)
-         .load().count())
-    assert n == 0
+    assert t.changes_feed(2, 2).count() == 0
 
 
 def test_streaming_change_feed_maintains_exact_mirror(spark, tmp_path):

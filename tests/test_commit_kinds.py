@@ -12,7 +12,7 @@ import pytest
 from mura_spark.sources.table_format import FEED_KINDS, MuraTable
 
 FLAGS = ("cdf", "constraints", "bloom_cols", "bloom_bits", "bloom_k",
-         "txns", "stream_batches")
+         "txns")
 BITS = 2048
 
 
@@ -24,15 +24,15 @@ def _flags(m: dict) -> dict:
     return {k: m.get(k) for k in FLAGS}
 
 
-def _stream(ctx) -> None:
+def _stream(ctx):
     q = (ctx.spark.readStream.format("mura_table")
          .option("path", ctx.src.path).load()
          .writeStream.format("mura_table")
          .option("path", ctx.t.path)
-         .option("queryid", "q")
          .option("checkpointLocation", ctx.ckpt)
          .trigger(availableNow=True).start())
     assert q.awaitTermination(120)
+    return q
 
 
 def _stream_again(ctx) -> None:
@@ -61,7 +61,8 @@ KINDS = [
      lambda f: {"constraints": {k: e for k, e in f["constraints"].items()
                                 if k != "val_nn"} or None}),
     ("stream_append", _stream_again,
-     lambda f: {"stream_batches": {"q": 1}}),
+     lambda f: {"txns": {k: 1 if k.startswith("stream:") else n
+                         for k, n in f["txns"].items()}}),
 ]
 
 
@@ -77,9 +78,9 @@ def test_every_commit_kind_carries_table_flags(spark, tmp_path,
     c.t.append(_df(spark, [(3, 1, "c")]), txn=("app", 1))
     c.src = MuraTable.create(spark, str(tmp_path / "src"),
                              _df(spark, [(4, 2, "x")]))
-    _stream(c)
+    q = _stream(c)
     if constrained:
-        # after the stamp: the sink refuses constrained tables
+        # after the mark: the sink refuses constrained tables
         c.t.add_constraint("k_pos", "k > 0")
     flags = _flags(c.t._manifest())
     assert flags == {"cdf": True,
@@ -87,7 +88,7 @@ def test_every_commit_kind_carries_table_flags(spark, tmp_path,
                      else None,
                      "bloom_cols": ["k"], "bloom_bits": BITS,
                      "bloom_k": flags["bloom_k"],
-                     "txns": {"app": 1}, "stream_batches": {"q": 0}}
+                     "txns": {"app": 1, f"stream:{q.id}": 0}}
     for action, commit, change in KINDS:
         if constrained and action == "stream_append":
             continue
@@ -103,8 +104,7 @@ def test_every_commit_kind_carries_table_flags(spark, tmp_path,
 
     dest = c.t.clone(str(tmp_path / "clone"))
     # ingest identities stay with the source table
-    assert _flags(dest._manifest()) == {**flags, "txns": None,
-                                        "stream_batches": None}
+    assert _flags(dest._manifest()) == {**flags, "txns": None}
     # every commit kind ran: each action has a feed kind, and the table
     # lists no action the package no longer commits
     actions = {m["action"] for m in c.t.history() + dest.history()}

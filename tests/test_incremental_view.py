@@ -99,8 +99,8 @@ def test_non_append_source_commit_forces_full_refresh(spark, tmp_path):
                partition_cols=["g"])
     view = IncrementalAggView.create(spark, str(tmp_path / "v"), src,
                                      keys=["g"], aggs=AGGS)
-    # delete a row via merge: changes() would replay the whole rewritten
-    # partition, so the refresh must NOT take the incremental path
+    # delete a row via merge: the append fast path cannot retract it,
+    # so the refresh must NOT take the incremental path
     src.merge(spark.createDataFrame(_rows(("a", 2, 20)),
                                     "g string, k long, v long"),
               key_cols=["k"], when_matched="delete",
@@ -120,7 +120,7 @@ def test_compacted_source_forces_full_refresh_not_double_count(
                                      keys=["g"], aggs=AGGS)
     src.append(spark.createDataFrame(_rows(("a", 2, 5)),
                                      "g string, k long, v long"))
-    src.compact()  # rewrites every file: changes() replays all rows
+    src.compact()  # rewrites every file, changes no rows
     r = view.refresh()
     assert r.mode == "full"
     _assert_matches(view, src)

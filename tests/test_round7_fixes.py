@@ -9,12 +9,12 @@ additions and asserts the fix:
   hashed rounded (false negatives = wrong pruning).
 - The streaming sink stamped replay protection under a SHARED default
   key, so a second query (or a fresh-checkpoint restart) delivering a
-  matching batchId was silently skipped — data loss. Exactly-once is
-  now opt-in via an explicit ``queryid`` and stamps survive
-  interleaved non-stream commits.
+  matching batchId was silently skipped — data loss. The sink now keys
+  its ``txns`` mark on Spark's persistent query id; its replay tests
+  live in tests/test_table_stream.py.
 - ``changes_feed`` ignored the ``clone`` action, so the feed of a
   cloned table was silently empty; clones also inherited the source's
-  txn/stream stamps, making the clone skip its own first batches.
+  txn marks, making the clone skip its own first batches.
 - A legal multi-scan BASELINE JPEG (T.81 allows per-component
   sequential scans) crashed with KeyError instead of routing to the
   PIL fallback via NotImplementedError.
@@ -62,87 +62,18 @@ def test_bloom_column_tolerates_nulls_and_huge_ints(spark, tmp_path):
         F.col("k") == big + 1).count() == 0
 
 
-# ------------------------------------------- stream stamps and carry
-
-
-def test_stream_stamp_survives_interleaved_commits(spark, tmp_path):
-    """A maintenance commit between two micro-batches must carry the
-    replay stamp forward, or redelivery protection silently lapses."""
-    path = str(tmp_path / "t")
-    t = MuraTable.create(spark, path, _df(spark, [(1, 1, "a")]))
-    # simulate a sink commit's stamp
-    v, prev = t._next_version()
-    t._commit(v, {**t._snapshot_fields(prev), "version": v,
-                  "action": "stream_append",
-                  "stream_batches": {"pipe": 4}})
-    t.append(_df(spark, [(2, 2, "b")]))
-    t.compact()
-    t.delete_where("k = 2")
-    t.add_constraint("k_pos", "k > 0")
-    assert t._manifest().get("stream_batches") == {"pipe": 4}
+# -------------------------------------------------------------- clones
 
 
 def test_clone_drops_ingest_identities(spark, tmp_path):
     src = MuraTable.create(spark, str(tmp_path / "src"),
                            _df(spark, [(1, 1, "a")]))
     src.append(_df(spark, [(2, 2, "b")]), txn=("app", 7))
-    v, prev = src._next_version()
-    src._commit(v, {**src._snapshot_fields(prev), "version": v,
-                    "action": "stream_append",
-                    "stream_batches": {"pipe": 3}})
     dest = src.clone(str(tmp_path / "dst"))
-    m = dest._manifest()
-    assert "txns" not in m and "stream_batches" not in m
-    # the clone accepts the txn/batch ids the source already consumed
+    assert "txns" not in dest._manifest()
+    # the clone accepts the txn ids the source already consumed
     dest.append(_df(spark, [(3, 3, "c")]), txn=("app", 1))
     assert dest.row_count() == 3
-
-
-def test_sink_without_queryid_writes_no_stamp(registered, tmp_path):
-    spark = registered
-    src_path, dst_path = str(tmp_path / "src"), str(tmp_path / "dst")
-    MuraTable.create(spark, src_path, _df(spark, [(1, 1, "a")]))
-    MuraTable.create(spark, dst_path, _df(spark, []))
-    q = (spark.readStream.format("mura_table")
-         .option("path", src_path).load()
-         .writeStream.format("mura_table").option("path", dst_path)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    m = MuraTable.load(spark, dst_path)._manifest()
-    assert m["action"] == "stream_append"
-    assert "stream_batches" not in m
-
-
-def test_sink_with_queryid_stamps_batches(registered, tmp_path):
-    spark = registered
-    src_path, dst_path = str(tmp_path / "src"), str(tmp_path / "dst")
-    MuraTable.create(spark, src_path, _df(spark, [(1, 1, "a")]))
-    MuraTable.create(spark, dst_path, _df(spark, []))
-    q = (spark.readStream.format("mura_table")
-         .option("path", src_path).load()
-         .writeStream.format("mura_table").option("path", dst_path)
-         .option("queryid", "pipe-a")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    dst = MuraTable.load(spark, dst_path)
-    assert dst._manifest().get("stream_batches") == {"pipe-a": 0}
-    # two queries with DIFFERENT ids never collide: a second pipeline
-    # delivering its own batch 0 commits instead of being skipped
-    q2 = (spark.readStream.format("mura_table")
-          .option("path", src_path).load()
-          .writeStream.format("mura_table").option("path", dst_path)
-          .option("queryid", "pipe-b")
-          .option("checkpointLocation", str(tmp_path / "ck2"))
-          .trigger(availableNow=True).start())
-    q2.awaitTermination(120)
-    assert dst.row_count() == 2  # both pipelines' rows landed
-    assert dst._manifest().get("stream_batches") == \
-        {"pipe-a": 0, "pipe-b": 0}
-
-
-# ---------------------------------------------------- clone in the feed
 
 
 def test_changes_feed_covers_clone_snapshot(spark, tmp_path):
@@ -160,11 +91,15 @@ def test_cdf_stream_reader_covers_clone(registered, tmp_path):
     src = MuraTable.create(spark, str(tmp_path / "src"),
                            _df(spark, [(1, 1, "a")]))
     src.clone(str(tmp_path / "dst"))
-    df = (spark.read.format("mura_table")
-          .option("path", str(tmp_path / "dst"))
-          .option("readChangeFeed", "true").load())
-    assert [(r.k, r._change_type) for r in df.collect()] \
-        == [(1, "insert")]
+    out = str(tmp_path / "feed")
+    (spark.readStream.format("mura_table")
+     .option("path", str(tmp_path / "dst"))
+     .option("readChangeFeed", "true").load()
+     .writeStream.format("parquet").option("path", out)
+     .option("checkpointLocation", str(tmp_path / "ckpt"))
+     .trigger(availableNow=True).start().awaitTermination(120))
+    assert [(r.k, r._change_type) for r in spark.read.parquet(out)
+            .collect()] == [(1, "insert")]
 
 
 # ----------------------------- adversarial pass on this session's fixes
@@ -191,7 +126,7 @@ def test_stream_sink_refuses_mid_stream_constraint(registered, tmp_path):
     from pyspark.sql.types import _parse_datatype_string
     w = _TableStreamWriter(
         _parse_datatype_string("k long, m int, val string"),
-        {"path": dst})
+        {"path": dst, "checkpointlocation": str(tmp_path / "ck")})
     t.add_constraint("k_pos", "k > 0")
     with pytest.raises(ValueError, match="added to .* while this"):
         w.commit([], 0)

@@ -145,3 +145,28 @@ def test_sql_reads_the_head_after_every_commit_path(spark, tmp_path,
     assert sorted(calls) == ["_versions", "_versions", "read"]
     monkeypatch.undo()
     sees_head("hb_t", path)
+
+
+def test_sql_frames_reuse_the_lookup_of_sql(spark, tmp_path, monkeypatch):
+    """A ``t VERSION AS OF n`` frame takes the catalog entry ``sql``
+    bound and opens manifest n directly: the log is listed once, by
+    that lookup. ``table_changes('t', n)`` lists it once more, for the
+    feed's head version."""
+    from mura_spark.session import MuraSession
+    ms = MuraSession(spark)
+    path = str(tmp_path / "t")
+    t = MuraTable.create(spark, path,
+                         _df(spark, [(k, "a") for k in range(10)]))
+    t.append(_df(spark, [(10, "b")]))
+    ms.create_external_table("lc_t", path, file_type="mura")
+    calls = []
+    versions = MuraTable._versions
+    monkeypatch.setattr(MuraTable, "_versions", lambda self:
+                        calls.append("_versions") or versions(self))
+    assert ms.sql("SELECT count(*) AS n FROM lc_t VERSION AS OF 1") \
+        .first().n == 10
+    assert calls == ["_versions"]
+    calls.clear()
+    assert ms.sql("SELECT count(*) AS n FROM table_changes('lc_t', 1)") \
+        .first().n == 1
+    assert calls == ["_versions", "_versions"]

@@ -281,28 +281,17 @@ def test_catalog_registration_and_session_time_travel(spark, tmp_path):
 
 
 def test_changes_tails_appends_incrementally(spark, tmp_path):
-    # incremental consumption: changes(N) reads ONLY post-N files
+    # incremental consumption: changes_feed(N) reads ONLY post-N files
     t = MuraTable.create(spark, str(tmp_path / "t"), _base(spark),
                          partition_cols=["m"])
     t.append(_df(spark, [(100, 1, "a")]))
     t.append(_df(spark, [(101, 2, "b")]))
-    assert _vals(t.changes(1)) == {(100, 1, "a"), (101, 2, "b")}
-    assert _vals(t.changes(2)) == {(101, 2, "b")}
-    assert _vals(t.changes(1, version=2)) == {(100, 1, "a")}
-    empty = t.changes(3)
-    assert empty.count() == 0 and empty.columns == ["k", "m", "val"]
-
-
-def test_changes_after_merge_carries_rewritten_partition(spark, tmp_path):
-    # merge commits rewrite whole partitions: the changed frame holds
-    # every row of the touched partition (upsert-by-key contract)
-    t = MuraTable.create(spark, str(tmp_path / "t"), _base(spark),
-                         partition_cols=["m"])
-    t.merge(_df(spark, [(20, 2, "UPD")]), key_cols=["k"])
-    ch = _vals(t.changes(1))
-    assert (20, 2, "UPD") in ch
-    assert ch == {(k, m, v) for (k, m, v) in
-                  _vals(t.read()) if m == 2}
+    assert _vals(t.changes_feed(1)) == {(100, 1, "a"), (101, 2, "b")}
+    assert _vals(t.changes_feed(2)) == {(101, 2, "b")}
+    assert _vals(t.changes_feed(1, 2)) == {(100, 1, "a")}
+    empty = t.changes_feed(3)
+    assert empty.count() == 0 and empty.columns == [
+        "k", "m", "val", "_change_type", "_commit_version"]
 
 
 def test_losing_commit_cleans_up_its_orphaned_files(spark, tmp_path):
@@ -355,11 +344,16 @@ def test_schema_evolution_add_column(spark, tmp_path):
         "score", F.lit(1.5))  # double vs int
     with pytest.raises(ValueError, match="type"):
         t.append(bad, merge_schema=True)
-    # the plugin batch reader aligns old files the same way
+    # the plugin stream reader aligns old files the same way
     from mura_spark.sources.table_stream import register
     register(spark)
-    via_plugin = (spark.read.format("mura_table")
-                  .option("path", str(tmp_path / "t")).load())
+    out = str(tmp_path / "out")
+    (spark.readStream.format("mura_table")
+     .option("path", str(tmp_path / "t")).load()
+     .writeStream.format("parquet").option("path", out)
+     .option("checkpointLocation", str(tmp_path / "ckpt"))
+     .trigger(availableNow=True).start().awaitTermination(120))
+    via_plugin = spark.read.parquet(out)
     assert via_plugin.columns == ["k", "m", "val", "score"]
     assert via_plugin.where("score IS NULL").count() == 9
 

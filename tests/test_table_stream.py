@@ -1,8 +1,12 @@
-"""Streaming + plugin-batch reads over MuraTable versions
+"""The ``mura_table`` stream source and sink over MuraTable versions
 (sources/table_stream.py): version offsets, file-diff micro-batches,
-exactly-once restart via the checkpoint offset log."""
+exactly-once restart via the checkpoint offset log, and the sink's
+``stream:<query id>`` txn mark that skips a replayed micro-batch."""
 
 from __future__ import annotations
+
+import glob
+import os
 
 import pytest
 
@@ -32,22 +36,6 @@ def _run_available(spark, path, checkpoint, out_dir):
     rows = sorted((r.k, r.m, r.val)
                   for r in spark.read.parquet(out_dir).collect())
     return rows
-
-
-def test_batch_plugin_snapshot_and_time_travel(registered, tmp_path):
-    spark = registered
-    path = str(tmp_path / "t")
-    t = MuraTable.create(spark, path,
-                         _df(spark, [(1, 1, "a"), (2, 2, "b")]),
-                         partition_cols=["m"])
-    t.merge(_df(spark, [(2, 2, "B")]), key_cols=["k"])
-    latest = spark.read.format("mura_table").option("path", path).load()
-    assert {(r.k, r.m, r.val) for r in latest.collect()} \
-        == {(1, 1, "a"), (2, 2, "B")}
-    v1 = (spark.read.format("mura_table").option("path", path)
-          .option("version", "1").load())
-    assert {(r.k, r.m, r.val) for r in v1.collect()} \
-        == {(1, 1, "a"), (2, 2, "b")}
 
 
 def test_stream_tails_appends_exactly_once(registered, tmp_path):
@@ -221,7 +209,7 @@ def test_partition_value_types_read_like_the_table(registered, tmp_path,
                                                    ptype, values):
     """Every partition column type (and the null partition) decodes
     from its hive path value exactly as ``MuraTable.read()`` types it,
-    through the batch reader and a change-feed stream."""
+    through a plain stream and a change-feed stream."""
     spark = registered
     path = str(tmp_path / "t")
     rows = [(i, v, f"r{i}") for i, v in enumerate(values + [None])]
@@ -230,16 +218,15 @@ def test_partition_value_types_read_like_the_table(registered, tmp_path,
     want = sorted(MuraTable.create(spark, path, df, partition_cols=["p"],
                                    cdf=True).read().collect())
     assert len(want) == 3 and want[2].p is None
-    batch = spark.read.format("mura_table").option("path", path).load()
-    assert sorted(batch.select("k", "p", "val").collect()) == want
-    out = str(tmp_path / "feed")
-    (spark.readStream.format("mura_table").option("path", path)
-     .option("readChangeFeed", "true").load()
-     .writeStream.format("parquet").option("path", out)
-     .option("checkpointLocation", str(tmp_path / "ckpt"))
-     .trigger(availableNow=True).start().awaitTermination(120))
-    feed = spark.read.parquet(out)
-    assert sorted(feed.select("k", "p", "val").collect()) == want
+    for cdf in ("false", "true"):
+        out = str(tmp_path / f"out-{cdf}")
+        (spark.readStream.format("mura_table").option("path", path)
+         .option("readChangeFeed", cdf).load()
+         .writeStream.format("parquet").option("path", out)
+         .option("checkpointLocation", str(tmp_path / f"ckpt-{cdf}"))
+         .trigger(availableNow=True).start().awaitTermination(120))
+        got = spark.read.parquet(out).select("k", "p", "val")
+        assert sorted(got.collect()) == want, cdf
 
 
 def test_sink_starts_from_a_fresh_driver_thread(spark, tmp_path):
@@ -269,3 +256,94 @@ def test_sink_starts_from_a_fresh_driver_thread(spark, tmp_path):
     th.join(300)
     assert not th.is_alive() and errors == []
     assert [r.k for r in MuraTable.load(spark, dst).read().collect()] == [1]
+
+
+# ------------------------------------------------ sink replay guard
+
+
+def _sink_pass(spark, src_path, dst_path, checkpoint):
+    """One availableNow ``mura_table`` -> ``mura_table`` pass; returns
+    the finished query."""
+    q = (spark.readStream.format("mura_table").option("path", src_path)
+         .load().writeStream.format("mura_table").option("path", dst_path)
+         .option("checkpointLocation", checkpoint)
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    return q
+
+
+def _tables(spark, tmp_path):
+    src_path, dst_path = str(tmp_path / "src"), str(tmp_path / "dst")
+    MuraTable.create(spark, src_path,
+                     _df(spark, [(1, 1, "a"), (2, 2, "b")]))
+    MuraTable.create(spark, dst_path, _df(spark, []))
+    return src_path, dst_path
+
+
+def test_sink_records_its_txn_mark(registered, tmp_path):
+    """A sink commit carries the ``stream:<query id>`` txn mark, keyed
+    on Spark's persistent query id."""
+    spark = registered
+    src_path, dst_path = _tables(spark, tmp_path)
+    q = _sink_pass(spark, src_path, dst_path, str(tmp_path / "ck"))
+    m = MuraTable.load(spark, dst_path)._manifest()
+    assert m["action"] == "stream_append"
+    assert m["txns"] == {f"stream:{q.id}": 0}
+
+
+def test_sink_marks_each_checkpoint_separately(registered, tmp_path):
+    """Two queries (two checkpoints) never collide: the second one's
+    batch 0 commits instead of being skipped as a replay."""
+    spark = registered
+    src_path, dst_path = _tables(spark, tmp_path)
+    q1 = _sink_pass(spark, src_path, dst_path, str(tmp_path / "ck1"))
+    q2 = _sink_pass(spark, src_path, dst_path, str(tmp_path / "ck2"))
+    assert q1.id != q2.id
+    dst = MuraTable.load(spark, dst_path)
+    assert dst.row_count() == 4  # both pipelines' rows landed
+    assert dst._manifest()["txns"] == {f"stream:{q1.id}": 0,
+                                       f"stream:{q2.id}": 0}
+
+
+def test_sink_skips_a_batch_replayed_after_a_lost_commit(registered,
+                                                         tmp_path):
+    """A checkpoint that lost ``commits/0`` re-runs batch 0 on restart:
+    the sink finds the batch's txn mark, commits nothing and deletes
+    the files the replay wrote."""
+    spark = registered
+    src_path, dst_path = _tables(spark, tmp_path)
+    ck = str(tmp_path / "ck")
+    q = _sink_pass(spark, src_path, dst_path, ck)
+    dst = MuraTable.load(spark, dst_path)
+    version, rows = dst._latest(), sorted(dst.read().collect())
+    assert len(rows) == 2
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ck, "commits", name))
+    _sink_pass(spark, src_path, dst_path, ck)
+    m = dst._manifest()
+    assert m["version"] == version
+    assert sorted(dst.read().collect()) == rows
+    assert m["txns"] == {f"stream:{q.id}": 0}
+    landed = {os.path.relpath(f, dst_path) for f in glob.glob(
+        os.path.join(dst_path, "_data", "stream-*", "**", "*.parquet"),
+        recursive=True)}
+    assert landed <= set(m["files"])
+
+
+def test_sink_refuses_a_checkpoint_it_cannot_see(registered, tmp_path):
+    """A checkpoint set only in the session conf never reaches the
+    sink, so it refuses to start rather than run without its guard."""
+    spark = registered
+    src_path, dst_path = _tables(spark, tmp_path)
+    key = "spark.sql.streaming.checkpointLocation"
+    spark.conf.set(key, str(tmp_path / "ck"))
+    try:
+        with pytest.raises(Exception, match="checkpointLocation"):
+            (spark.readStream.format("mura_table")
+             .option("path", src_path).load()
+             .writeStream.format("mura_table")
+             .option("path", dst_path)
+             .trigger(availableNow=True).start().awaitTermination(60))
+    finally:
+        spark.conf.unset(key)
+    assert MuraTable.load(spark, dst_path)._latest() == 1
