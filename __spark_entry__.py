@@ -24,14 +24,15 @@ if _REPO not in sys.path:
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Pin the engine's session confs (``session.DEFAULT_CONF``) where
-    they can be set at runtime."""
+    """Pin the engine's SQL confs (the ``spark.sql.*`` keys of
+    ``session.DEFAULT_CONF``) on a session this module did not build.
+    The rest are core confs that Spark fixes when the context starts, so
+    such a session keeps its own, e.g. ``pyspark.daemon`` as its Python
+    worker daemon."""
     from mura_spark.session import DEFAULT_CONF
     for k, v in DEFAULT_CONF.items():
-        try:
+        if k.startswith("spark.sql."):
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in this session — engine copes
     return spark
 
 

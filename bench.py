@@ -12,8 +12,9 @@ Prints ONE JSON line:
 Each query is forced end-to-end with the noop sink (full computation, no
 driver-side materialization cost). Timings are per-query wall clock after a
 shared session warm-up query. Every run also records, under ``"jobs"``, the
-Spark jobs each query launched (full runs keep them in BENCH_FULL.json
-only, to keep the printed line short).
+Spark jobs each query launched and, under ``"tasks_failed"``, the failed
+task attempts in them (full runs keep both in BENCH_FULL.json only, to keep
+the printed line short).
 
 Scaling note for the driver's low-core probe: the session master is
 ``local[$SPARK_GRAFT_CPUS]`` (mura_spark/session.py reads the env var into
@@ -90,12 +91,27 @@ def _jobs_submitted(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
+def _tasks_failed(spark, j0: int, j1: int) -> int:
+    """Failed task attempts in jobs ``j0 .. j1 - 1``: the status
+    tracker's count over their stages, each stage once (at its latest
+    attempt). The bench logs at FATAL, so a retried task would otherwise
+    show only as a slower time."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = {s for j in range(j0, j1)
+              if (job := tracker.getJobInfo(j)) for s in job.stageIds}
+    return sum(stage.numFailedTasks for s in stages
+               if (stage := tracker.getStageInfo(s)))
+
+
 def time_queries(spark, sf_dir: str, names: list[str]
-                 ) -> tuple[dict[str, float], dict[str, int]]:
-    """Seconds (min of N_ROUNDS) and Spark jobs (of the kept run) per
-    query, each forced end-to-end through the noop sink."""
+                 ) -> tuple[dict[str, float], dict[str, int],
+                            dict[str, int]]:
+    """Seconds (min of N_ROUNDS), and Spark jobs and failed task
+    attempts (of the kept run) per query, each forced end-to-end
+    through the noop sink."""
     timings: dict[str, float] = {}
     jobs: dict[str, int] = {}
+    tasks_failed: dict[str, int] = {}
     for _ in range(N_ROUNDS):
         for name in names:
             fn = SPARK_QUERIES[name]
@@ -103,9 +119,11 @@ def time_queries(spark, sf_dir: str, names: list[str]
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             el = round(time.time() - t0, 3)
             if name not in timings or el < timings[name]:
+                j1 = _jobs_submitted(spark)
                 timings[name] = el
-                jobs[name] = _jobs_submitted(spark) - j0
-    return timings, jobs
+                jobs[name] = j1 - j0
+                tasks_failed[name] = _tasks_failed(spark, j0, j1)
+    return timings, jobs, tasks_failed
 
 
 def main(names: list[str]) -> None:
@@ -121,13 +139,16 @@ def main(names: list[str]) -> None:
     # ERROR level their expected task aborts print full stacks into the
     # bench ledger, masquerading as failures. A *real* failure still
     # surfaces loudly: the query raises into Python, the bench crashes
-    # with a traceback, and the driver records rc != 0.
+    # with a traceback, and the driver records rc != 0. A task that fails
+    # and then succeeds on retry logs nothing here; "tasks_failed"
+    # counts it.
     spark.sparkContext.setLogLevel("FATAL")
 
     # warm the JVM/codegen paths once (not timed)
     SPARK_QUERIES["scan_region"](spark, sf_dir).count()
 
-    timings, jobs = time_queries(spark, sf_dir, names or BENCH_QUERIES)
+    timings, jobs, tasks_failed = time_queries(
+        spark, sf_dir, names or BENCH_QUERIES)
 
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
@@ -139,6 +160,7 @@ def main(names: list[str]) -> None:
         "unit": "sec",
         "queries": timings,
         "jobs": jobs,
+        "tasks_failed": tasks_failed,
         "sf": sf,
         # prove the env contract from the output alone: the resolved
         # master (built from $SPARK_GRAFT_CPUS in session.get_spark) and
@@ -161,7 +183,7 @@ def main(names: list[str]) -> None:
     with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     compact = dict(out)
-    del compact["jobs"]
+    del compact["jobs"], compact["tasks_failed"]
     if r1_ref:
         compact["queries"] = {q: t for q, t in timings.items()
                               if q in r1_ref}

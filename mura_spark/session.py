@@ -57,6 +57,11 @@ DEFAULT_CONF: dict[str, str] = {
     # readers, and pyarrow/DuckDB read them back with the same type.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Columnar shuffle/exec stay default; AQE handles partition sizing.
+    # Executor Python tasks fork from the engine's worker daemon
+    # (worker_daemon.py): pyspark.daemon whose zip importers re-read
+    # pyspark.zip and the Spark jar only when those change, not before
+    # every task. A core conf: it holds only in sessions get_spark starts.
+    "spark.python.daemon.module": "mura_spark.worker_daemon",
 }
 
 
